@@ -331,9 +331,12 @@ object Bench {
         val r1 = passVals(0)(n); val r2 = passVals(1)(n)
         "\"" + n + f"""\":[$r1%.4f,$r2%.4f,${r2 / r1}%.4f]"""
       }.mkString("{", ",", "}")
-    val errJson = errors
-      .map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
-      .mkString("{", ",", "}")
+    // escaped and capped: a multi-line or quoted Spark message must not
+    // break the one-line JSON a failing run still has to print
+    val errJson = errors.map { case (k, v) =>
+        graft.core.Fs.jsonString(k) + ":" +
+          graft.core.Fs.jsonString(v.take(120))
+      }.mkString("{", ",", "}")
     val total = results.map(_._2).sum
     // stream/batch split totals: the two families drift under DIFFERENT
     // host modes (CPU/frequency vs FS/hypervisor latency), so a

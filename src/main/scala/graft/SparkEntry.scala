@@ -43,9 +43,12 @@ object SparkEntry {
     val events = Seq("q_stream_sessionize", "q_stream_sessionize_native",
       "q_stream_windowed", "q_stream_windowed_quantiles",
       "q_stream_windowed_quantiles_append", "q_stream_attribution",
-      "q_stream_attribution_hourly").map(_ -> "events.parquet")
+      "q_stream_attribution_hourly", "q_stream_quantiles",
+      "q_stream_sketch_audience").map(_ -> "events.parquet")
     val embeddings = Seq("q_stream_semantic").map(_ -> "embeddings.parquet")
-    (events ++ embeddings).toMap // every other q_stream drains documents
+    // the rest drain documents (or a scratch rewrite of it, or their own
+    // history db — see above)
+    (events ++ embeddings).toMap
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = {

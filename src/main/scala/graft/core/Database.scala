@@ -48,9 +48,7 @@ class Database(val spark: SparkSession, val calcDir: String,
   /** Single-writer lock file. The database supports ONE writer at a time
     * (same contract as the reference's pickle database); the lock turns a
     * silent race into a loud error. */
-  val lockPath: String = s"$dbPath.__lock"
-
-  private val oldPath: String = s"$dbPath.__old"
+  val lockPath: String = Fold.lockPath(dbPath)
 
   def exists: Boolean = {
     recover()
@@ -68,19 +66,17 @@ class Database(val spark: SparkSession, val calcDir: String,
     * between the writer's two renames would make the writer's final
     * rename land on an occupied path. After a CRASH the lock is stale by
     * definition — delete it (per [[withWriteLock]]'s error message) and
-    * the next read restores the parked state. */
-  def recover(): Unit = {
-    if (Fs.exists(oldPath) && !Fs.exists(lockPath)) {
-      if (!Fs.exists(dbPath)) Fs.rename(oldPath, dbPath)
-      else Fs.delete(oldPath)
-    }
-  }
+    * the next read or write restores the parked state. */
+  def recover(): Unit =
+    if (!Fs.exists(lockPath)) Fold.repairParked(dbPath)
 
   /** Run `f` holding the database's single-writer lock. Concurrent
     * mutators fail fast with the holder's identity instead of corrupting
     * the store. A crashed holder leaves a stale lock: remove `lockPath`
-    * manually after confirming the writer is gone (recovery of a crashed
-    * SWAP itself is automatic via [[recover]]).
+    * manually after confirming the writer is gone. The first acquisition
+    * repairs a crashed SWAP's parked state before `f` reads anything —
+    * the caller's own lock suppresses [[recover]], so without it a
+    * writer would see the parked db as empty and commit over it.
     *
     * Reentrant WITHIN one Database handle FOR THE OWNING THREAD only:
     * [[graft.core.Study]] holds the lock across its whole disk-backed
@@ -109,23 +105,21 @@ class Database(val spark: SparkSession, val calcDir: String,
     // write intent proven: this handle owns the store — its stats tier
     // may now write (lazily created under the existing db dir)
     graft.ops.Stats.registerStore(dbPath, s"$dbPath/_graft_stats")
-    try f finally { lockOwner.set(-1L); Fs.delete(lockPath) }
+    try { Fold.repairParked(dbPath); f }
+    finally { lockOwner.set(-1L); Fs.delete(lockPath) }
   }
 
   /** Thread id of the in-process lock holder, -1 when unheld. */
   private val lockOwner = new java.util.concurrent.atomic.AtomicLong(-1L)
 
-  /** Swap a fully-written replacement directory into place. Never
-    * delete-then-rename on the live path: the previous state is parked at
-    * `.__old` until the new data is in place, so every crash point leaves
-    * either the old or the new complete state recoverable ([[recover]]).
-    */
-  private[core] def swapIn(tmp: String): Unit = {
-    recover()
-    Fs.delete(oldPath)
-    if (Fs.exists(dbPath)) Fs.rename(dbPath, oldPath)
-    Fs.rename(tmp, dbPath)
-    Fs.delete(oldPath)
+  /** Rewrite the database: `build` writes the replacement into a fresh
+    * staging dir, which [[Fold.commit]] swaps into place — every crash
+    * point leaves the old or the new complete state recoverable
+    * ([[recover]]). Call under [[withWriteLock]]. */
+  private[core] def swapIn(build: String => Unit): Unit = {
+    val tmp = Fold.stage(dbPath)
+    build(tmp)
+    Fold.commit(dbPath, tmp)
   }
 
   /** Read the database; schemas of all appended runs are unioned
@@ -354,31 +348,29 @@ class Database(val spark: SparkSession, val calcDir: String,
   def optimizeLayout(numFiles: Int, zCols: Seq[String] = Seq.empty,
                      bits: Int = 12): Unit = {
     require(numFiles >= 1, "numFiles must be positive")
-    if (!exists) return
-    val df = read()
-    val key: Column =
-      if (zCols.isEmpty) xxhash64(col("_pset_id"))
-      else if (zCols.size == 1) col(zCols.head).cast("long")
-      else {
-        val r = df.select(zCols.flatMap(c =>
-          Seq(min(col(c).cast("long")), max(col(c).cast("long")))): _*)
-          .head()
-        val grids = zCols.zipWithIndex.map { case (c, i) =>
-          graft.ops.Layout.gridCoord(col(c).cast("long"),
-            r.getLong(2 * i), r.getLong(2 * i + 1), bits)
-        }
-        graft.ops.Layout.zValue(grids, bits)
-      }
-    val clustered = df.withColumn("__graft_ck", key)
-      .repartitionByRange(numFiles, col("_run_id"), col("__graft_ck"))
-      .sortWithinPartitions(col("_run_id"), col("__graft_ck"))
-      .drop("__graft_ck")
     withWriteLock {
-      val tmp = s"$dbPath.__layout_tmp"
-      Fs.delete(tmp)
-      clustered.write.mode("overwrite").partitionBy("_run_id").parquet(tmp)
-      swapIn(tmp)
-      rebuildSkipManifestUnlocked()
+      if (exists) {
+        val df = read()
+        val key: Column =
+          if (zCols.isEmpty) xxhash64(col("_pset_id"))
+          else if (zCols.size == 1) col(zCols.head).cast("long")
+          else {
+            val r = df.select(zCols.flatMap(c =>
+              Seq(min(col(c).cast("long")), max(col(c).cast("long")))): _*)
+              .head()
+            val grids = zCols.zipWithIndex.map { case (c, i) =>
+              graft.ops.Layout.gridCoord(col(c).cast("long"),
+                r.getLong(2 * i), r.getLong(2 * i + 1), bits)
+            }
+            graft.ops.Layout.zValue(grids, bits)
+          }
+        swapIn(df.withColumn("__graft_ck", key)
+          .repartitionByRange(numFiles, col("_run_id"), col("__graft_ck"))
+          .sortWithinPartitions(col("_run_id"), col("__graft_ck"))
+          .drop("__graft_ck")
+          .write.mode("overwrite").partitionBy("_run_id").parquet(_))
+        rebuildSkipManifestUnlocked()
+      }
     }
   }
 
@@ -573,22 +565,17 @@ class Database(val spark: SparkSession, val calcDir: String,
     * columns appear as nulls via mergeSchema; shared columns whose type
     * widened are cast. */
   def rehashWith(extraPsetCols: Map[String, DataType],
-                 casts: Map[String, DataType]): Unit = {
+                 casts: Map[String, DataType]): Unit = withWriteLock {
     var df = read()
     casts.foreach { case (c, t) => df = df.withColumn(c, col(c).cast(t)) }
     extraPsetCols.foreach { case (c, t) =>
       if (!df.columns.contains(c)) df = df.withColumn(c, lit(null).cast(t))
     }
-    val rehashed = df.withColumn("_pset_hash", PsetHash.expr(df.columns.toSeq))
-    withWriteLock {
-      val hadManifest = Fs.exists(manifestDir)
-      val tmp = s"$dbPath.__rewrite_tmp"
-      Fs.delete(tmp)
-      rehashed.write.mode("overwrite").partitionBy("_run_id").parquet(tmp)
-      swapIn(tmp)
-      // the rewrite produced fresh files; a kept manifest must follow
-      if (hadManifest) rebuildSkipManifestUnlocked()
-    }
+    val hadManifest = Fs.exists(manifestDir)
+    swapIn(df.withColumn("_pset_hash", PsetHash.expr(df.columns.toSeq))
+      .write.mode("overwrite").partitionBy("_run_id").parquet(_))
+    // the rewrite produced fresh files; a kept manifest must follow
+    if (hadManifest) rebuildSkipManifestUnlocked()
   }
 
   /** Backup the whole calc dir to `calc.bak_<stamp>_run_id_<id>` before a
@@ -607,7 +594,7 @@ class Database(val spark: SparkSession, val calcDir: String,
     // the backup may have been taken under the run pipeline's live
     // write lock — a copied lock file would block writes on a restored
     // backup with a stale-holder message; drop it from the copy
-    Fs.delete(s"$dst/$basename.__lock")
+    Fs.delete(Fold.lockPath(s"$dst/$basename"))
     Some(dst)
   }
 
@@ -735,17 +722,13 @@ class Database(val spark: SparkSession, val calcDir: String,
     * file-listing and task-launch overhead dominates) down to ~one file
     * per `_run_id` partition. Atomic: rewrite to a temp dir, then swap.
     * Values, schema, and partitioning are unchanged. */
-  def compact(numPartitions: Int = 0): Unit = {
-    if (!exists) return
-    val runs = read().select("_run_id").distinct().count().toInt
-    val n = if (numPartitions > 0) numPartitions else math.max(1, runs)
-    val df = read().repartition(n, col("_run_id"))
-    withWriteLock {
+  def compact(numPartitions: Int = 0): Unit = withWriteLock {
+    if (exists) {
+      val runs = read().select("_run_id").distinct().count().toInt
+      val n = if (numPartitions > 0) numPartitions else math.max(1, runs)
       val hadManifest = Fs.exists(manifestDir)
-      val tmp = s"$dbPath.__compact_tmp"
-      Fs.delete(tmp)
-      df.write.mode("overwrite").partitionBy("_run_id").parquet(tmp)
-      swapIn(tmp)
+      swapIn(read().repartition(n, col("_run_id"))
+        .write.mode("overwrite").partitionBy("_run_id").parquet(_))
       if (hadManifest) rebuildSkipManifestUnlocked()
     }
   }

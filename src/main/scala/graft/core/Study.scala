@@ -288,13 +288,9 @@ final class Study(val spark: SparkSession, val cfg: StudyConfig) {
               case Some(old) => old.unionByName(newDF, allowMissingColumns = true)
               case None => newDF
             }
-            db.withWriteLock {
-              val tmp = s"${db.dbPath}.__interactive_tmp"
-              Fs.delete(tmp)
-              union.write.mode("overwrite").partitionBy("_run_id").parquet(tmp)
-              // crash-safe swap (never delete-then-rename the live path)
-              db.swapIn(tmp)
-            }
+            // crash-safe swap (never delete-then-rename the live path)
+            db.withWriteLock(db.swapIn(
+              union.write.mode("overwrite").partitionBy("_run_id").parquet(_)))
             RunOutput(db.read(), runId, keptIdx.size.toLong)
         }
       } else {

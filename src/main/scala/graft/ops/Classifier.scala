@@ -912,54 +912,29 @@ object Classifier {
                         idxCol: String, labelCol: String, dim: Int,
                         iters: Int = 50, lr: Double = 1.0,
                         l2: Double = 0.0, newton: Boolean = false,
-                        batchId: Option[String] = None): LogisticModel = {
-    import graft.core.Fs
-    // crash repair first (it fails fast on a LIVE lock, so it must run
-    // before we create ours), then the lock brackets the WHOLE
-    // read-train-swap cycle (not just the swap): a second writer that
-    // raced the training window would otherwise fold from a stale
-    // model and silently drop the first writer's update and its ledger
-    // entry on commit
-    Dedup.recoverIndex(modelPath)
-    val lock = s"$modelPath.__lock"
-    if (!Fs.createExclusive(lock, s"pid=${ProcessHandle.current().pid()}"))
-      throw new IllegalStateException(
-        s"classifier model $modelPath is being updated by another " +
-          s"writer; if that process crashed, delete $lock and re-run")
-    try {
-      val applied = IncrementalLedger.appliedIds(modelPath)
-      val current = loadModel(modelPath)
-      if (batchId.exists(applied.contains))
-        return current.getOrElse(LogisticModel(new Array[Double](dim), 0.0))
-      if (batch.isEmpty)
-        return current.getOrElse(LogisticModel(new Array[Double](dim), 0.0))
-      // `newton = true` folds warm-started IRLS steps instead of GD —
-      // ~5 steps reach what hundreds of GD steps walk toward, at one job
-      // each, for dims small enough to afford the O(parts·d²) Hessian
-      // partials (online Newton). The indices densify to per-bin counts
-      // in-plan; past ~1k bins stay on GD.
-      val next =
-        if (newton) {
-          val dense = batch.withColumn("__f",
-            transform(sequence(lit(0), lit(dim - 1)), i =>
-              size(filter(col(idxCol), j => j === i)).cast("double")))
-          trainLogistic(dense, "__f", labelCol, dim, iters,
-            l2 = math.max(l2, 1e-2), init = current)
-        } else trainLogisticSparse(batch, idxCol, labelCol, dim, iters,
-          lr, l2, init = current)
-      val tmp = s"$modelPath.__compact_tmp"
-      Fs.delete(tmp)
-      Fs.mkdirs(tmp)
-      writeModelInto(tmp, next)
-      IncrementalLedger.writeInto(tmp, applied, batchId)
-      val old = s"$modelPath.__old"
-      Fs.delete(old)
-      if (Fs.exists(modelPath)) Fs.rename(modelPath, old)
-      Fs.rename(tmp, modelPath)
-      Fs.delete(old)
-      next
-    } finally Fs.delete(lock)
-  }
+                        batchId: Option[String] = None): LogisticModel =
+    graft.core.Fold.swap(modelPath, batchId) { tmp =>
+      Option.when(!batch.isEmpty) {
+        val current = loadModel(modelPath)
+        // `newton = true` folds warm-started IRLS steps instead of GD —
+        // ~5 steps reach what hundreds of GD steps walk toward, at one
+        // job each, for dims small enough to afford the O(parts·d²)
+        // Hessian partials (online Newton). The indices densify to
+        // per-bin counts in-plan; past ~1k bins stay on GD.
+        val next =
+          if (newton) {
+            val dense = batch.withColumn("__f",
+              transform(sequence(lit(0), lit(dim - 1)), i =>
+                size(filter(col(idxCol), j => j === i)).cast("double")))
+            trainLogistic(dense, "__f", labelCol, dim, iters,
+              l2 = math.max(l2, 1e-2), init = current)
+          } else trainLogisticSparse(batch, idxCol, labelCol, dim, iters,
+            lr, l2, init = current)
+        writeModelInto(tmp, next)
+        next
+      }
+    }.orElse(loadModel(modelPath))
+      .getOrElse(LogisticModel(new Array[Double](dim), 0.0))
 
   /** Online (mini-batch) MULTICLASS training: fold one labeled batch
     * into the persisted [[SoftmaxModel]] at `modelPath` — the
@@ -969,10 +944,9 @@ object Classifier {
     * drifting domain mix at ingest: `iters` warm-started GD steps over
     * the batch's sparse index features, then an atomic swap-commit of
     * model + applied-batch ledger. Same guarantees as the binary
-    * path: crash repair first ([[Dedup.recoverIndex]] fails fast on a
-    * live lock, so it runs before ours), the lock brackets the WHOLE
-    * read-train-swap cycle (serialized-but-overlapping writers cannot
-    * lose an update), a re-delivered `batchId` is a no-op returning
+    * path ([[graft.core.Fold.swap]]): the lock brackets the WHOLE
+    * repair-read-train-swap cycle (serialized-but-overlapping writers
+    * cannot lose an update), a re-delivered `batchId` is a no-op returning
     * the committed model bit-identically, and empty batches
     * short-circuit. A fresh path with no committed model starts from
     * zero weights — seed it with [[saveSoftmax]] (an offline
@@ -983,39 +957,22 @@ object Classifier {
                           numClasses: Int, iters: Int = 50,
                           lr: Double = 1.0, l2: Double = 0.0,
                           batchId: Option[String] = None): SoftmaxModel = {
-    import graft.core.Fs
-    def zero = SoftmaxModel(
-      Array.fill(numClasses - 1)(new Array[Double](dim + 1)), numClasses)
-    Dedup.recoverIndex(modelPath)
-    val lock = s"$modelPath.__lock"
-    if (!Fs.createExclusive(lock, s"pid=${ProcessHandle.current().pid()}"))
-      throw new IllegalStateException(
-        s"softmax model $modelPath is being updated by another " +
-          s"writer; if that process crashed, delete $lock and re-run")
-    try {
-      val applied = IncrementalLedger.appliedIds(modelPath)
-      val current = loadSoftmax(modelPath)
-      current.foreach(m => require(
-        m.dim == dim && m.numClasses == numClasses,
+    def load() = loadSoftmax(modelPath).map { m =>
+      require(m.dim == dim && m.numClasses == numClasses,
         s"persisted model shape (${m.dim}, ${m.numClasses}) != " +
-          s"($dim, $numClasses)"))
-      if (batchId.exists(applied.contains))
-        return current.getOrElse(zero)
-      if (batch.isEmpty)
-        return current.getOrElse(zero)
-      val next = trainSoftmaxSparse(batch, idxCol, labelCol, dim,
-        numClasses, iters, lr, l2, init = current)
-      val tmp = s"$modelPath.__compact_tmp"
-      Fs.delete(tmp)
-      saveSoftmax(next, tmp)
-      IncrementalLedger.writeInto(tmp, applied, batchId)
-      val old = s"$modelPath.__old"
-      Fs.delete(old)
-      if (Fs.exists(modelPath)) Fs.rename(modelPath, old)
-      Fs.rename(tmp, modelPath)
-      Fs.delete(old)
-      next
-    } finally Fs.delete(lock)
+          s"($dim, $numClasses)")
+      m
+    }
+    graft.core.Fold.swap(modelPath, batchId) { tmp =>
+      val current = load()
+      Option.when(!batch.isEmpty) {
+        val next = trainSoftmaxSparse(batch, idxCol, labelCol, dim,
+          numClasses, iters, lr, l2, init = current)
+        saveSoftmax(next, tmp)
+        next
+      }
+    }.orElse(load()).getOrElse(SoftmaxModel(
+      Array.fill(numClasses - 1)(new Array[Double](dim + 1)), numClasses))
   }
 
   // ---------------------------------------------------------------- //

@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.shim
 import org.apache.spark.sql.types.{DataType, LongType, StringType, ArrayType}
+import graft.core.Fold
 import graft.core.Pin.PinOps
 
 /** Deduplication operators for training-data pipelines, each designed as a
@@ -118,7 +119,7 @@ object Dedup {
                             idCol: String = "doc_id",
                             sinkFirst: DataFrame => Unit = _ => ()): DataFrame = {
     val spark = batch.sparkSession
-    recoverIndex(indexPath)
+    Fold.recoverIndex(indexPath)
     val withFp = batch.withColumn("__fp", Text.fingerprint(col(textCol)))
     val existing: Option[DataFrame] =
       if (graft.core.Fs.exists(indexPath) &&
@@ -680,7 +681,7 @@ object Dedup {
                               rereadFrom: Option[DataFrame] = None,
                               sinkFirst: DataFrame => Unit = _ => ()): DataFrame = {
     val spark = batch.sparkSession
-    recoverIndex(indexPath)
+    Fold.recoverIndex(indexPath)
     // rereadFrom IMPLIES exact candidate verification (it exists for
     // nothing else); stored-sh is exactVerify=true WITHOUT a corpus
     // handle — the reread and estimator modes keep the index
@@ -844,7 +845,9 @@ object Dedup {
     // instead of re-shingling candidate text (r16, VERDICT r15 item 1;
     // decisions equal modulo the mode's existing 2^-64 collision
     // premise — the cross-batch verify has always used these sets)
-    val inBatchPairs =
+    // the first actions over `fresh`: where the fused missing-id check
+    // fires (rereadFrom mode)
+    val inBatchPairs = missingIdAsJobFailure {
       if (storeSh)
         verifyJaccardFromSets(
           sig.join(fresh.select(col(idCol).as("id")), Seq("id"),
@@ -853,7 +856,9 @@ object Dedup {
       else
         minhashLshPairsFromSig(fresh, freshSig, n, numHashes, bands,
           threshold, textCol, idCol)
-    val kept = keepClusterCanonical(fresh, inBatchPairs, idCol).pinned()
+    }
+    val kept = missingIdAsJobFailure(
+      keepClusterCanonical(fresh, inBatchPairs, idCol).pinned())
     // durable output BEFORE the index append (the incrementalExactDedup
     // sinkFirst contract): once these signatures are indexed, a retried
     // batch keeps nothing — output-first makes the crash failure mode
@@ -869,6 +874,19 @@ object Dedup {
     kept
   }
 
+  /** The fused missing-id check's `raise_error` fires in whichever
+    * stage reaches a lost candidate first: Spark reports a failed job
+    * as a SparkException but rethrows an adaptive stage's failure bare,
+    * so the same broken corpus would surface as either type from run to
+    * run. Callers get one: the bare user-raised error wrapped like the
+    * job failure (message and cause kept). */
+  private def missingIdAsJobFailure[A](f: => A): A =
+    try f catch {
+      case e: RuntimeException with org.apache.spark.SparkThrowable
+          if e.getCondition == "USER_RAISED_EXCEPTION" =>
+        throw new org.apache.spark.SparkException(e.getMessage, e)
+    }
+
   /** Compact an incremental dedup index ([[incrementalExactDedup]] /
     * [[incrementalMinhashDedup]]) — the [[graft.core.Database.compact]]
     * discipline applied to the engine's own metadata. Append-only must
@@ -876,10 +894,10 @@ object Dedup {
     * a thousand-batch ingest otherwise makes every band-join scan list
     * and open a thousand file groups. Rewrites the index down to
     * `numPartitions` files (default: sized so each file is ~one scan
-    * partition at `spark.sql.files.maxPartitionBytes`) via a temp dir
-    * and the parked-old two-rename swap, so every crash point leaves
-    * either the old or the new complete index recoverable (the read
-    * paths call [[recoverIndex]]). Values and schema are unchanged —
+    * partition at `spark.sql.files.maxPartitionBytes`) via [[Fold.swap]],
+    * so every crash point leaves either the old or the new complete
+    * index recoverable (the read paths call [[Fold.recoverIndex]]).
+    * Values and schema are unchanged —
     * callers' decisions are provably identical before and after.
     *
     * Single-writer, like the append path itself (two concurrent batches
@@ -889,67 +907,17 @@ object Dedup {
   def compactIndex(spark: SparkSession, indexPath: String,
                    numPartitions: Int = 0): Unit = {
     import graft.core.Fs
-    val lock = s"$indexPath.__lock"
-    // lock FIRST, repair second: repairing while another writer's
-    // compaction is mid-swap would race its renames
-    if (!Fs.createExclusive(lock,
-      s"pid=${ProcessHandle.current().pid()}"))
-      throw new IllegalStateException(
-        s"index $indexPath is being compacted by another writer; if that " +
-          s"process crashed, delete $lock and re-run")
-    try {
-      repairParked(indexPath)
-      if (!Fs.exists(indexPath) || Fs.listNames(indexPath).isEmpty) return
-      val bytes = Fs.fs(indexPath)
-        .getContentSummary(new org.apache.hadoop.fs.Path(indexPath))
-        .getLength
-      val perFile = spark.sessionState.conf.filesMaxPartitionBytes
-      val n = if (numPartitions > 0) numPartitions
-      else math.max(1, math.ceil(bytes.toDouble / perFile).toInt)
-      val tmp = s"$indexPath.__compact_tmp"
-      Fs.delete(tmp)
-      spark.read.parquet(indexPath).repartition(n)
-        .write.mode("overwrite").parquet(tmp)
-      val old = s"$indexPath.__old"
-      Fs.delete(old)
-      Fs.rename(indexPath, old)
-      Fs.rename(tmp, indexPath)
-      Fs.delete(old)
-    } finally Fs.delete(lock)
-  }
-
-  /** Guard + repair for every index READ path. A present compaction
-    * lock means a compaction is running or died mid-swap — either way
-    * the index state is unknowable from here, so reading FAILS FAST
-    * with the remedy instead of silently treating a parked (renamed-
-    * away) index as empty, which would re-keep the entire history's
-    * duplicates and bury the original under a fresh index. With no
-    * lock, a leftover `.__old` is repaired: present WITHOUT the index
-    * means the crash hit between the two renames — restore the parked
-    * state; WITH the index present it is post-swap residue (the new
-    * index is complete, values identical) — drop it. Idempotent. */
-  private[ops] def recoverIndex(indexPath: String): Unit = {
-    import graft.core.Fs
-    val lock = s"$indexPath.__lock"
-    if (Fs.exists(lock))
-      throw new IllegalStateException(
-        s"index $indexPath has a compaction lock at $lock — a " +
-          "compaction is running (wait for it) or crashed (delete the " +
-          "lock; the next read repairs any parked state). Reading " +
-          "through the lock could silently see an empty index and " +
-          "re-keep every historical duplicate")
-    repairParked(indexPath)
-  }
-
-  /** The `.__old` repair itself — called lock-free by [[recoverIndex]]
-    * and lock-HELD by [[compactIndex]] (repairing someone else's
-    * mid-swap state under their lock would race their renames). */
-  private def repairParked(indexPath: String): Unit = {
-    import graft.core.Fs
-    val old = s"$indexPath.__old"
-    if (Fs.exists(old)) {
-      if (!Fs.exists(indexPath)) Fs.rename(old, indexPath)
-      else Fs.delete(old)
+    Fold.swap(indexPath) { tmp =>
+      Option.when(Fs.exists(indexPath) && Fs.listNames(indexPath).nonEmpty) {
+        val bytes = Fs.fs(indexPath)
+          .getContentSummary(new org.apache.hadoop.fs.Path(indexPath))
+          .getLength
+        val perFile = spark.sessionState.conf.filesMaxPartitionBytes
+        val n = if (numPartitions > 0) numPartitions
+        else math.max(1, math.ceil(bytes.toDouble / perFile).toInt)
+        spark.read.parquet(indexPath).repartition(n)
+          .write.mode("overwrite").parquet(tmp)
+      }
     }
   }
 
@@ -992,7 +960,7 @@ object Dedup {
     require(maxHamming >= 0 && maxHamming <= 3,
       s"maxHamming must be in [0, 3] for 4-chunk banding, got $maxHamming")
     val spark = batch.sparkSession
-    recoverIndex(indexPath)
+    Fold.recoverIndex(indexPath)
     val sigExpr = sig.getOrElse(simhash64(Text.tokens(col(textCol))))
     // pin only the 16-byte (id, f) pairs — checkpointing the full batch
     // (text/payload included) would materialize the whole ingest; the

@@ -286,10 +286,10 @@ object Freq {
 
   /** Fold a batch into the persisted per-group frequent-items table at
     * `indexPath` (the [[Sketch.incrementalSketch]] lifecycle:
-    * null-safe group merge, lock + two-rename swap). Like the KLL
+    * null-safe group merge, [[graft.core.Fold.swap]] commit). Like the KLL
     * fold — and unlike KMV — counts are a MULTISET, so re-delivered
     * content double-counts. Pass `batchId` to make re-delivery a
-    * no-op: applied ids ride the [[IncrementalLedger]] file inside the
+    * no-op: applied ids ride the [[graft.core.Fold]] ledger inside the
     * swapped directory (ledger and data commit in one rename —
     * exactly-once folds under at-least-once delivery, the
     * [[Quantile.incrementalQuantileSketch]] contract). Without ids,
@@ -297,42 +297,7 @@ object Freq {
   def incrementalFreqSketch(batch: DataFrame, indexPath: String,
                             groupCol: String, item: Column,
                             k: Int = 4096,
-                            batchId: Option[String] = None): DataFrame = {
-    import graft.core.Fs
-    val spark = batch.sparkSession
-    Dedup.recoverIndex(indexPath)
-    val applied = IncrementalLedger.appliedIds(indexPath)
-    if (batchId.exists(applied.contains))
-      return spark.read.parquet(indexPath)
-    val incoming = batch.groupBy(col(groupCol).cast("string").as("g"))
-      .agg(mgAgg(item, k).as("sk"))
-    val merged =
-      if (Fs.exists(indexPath) && Fs.listNames(indexPath).nonEmpty) {
-        val current = spark.read.parquet(indexPath)
-        current.select(col("g").as("__ga"), col("sk").as("__a"))
-          .join(incoming.select(col("g").as("__gb"), col("sk").as("__b")),
-            col("__ga") <=> col("__gb"), "full_outer")
-          .select(coalesce(col("__ga"), col("__gb")).as("g"),
-            when(col("__a").isNull, col("__b"))
-              .when(col("__b").isNull, col("__a"))
-              .otherwise(mergeFreqSketch(col("__a"), col("__b"))).as("sk"))
-      } else incoming
-    val lock = s"$indexPath.__lock"
-    if (!Fs.createExclusive(lock, s"pid=${ProcessHandle.current().pid()}"))
-      throw new IllegalStateException(
-        s"frequent-items table $indexPath is being updated by another " +
-          s"writer; if that process crashed, delete $lock and re-run")
-    try {
-      val tmp = s"$indexPath.__compact_tmp"
-      Fs.delete(tmp)
-      merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-      IncrementalLedger.writeInto(tmp, applied, batchId)
-      val old = s"$indexPath.__old"
-      Fs.delete(old)
-      if (Fs.exists(indexPath)) Fs.rename(indexPath, old)
-      Fs.rename(tmp, indexPath)
-      Fs.delete(old)
-    } finally Fs.delete(lock)
-    spark.read.parquet(indexPath)
-  }
+                            batchId: Option[String] = None): DataFrame =
+    Sketch.foldGroups(batch, indexPath, groupCol, mgAgg(item, k),
+      mergeFreqSketch, batchId)
 }

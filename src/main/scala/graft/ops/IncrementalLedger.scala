@@ -2,41 +2,12 @@ package graft.ops
 
 import graft.core.Fs
 
-/** Applied-batch ledger for the NON-idempotent incremental sketch folds
-  * ([[Quantile.incrementalQuantileSketch]], [[Freq
-  * .incrementalFreqSketch]] — multiset state, where a re-delivered
-  * batch would silently double its weight).
-  *
-  * The ledger is one underscore-prefixed text file (`_graft_applied`,
-  * invisible to the parquet reader) INSIDE the sketch-table directory:
-  * the fold writes the updated ledger into the tmp directory alongside
-  * the merged parquet BEFORE the two-rename swap, so data and ledger
-  * commit in one atomic rename. Crash on either side of the swap
-  * leaves a consistent (table, ledger) pair; a foreachBatch replay of a
-  * batch whose id is in the ledger is a no-op — exactly-once folds
-  * under at-least-once delivery, with no reliance on the streaming
-  * checkpoint's commit timing.
-  *
-  * Ledger size is one line per applied batch — bounded by batch count,
-  * not data; read/written driver-side under the fold's writer lock. */
+/** Applied-batch journal for APPEND-shaped indexes (the span-dedup
+  * count table), where a per-batch swap-rewrite would turn a bounded
+  * append into a corpus-sized rewrite. Tables that ARE rewritten per
+  * batch keep their ledger inside the swapped directory instead
+  * ([[graft.core.Fold.swap]] — atomic with the data). */
 private[ops] object IncrementalLedger {
-
-  private def path(tableDir: String): String = s"$tableDir/_graft_applied"
-
-  /** Batch ids already folded into the table at `tableDir` (empty for
-    * a missing table or a pre-ledger table). */
-  def appliedIds(tableDir: String): Set[String] = {
-    val p = path(tableDir)
-    if (!Fs.exists(p)) Set.empty
-    else Fs.readString(p).split("\n").iterator
-      .map(_.trim).filter(_.nonEmpty).toSet
-  }
-
-  // -------------------------------------------------------------- //
-  // append-journal variant, for APPEND-shaped indexes (the span-dedup
-  // count table) where a per-batch swap-rewrite would turn a bounded
-  // append into a corpus-sized rewrite
-  // -------------------------------------------------------------- //
 
   private def journalDir(indexPath: String): String = s"$indexPath.__applied"
 
@@ -62,18 +33,5 @@ private[ops] object IncrementalLedger {
   def journalRecord(indexPath: String, batchId: String): Unit = {
     Fs.mkdirs(journalDir(indexPath))
     Fs.writeString(s"${journalDir(indexPath)}/${enc(batchId)}", "")
-  }
-
-  /** Write `applied` + `batchId` as the ledger of the STAGING directory
-    * `tmpDir` (called after the merged parquet lands there, before the
-    * swap renames it live). An existing ledger is carried forward even
-    * on an id-LESS fold — mixing tracked and untracked callers must
-    * never drop recorded ids. No-op only when there is nothing to
-    * record. */
-  def writeInto(tmpDir: String, applied: Set[String],
-                batchId: Option[String]): Unit = {
-    val ids = applied ++ batchId
-    if (ids.nonEmpty)
-      Fs.writeString(path(tmpDir), ids.toSeq.sorted.mkString("\n"))
   }
 }

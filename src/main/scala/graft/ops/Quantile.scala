@@ -331,13 +331,13 @@ object Quantile {
 
   /** Fold a batch into the persisted per-group quantile-sketch table
     * at `indexPath` (`(g string, sk binary)`, the [[Sketch
-    * .incrementalSketch]] lifecycle: null-safe group merge, lock +
-    * two-rename swap). UNLIKE the KMV fold this one is NOT idempotent
-    * on re-delivered content — values are a multiset, so a replayed
-    * batch doubles its weight.
+    * .incrementalSketch]] lifecycle: null-safe group merge,
+    * [[graft.core.Fold.swap]] commit). UNLIKE the KMV fold this one is
+    * NOT idempotent on re-delivered content — values are a multiset, so
+    * a replayed batch doubles its weight.
     *
-    * Pass `batchId` to make re-delivery a NO-OP: applied ids ride an
-    * [[IncrementalLedger]] file INSIDE the swapped table directory, so
+    * Pass `batchId` to make re-delivery a NO-OP: applied ids ride the
+    * [[graft.core.Fold]] ledger INSIDE the swapped table directory, so
     * ledger and data commit in the same atomic rename — a crash at any
     * point leaves either (old table, old ledger) or (new table, new
     * ledger), never a half state. With ids the fold is exactly-once
@@ -351,43 +351,7 @@ object Quantile {
                                 groupCol: String, value: Column,
                                 k: Int = 4096,
                                 batchId: Option[String] = None)
-      : DataFrame = {
-    import graft.core.Fs
-    val spark = batch.sparkSession
-    Dedup.recoverIndex(indexPath)
-    val applied = IncrementalLedger.appliedIds(indexPath)
-    if (batchId.exists(applied.contains))
-      return spark.read.parquet(indexPath)
-    val incoming = batch.groupBy(col(groupCol).cast("string").as("g"))
-      .agg(kllAgg(value, k).as("sk"))
-    val merged =
-      if (Fs.exists(indexPath) && Fs.listNames(indexPath).nonEmpty) {
-        val current = spark.read.parquet(indexPath)
-        current.select(col("g").as("__ga"), col("sk").as("__a"))
-          .join(incoming.select(col("g").as("__gb"), col("sk").as("__b")),
-            col("__ga") <=> col("__gb"), "full_outer")
-          .select(coalesce(col("__ga"), col("__gb")).as("g"),
-            when(col("__a").isNull, col("__b"))
-              .when(col("__b").isNull, col("__a"))
-              .otherwise(mergeQuantileSketch(col("__a"), col("__b")))
-              .as("sk"))
-      } else incoming
-    val lock = s"$indexPath.__lock"
-    if (!Fs.createExclusive(lock, s"pid=${ProcessHandle.current().pid()}"))
-      throw new IllegalStateException(
-        s"quantile-sketch table $indexPath is being updated by another " +
-          s"writer; if that process crashed, delete $lock and re-run")
-    try {
-      val tmp = s"$indexPath.__compact_tmp"
-      Fs.delete(tmp)
-      merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-      IncrementalLedger.writeInto(tmp, applied, batchId)
-      val old = s"$indexPath.__old"
-      Fs.delete(old)
-      if (Fs.exists(indexPath)) Fs.rename(indexPath, old)
-      Fs.rename(tmp, indexPath)
-      Fs.delete(old)
-    } finally Fs.delete(lock)
-    spark.read.parquet(indexPath)
-  }
+      : DataFrame =
+    Sketch.foldGroups(batch, indexPath, groupCol, kllAgg(value, k),
+      mergeQuantileSketch, batchId)
 }

@@ -388,8 +388,8 @@ object Retrieval {
                         idCol: String = "doc_id",
                         batchId: Option[String] = None,
                         skipDuplicate: Boolean = false): Boolean = {
-    Dedup.recoverIndex(s"$path/postings")
-    Dedup.recoverIndex(s"$path/stats")
+    graft.core.Fold.recoverIndex(s"$path/postings")
+    graft.core.Fold.recoverIndex(s"$path/stats")
     val base = batch.select(col(idCol).as("id"),
       Text.tokens(col(textCol)).as("t"))
       .withColumn("dl", size(col("t")).cast("long"))
@@ -492,8 +492,8 @@ object Retrieval {
     require(queryTerms.nonEmpty, "queryTerms must be non-empty")
     require(queryTerms.distinct == queryTerms, "queryTerms must be distinct")
     require(k > 0, "k must be positive")
-    Dedup.recoverIndex(s"$path/postings")
-    Dedup.recoverIndex(s"$path/stats")
+    graft.core.Fold.recoverIndex(s"$path/postings")
+    graft.core.Fold.recoverIndex(s"$path/stats")
     val post = spark.read.parquet(s"$path/postings")
       .filter(col("term").isin(queryTerms: _*))
     val statsRaw = spark.read.parquet(s"$path/stats")

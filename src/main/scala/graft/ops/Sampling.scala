@@ -762,45 +762,22 @@ object Sampling {
     * reprocessing a failed batch cannot crowd the reservoir; a key
     * re-arriving with a CHANGED weight is a new candidate by design
     * (the caller owns re-keying semantics). The reservoir is rewritten
-    * per batch via the parked-old two-rename swap under a single-writer
-    * lock ([[Dedup.compactIndex]]'s lifecycle), and every read path
-    * fails fast on a stale lock. */
+    * per batch via [[graft.core.Fold.swap]]: a second writer — or a
+    * stale lock — fails fast, and the merge reads the reservoir under
+    * the lock. */
   def incrementalPrioritySample(batch: DataFrame, indexPath: String,
                                 key: Column, weight: Column,
                                 n: Int): DataFrame = {
     require(n >= 1, s"sample size $n")
-    import graft.core.Fs
-    val spark = batch.sparkSession
-    Dedup.recoverIndex(indexPath)
     val incoming = batch.filter(weight.isNotNull && weight > lit(0.0))
       .select(key.cast("string").as("key"), weight.cast("double").as("w"))
       .withColumn("__prio", priorityOf(col("key"), col("w")))
-    val current =
-      if (Fs.exists(indexPath) && Fs.listNames(indexPath).nonEmpty)
-        spark.read.parquet(indexPath)
-      else incoming.limit(0)
-    val merged = current.unionByName(incoming)
-      .dropDuplicates("key", "__prio")
-      .orderBy(col("__prio").desc, col("key")).limit(n + 1)
-    val lock = s"$indexPath.__lock"
-    if (!Fs.createExclusive(lock, s"pid=${ProcessHandle.current().pid()}"))
-      throw new IllegalStateException(
-        s"reservoir $indexPath is being updated by another writer; if " +
-          s"that process crashed, delete $lock and re-run")
-    try {
-      // the tmp write EXECUTES the merge plan (which reads the old
-      // reservoir) before any rename touches it — no lineage hazard
-      val tmp = s"$indexPath.__compact_tmp"
-      Fs.delete(tmp)
-      merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val old = s"$indexPath.__old"
-      Fs.delete(old)
-      if (Fs.exists(indexPath)) Fs.rename(indexPath, old)
-      Fs.rename(tmp, indexPath)
-      Fs.delete(old)
-    } finally Fs.delete(lock)
-    samplePriorityTop(spark.read.parquet(indexPath), col("w"),
-      col("key"), n)
+    val reservoir = graft.core.Fold.swapTable(batch.sparkSession, indexPath) {
+      current => current.fold(incoming)(_.unionByName(incoming))
+        .dropDuplicates("key", "__prio")
+        .orderBy(col("__prio").desc, col("key")).limit(n + 1)
+    }
+    samplePriorityTop(reservoir, col("w"), col("key"), n)
   }
 
   def splitColumn(key: Column, splits: Seq[(String, Double)]): Column = {

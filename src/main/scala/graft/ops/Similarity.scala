@@ -623,57 +623,20 @@ object Similarity {
   def dequantize(q: Column, scale: Column): Column =
     transform(q, x => x.cast("double") * scale)
 
-  /** Plain-L2 deterministic mini k-means for PQ sub-codebooks: seeds
-    * from the `k` lowest-id rows, assignment by minimum L2 (via the
-    * monotone `dot - ||c||^2/2` form), per-dimension means — every
-    * centroid element 1e-6 floor-rounded, but NOT normalized: product
-    * quantization reconstructs subvector magnitudes, so, unlike the
-    * spherical [[kmeansCentroids]], codewords keep theirs. */
-  private[ops] def kmeansCentroidsL2(corpus: DataFrame, k: Int, iters: Int,
-                                     idCol: String, vecCol: String)
-      : Array[Array[Double]] = {
-    def round(c: Array[Double]) = c.map(x => math.floor(x * 1e6) / 1e6)
-    var cents = corpus.orderBy(col(idCol)).limit(k)
-      .select(col(vecCol)).collect()
-      .map(r => round(rowVec(r, 0)))
-    (0 until iters).foreach { _ =>
-      val dims = corpus
-        .select(assignCentroidL2(col(vecCol), cents).as("cid"),
-          posexplode(col(vecCol)).as(Seq("pos", "x")))
-        .groupBy(col("cid"), col("pos"))
-        .agg(avg(col("x").cast("double")).as("m"))
-        .collect()
-      val byCid = dims.groupBy(_.getInt(0))
-      cents = cents.indices.map { i =>
-        byCid.get(i) match {
-          case Some(rows) =>
-            val dim = rows.map(_.getInt(1)).max + 1
-            val c = new Array[Double](dim)
-            rows.foreach(r => c(r.getInt(1)) = r.getDouble(2))
-            round(c)
-          case None => cents(i) // empty cluster keeps its codeword
-        }
-      }.toArray
-    }
-    cents
-  }
-
-  /** ALL `m` PQ sub-codebooks trained in ONE Lloyd loop (r16, guide
-    * §1.2 — fewer driver actions): the per-subspace
-    * [[kmeansCentroidsL2]] runs were independent loops over the SAME
-    * train sample, costing `m × (1 seed collect + iters aggregate
-    * jobs)` of sequential scheduler round trips; every subspace's
-    * assignment and per-dimension mean now computes in one pass per
-    * iteration (`m` structs exploded per row, grouped by (sub, cid,
-    * pos)), so the whole training is `1 + iters` jobs regardless of
-    * `m`. Value-identical to the per-subspace runs: seeds are the same
-    * k lowest-id rows (one collect, sliced client-side — slicing moves
-    * no bits), each subspace's assignment chain is the same expression
-    * over the same slice, and each (sub, cid, pos) group's `avg`
-    * accumulates the same values in the same partition-major order the
-    * separate aggregates used (the subspaces only interleave BETWEEN
-    * groups). OpsSpec's PQ parity/recall pins and the
-    * q_embed_pq/ivfpq oracles hold bit-for-bit. */
+  /** ALL `m` PQ sub-codebooks trained in ONE Lloyd loop: plain-L2
+    * deterministic mini k-means per subspace — seeds from the `k`
+    * lowest-id rows (one collect, sliced client-side), assignment by
+    * minimum L2 (via the monotone `dot - ||c||^2/2` form), per-dimension
+    * means; every centroid element 1e-6 floor-rounded, but NOT
+    * normalized: product quantization reconstructs subvector
+    * magnitudes, so, unlike the spherical [[kmeansCentroids]], codewords
+    * keep theirs. Every subspace's assignment and per-dimension mean
+    * computes in one pass per iteration (`m` structs exploded per row,
+    * grouped by (sub, cid, pos)), so the whole training is `1 + iters`
+    * jobs regardless of `m`; each (sub, cid, pos) group's `avg`
+    * accumulates its values in partition-major order (the subspaces
+    * only interleave BETWEEN groups). OpsSpec's PQ parity/recall pins
+    * and the q_embed_pq/ivfpq oracles hold bit-for-bit. */
   private[ops] def kmeansCentroidsL2Multi(
       corpus: DataFrame, m: Int, sub: Int, k: Int, iters: Int,
       idCol: String, vecCol: String): IndexedSeq[Array[Array[Double]]] = {
@@ -746,8 +709,8 @@ object Similarity {
     * bandwidth cut is the entire point at corpus scale); the LUT rides
     * the broadcast query rows so nothing concentrates on the driver —
     * no maxQueries bound, the [[ivfTopKBatch]] discipline. Codebook
-    * training is `m` runs of [[kmeansCentroidsL2]] on the derived hash
-    * sample (never `iters` full-corpus scans).
+    * training is [[kmeansCentroidsL2Multi]] on the derived hash sample
+    * (never `iters` full-corpus scans).
     *
     * Engine-portable: codewords are 1e-6 floor-rounded, assignment and
     * LUT dots are fixed-order folds, the ADC sum is `m-1` adds in
@@ -931,7 +894,7 @@ object Similarity {
   /** Build a persisted PQ index at `path`: `path/books` holds the
     * frozen per-subspace codebooks (`(s, cid, vals)` rows — tiny),
     * `path/codes` the `m`-int code per vector. Train cost is
-    * [[kmeansCentroidsL2]] per subspace on the derived hash sample;
+    * [[kmeansCentroidsL2Multi]] on the derived hash sample;
     * encode is one corpus pass. The index is the thing ANN serving
     * scans — `m` small ints per vector against `4*dim` float bytes. */
   def buildPqIndex(corpus: DataFrame, path: String, m: Int = 4,
@@ -1182,7 +1145,7 @@ object Similarity {
     require(threshold > -1.0 && threshold <= 1.0,
       "cosine threshold in (-1, 1]")
     val spark = batch.sparkSession
-    Dedup.recoverIndex(indexPath)
+    graft.core.Fold.recoverIndex(indexPath)
     val dProbe =
       if (dim > 0) Array(dim)
       else batch.select(size(col(vecCol)).as("d")).head(1).map(_.getInt(0))

@@ -611,8 +611,8 @@ object Sketch {
     * The count/KLL halves are MULTISET state — a re-delivered batch
     * would double-count — so the fold takes the same optional
     * `batchId` ledger as [[Quantile.incrementalQuantileSketch]]:
-    * applied ids ride `_graft_applied` INSIDE the swapped directory
-    * (atomic with the data), making replays a no-op. The audit's
+    * applied ids ride [[graft.core.Fold]]'s ledger INSIDE the swapped
+    * directory (atomic with the data), making replays a no-op. The audit's
     * column set is fixed at table birth: a widened audit needs a new
     * table (fail-fast on mismatch, never silent partial columns). */
   def incrementalColumnProfile(batch: DataFrame, indexPath: String,
@@ -620,16 +620,10 @@ object Sketch {
                                kDistinct: Int = 4096, kQuant: Int = 4096,
                                batchId: Option[String] = None)
       : DataFrame = {
-    import graft.core.Fs
-    val spark = batch.sparkSession
-    Dedup.recoverIndex(indexPath)
-    val applied = IncrementalLedger.appliedIds(indexPath)
-    if (batchId.exists(applied.contains))
-      return spark.read.parquet(indexPath)
     val incoming = profileState(batch, keyCols, numCols, kDistinct, kQuant)
-    val merged =
-      if (Fs.exists(indexPath) && Fs.listNames(indexPath).nonEmpty) {
-        val current = spark.read.parquet(indexPath)
+    graft.core.Fold.swapTable(batch.sparkSession, indexPath, batchId) {
+      case None => incoming
+      case Some(current) =>
         val have = current.select(col("col_name"))
           .collect().map(_.getString(0)).toSet
         require(have == (keyCols ++ numCols).toSet,
@@ -652,76 +646,51 @@ object Sketch {
             m2(col("__mx"), col("vmax"), (a, b) => greatest(a, b)).as("vmax"),
             m2(col("__kll"), col("kll"),
               Quantile.mergeQuantileSketch).as("kll"))
-      } else incoming
-    val lock = s"$indexPath.__lock"
-    if (!Fs.createExclusive(lock, s"pid=${ProcessHandle.current().pid()}"))
-      throw new IllegalStateException(
-        s"profile table $indexPath is being updated by another writer; " +
-          s"if that process crashed, delete $lock and re-run")
-    try {
-      val tmp = s"$indexPath.__compact_tmp"
-      Fs.delete(tmp)
-      merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-      IncrementalLedger.writeInto(tmp, applied, batchId)
-      val old = s"$indexPath.__old"
-      Fs.delete(old)
-      if (Fs.exists(indexPath)) Fs.rename(indexPath, old)
-      Fs.rename(tmp, indexPath)
-      Fs.delete(old)
-    } finally Fs.delete(lock)
-    spark.read.parquet(indexPath)
+    }
   }
 
   /** Fold a batch into the persisted per-group sketch table at
     * `indexPath` — one `(g string, sk binary)` row per group, rewritten
-    * per batch via the parked-old two-rename swap under a single-writer
-    * lock (the priority-reservoir lifecycle). The fold is the pure-KMV
-    * merge: order-free, associative, and IDEMPOTENT on re-delivered
-    * content (set semantics), so after any batch sequence — including
-    * at-least-once replays — the table is bit-identical to the one-shot
-    * aggregate over the union of everything that arrived. Returns the
-    * updated sketch table. */
+    * per batch via [[graft.core.Fold.swap]] (the priority-reservoir
+    * lifecycle). The fold is the pure-KMV merge: order-free,
+    * associative, and IDEMPOTENT on re-delivered content (set
+    * semantics), so after any batch sequence — including at-least-once
+    * replays — the table is bit-identical to the one-shot aggregate
+    * over the union of everything that arrived. Returns the updated
+    * sketch table. */
   def incrementalSketch(batch: DataFrame, indexPath: String,
                         groupCol: String, key: Column,
-                        k: Int = 4096): DataFrame = {
-    import graft.core.Fs
-    val spark = batch.sparkSession
-    Dedup.recoverIndex(indexPath)
+                        k: Int = 4096): DataFrame =
+    foldGroups(batch, indexPath, groupCol, kmvAgg(key, k), mergeSketch,
+      batchId = None)
+
+  /** The one `(g string, sk binary)` group fold behind the KMV, KLL
+    * ([[Quantile.incrementalQuantileSketch]]) and frequent-items
+    * ([[Freq.incrementalFreqSketch]]) tables: aggregate the batch per
+    * group with `agg`, full-outer merge with the stored rows (`merge`
+    * where both sides hold a group), swap-commit via
+    * [[graft.core.Fold.swapTable]]. Null-SAFE group equality (<=>): a
+    * null group key must MERGE with the stored null-group row, not miss
+    * (null != null under plain join equality) and mint a fresh row per
+    * batch — that would break the bit-identical-to-one-shot contract
+    * (Spark's groupBy keeps null as one group) and grow the table
+    * unboundedly. */
+  private[ops] def foldGroups(batch: DataFrame, indexPath: String,
+                              groupCol: String, agg: Column,
+                              merge: (Column, Column) => Column,
+                              batchId: Option[String]): DataFrame = {
     val incoming = batch.groupBy(col(groupCol).cast("string").as("g"))
-      .agg(kmvAgg(key, k).as("sk"))
-    val merged =
-      if (Fs.exists(indexPath) && Fs.listNames(indexPath).nonEmpty) {
-        val current = spark.read.parquet(indexPath)
-        // null-SAFE group equality (<=>): a null group key must MERGE
-        // with the stored null-group row, not miss (null != null under
-        // plain join equality) and mint a fresh row per batch — that
-        // would break the bit-identical-to-one-shot contract (Spark's
-        // groupBy keeps null as one group) and grow the table unboundedly
+      .agg(agg.as("sk"))
+    graft.core.Fold.swapTable(batch.sparkSession, indexPath, batchId) {
+      case None => incoming
+      case Some(current) =>
         current.select(col("g").as("__ga"), col("sk").as("__a"))
           .join(incoming.select(col("g").as("__gb"), col("sk").as("__b")),
             col("__ga") <=> col("__gb"), "full_outer")
           .select(coalesce(col("__ga"), col("__gb")).as("g"),
             when(col("__a").isNull, col("__b"))
               .when(col("__b").isNull, col("__a"))
-              .otherwise(mergeSketch(col("__a"), col("__b"))).as("sk"))
-      } else incoming
-    val lock = s"$indexPath.__lock"
-    if (!Fs.createExclusive(lock, s"pid=${ProcessHandle.current().pid()}"))
-      throw new IllegalStateException(
-        s"sketch table $indexPath is being updated by another writer; " +
-          s"if that process crashed, delete $lock and re-run")
-    try {
-      // tmp write executes the merge plan (which reads the old table)
-      // before any rename touches it — no lineage hazard
-      val tmp = s"$indexPath.__compact_tmp"
-      Fs.delete(tmp)
-      merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val old = s"$indexPath.__old"
-      Fs.delete(old)
-      if (Fs.exists(indexPath)) Fs.rename(indexPath, old)
-      Fs.rename(tmp, indexPath)
-      Fs.delete(old)
-    } finally Fs.delete(lock)
-    spark.read.parquet(indexPath)
+              .otherwise(merge(col("__a"), col("__b"))).as("sk"))
+    }
   }
 }

@@ -137,7 +137,7 @@ object SpanDedup {
       s"minOccurrences=$minOccurrences marks every window as duplicated")
     import graft.core.Fs
     val spark = batch.sparkSession
-    Dedup.recoverIndex(indexPath)
+    graft.core.Fold.recoverIndex(indexPath)
     if (batchId.exists(IncrementalLedger.journalIds(indexPath).contains)) {
       // fully-applied batch replayed (crash after the journal record):
       // its spans are already durable via the caller's sinkFirst, its

@@ -3146,8 +3146,8 @@ object TrainingData {
     * `dot - ||c||^2/2`, ties to HIGHER cid; per-dimension means 1e-6
     * floored, no normalization — codewords keep magnitudes), then the
     * full-corpus encode `p{s}b(vec_id, c{s})` and the per-query LUT
-    * `l{s}(query_id, cid, d)` — mirroring Similarity.kmeansCentroidsL2 /
-    * pqTopK exactly. */
+    * `l{s}(query_id, cid, d)` — mirroring
+    * Similarity.kmeansCentroidsL2Multi / pqTopK exactly. */
   private def pqSubspaceCtes(s: Int, cw: Int): String = {
     val lo = s * 16
     def scoreExpr(tbl: String): String =

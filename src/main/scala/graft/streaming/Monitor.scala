@@ -540,7 +540,7 @@ object Monitor {
     * restart. The sink therefore records each applied batch's
     * lineage-qualified identity (`stream:<lineage>:<bid>`, the
     * [[bm25IndexSink]] scheme) in the table's
-    * [[graft.ops.IncrementalLedger]] — ledger and data commit in the
+    * [[graft.core.Fold]] ledger — ledger and data commit in the
     * same atomic swap, so the replayed batch is a no-op and the folds
     * are exactly-once (QuantileSpec pins the crash-replay case). The
     * fold is order-free, and in the exact regime (group count <= k)
@@ -574,7 +574,7 @@ object Monitor {
     * [[quantileSketchSink]] situation) — a replayed batch would
     * double-count, so the sink records each applied batch's
     * lineage-qualified identity in the table's
-    * [[graft.ops.IncrementalLedger]] (committed atomically with the
+    * [[graft.core.Fold]] ledger (committed atomically with the
     * fold's swap): crash-replays are no-ops and the folds are
     * exactly-once under foreachBatch's at-least-once delivery. In the
     * exact regime the drained state is bit-identical to the one-shot
@@ -620,7 +620,7 @@ object Monitor {
     * Delivery contract: GD steps are NOT idempotent on re-delivered
     * batches (a replay would walk the weights further), so the sink
     * records each applied batch's lineage-qualified identity in the
-    * model directory's [[graft.ops.IncrementalLedger]], committed in
+    * model directory's [[graft.core.Fold]] ledger, committed in
     * the same atomic swap as the weights — crash-replays return the
     * committed model unchanged and the updates are exactly-once under
     * foreachBatch's at-least-once delivery (ClassifierSpec pins the
@@ -650,7 +650,7 @@ object Monitor {
     * ingest without rescanning the corpus. Same delivery contract:
     * GD folds are NOT idempotent, so each applied batch's
     * lineage-qualified identity commits in the model's
-    * [[graft.ops.IncrementalLedger]] atomically with the weights —
+    * [[graft.core.Fold]] ledger atomically with the weights —
     * crash-replays return the committed model unchanged
     * (exactly-once under foreachBatch's at-least-once delivery;
     * MonitorSpec pins the replay no-op). The model stays loadable
@@ -699,7 +699,7 @@ object Monitor {
     * [[quantileSketchSink]] situation, not the KMV one) — a replayed
     * batch would double-count, so the sink records each applied
     * batch's lineage-qualified identity in the table's
-    * [[graft.ops.IncrementalLedger]] (committed atomically with the
+    * [[graft.core.Fold]] ledger (committed atomically with the
     * fold's swap): crash-replays are no-ops and the folds are
     * exactly-once under foreachBatch's at-least-once delivery. The
     * fold is order-free, and in the exact regime (distinct items <= k)

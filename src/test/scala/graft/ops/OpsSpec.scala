@@ -571,7 +571,7 @@ class OpsSpec extends AnyFunSuite {
     // crash window: parked .__old with the live dir missing is restored
     // on the next read path (the mid-swap crash point)
     Fs.rename(idxB, s"$idxB.__old")
-    Dedup.recoverIndex(idxB)
+    graft.core.Fold.recoverIndex(idxB)
     assert(Fs.exists(idxB) && !Fs.exists(s"$idxB.__old"))
     assert(spark.read.parquet(idxB).count() == bRows.size + kept4B.size)
     // exact-dedup fingerprint indexes compact through the same path

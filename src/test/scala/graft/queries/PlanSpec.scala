@@ -144,6 +144,56 @@ class PlanSpec extends AnyFunSuite {
     assert(!readSchema.contains("r_"), readSchema)
   }
 
+  test("incrementalMinhashDedup rereadFrom: the fused missing-id " +
+    "fail-fast still sits on a LeftOuter verify join") {
+    // the raise_error branch fires on a NULL index-side shingle set; an
+    // optimizer rewrite of that LEFT join into an inner one would drop
+    // a candidate the corpus lost — silently KEEPING a possible
+    // duplicate — instead of failing loudly
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.catalyst.plans.LeftOuter
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+    import org.apache.spark.sql.functions._
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          d: Long): Unit = { plans.add(qe.optimizedPlan); () }
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+      .select(col("doc_id").cast("long").as("doc_id"), col("text"))
+      .limit(200).localCheckpoint()
+    val idx = graft.SparkSpec.tmpDir("graft-plan-rr-") + "/idx"
+    val marker = 7655001L
+    spark.listenerManager.register(listener)
+    try {
+      val first = graft.ops.Dedup.incrementalMinhashDedup(
+        docs.filter(col("doc_id") < 100), idx,
+        rereadFrom = Some(docs.limit(0))).localCheckpoint()
+      // the same docs again: every one is an indexed candidate
+      graft.ops.Dedup.incrementalMinhashDedup(docs, idx,
+        rereadFrom = Some(first)).count(): Unit
+      // listener delivery is async but FIFO: a marker query flushes it
+      spark.range(1).filter(col("id") =!= marker).count(): Unit
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!plans.asScala.exists(_.toString.contains(marker.toString)) &&
+        System.nanoTime() < deadline) Thread.sleep(25)
+    } finally spark.listenerManager.unregister(listener)
+    val verify = plans.asScala.toSeq
+      .filter(_.toString.contains("rereadFrom is missing"))
+    assert(verify.nonEmpty, "no verify-join plan captured")
+    verify.foreach { p =>
+      assert(p.exists {
+        case j: Join => j.joinType == LeftOuter &&
+          j.right.output.exists(_.name == "i_sh")
+        case _ => false
+      }, p.toString.take(4000))
+    }
+  }
+
   test("q_dedup_ngram: count-table joins stay broadcast under AQE") {
     val df = SparkEntry.queries("q_dedup_ngram")(spark, sf)
     df.collect() // materialize so AQE finalizes the plan
