@@ -13,11 +13,17 @@ import org.apache.spark.sql.types._
   *   - appends write only the new run's partition; old data is never
   *     touched except on pset-schema growth, where the hash column must be
   *     recomputed (ref psweep.py:690-710) — a single distributed rewrite;
-  *   - counters come from a column-pruned `agg(max)` scan (Parquet footer
-  *     stats, no data read);
-  *   - dedup against the database broadcasts the (small) incoming hash set
-  *     and semi-joins the database's hash column — one column-pruned pass,
-  *     no driver-side materialization of database hashes.
+  *   - [[read]] serves the merged schema from a snapshot keyed by the
+  *     exact data-file listing (`path, length, mtime` of every file): a
+  *     read of an unchanged db starts no Spark job, and the first read
+  *     after any append or rewrite merges the footers once;
+  *   - a [[Study]] round learns its counters, its skip-dups hits and its
+  *     `_pset_id` collisions from ONE column-pruned aggregate over the
+  *     base; with the opt-in skip manifest, from the manifest's per-file
+  *     maxima and hash ranges instead ([[counters]], [[existingAmong]]).
+  *
+  * Every public read recovers a crashed swap ([[recover]]) once at its
+  * entry; the internals below it never recover again.
   */
 class Database(val spark: SparkSession, val calcDir: String,
                val basename: String = "database") {
@@ -43,17 +49,21 @@ class Database(val spark: SparkSession, val calcDir: String,
   /** Release this handle's process-global side effects (the stats-
     * store registration). Idempotent; the handle stays usable for
     * reads afterwards, just without the persisted stats tier. */
-  def close(): Unit = graft.ops.Stats.unregisterStore(dbPath)
+  def close(): Unit = {
+    graft.ops.Stats.unregisterStore(dbPath)
+    Database.schemas.remove(snapshotKey)
+    ()
+  }
 
   /** Single-writer lock file. The database supports ONE writer at a time
     * (same contract as the reference's pickle database); the lock turns a
     * silent race into a loud error. */
   val lockPath: String = Fold.lockPath(dbPath)
 
-  def exists: Boolean = {
-    recover()
-    Fs.exists(dbPath) && Fs.listNames(dbPath).nonEmpty
-  }
+  def exists: Boolean = { recover(); present }
+
+  /** [[exists]] without the recovery step. */
+  private def present: Boolean = Fs.listNames(dbPath).nonEmpty
 
   /** Recover from a crash mid-swap ([[swapIn]] windows): a crash between
     * the two renames leaves the data under `.__old` — restore it; a crash
@@ -125,12 +135,37 @@ class Database(val spark: SparkSession, val calcDir: String,
   /** Read the database; schemas of all appended runs are unioned
     * (missing columns read as null — the Parquet analog of the
     * reference's NA-fill on append, ref psweep.py:707-709). */
-  def read(): DataFrame = {
-    recover()
-    spark.read.option("mergeSchema", "true").parquet(dbPath)
+  def read(): DataFrame = { recover(); scan() }
+
+  def readOpt(): Option[DataFrame] = { recover(); scanOpt() }
+
+  private def scanOpt(): Option[DataFrame] =
+    if (present) Some(scan()) else None
+
+  /** [[read]] without the recovery step. While the data-file listing
+    * equals the one the snapshot was taken at, the snapshot's schema is
+    * served and no footer is read; otherwise the footers are merged and
+    * that frame's schema becomes the snapshot. The listing is taken
+    * BEFORE the merge, so a file landing in between can only make the
+    * next read merge again, never serve a schema missing its columns. */
+  private def scan(): DataFrame = {
+    val files = Database.listing(dbPath)
+    Option(Database.schemas.get(snapshotKey))
+      .filter(snap => files.nonEmpty && snap._1 == files) match {
+      case Some((_, schema)) => spark.read.schema(schema).parquet(dbPath)
+      case None =>
+        val df = spark.read.option("mergeSchema", "true").parquet(dbPath)
+        if (files.nonEmpty) Database.schemas.put(snapshotKey, files -> df.schema)
+        df
+    }
   }
 
-  def readOpt(): Option[DataFrame] = if (exists) Some(read()) else None
+  /** This db's entry in [[Database.schemas]]: the qualified path, so
+    * handles opened through relative and absolute paths share it. */
+  private lazy val snapshotKey: String = {
+    val p = new org.apache.hadoop.fs.Path(dbPath)
+    Fs.fs(dbPath).makeQualified(p).toString
+  }
 
   /** `(max _pset_seq, max _run_seq)`, or (-1, -1) on an empty database
     * (ref psweep.py:1409-1415). Served from the skip manifest's
@@ -140,7 +175,7 @@ class Database(val spark: SparkSession, val calcDir: String,
     * scan otherwise. */
   def counters(): (Long, Long) = {
     recover()
-    if (manifestFresh) {
+    if (fresh) {
       val m = spark.read.parquet(manifestDir)
       if (Seq("pset_seq_max", "run_seq_max").forall(m.columns.contains)) {
         val r = m.agg(max(col("pset_seq_max")).cast(LongType),
@@ -149,7 +184,7 @@ class Database(val spark: SparkSession, val calcDir: String,
           if (r.isNullAt(1)) -1L else r.getLong(1))
       }
     }
-    readOpt() match {
+    scanOpt() match {
       case None => (-1L, -1L)
       case Some(df) =>
         val r = df.agg(
@@ -169,7 +204,7 @@ class Database(val spark: SparkSession, val calcDir: String,
     * skip_dups pre-check reads touched files, not the corpus. */
   def existingAmong(colName: String, values: Seq[String]): Set[String] = {
     recover()
-    if (values.isEmpty || !exists) return Set.empty
+    if (values.isEmpty || !present) return Set.empty
     val pruned = colName match {
       case "_pset_id" => prunedFiles("pid_hmin", "pid_hmax", values)
       case "_pset_hash" => prunedFiles("psh_hmin", "psh_hmax", values)
@@ -179,9 +214,7 @@ class Database(val spark: SparkSession, val calcDir: String,
       case Some(files) if files.isEmpty => Set.empty
       case Some(files) =>
         Database.existingAmong(readFiles(files), colName, values)
-      case None =>
-        readOpt().map(Database.existingAmong(_, colName, values))
-          .getOrElse(Set.empty)
+      case None => Database.existingAmong(scan(), colName, values)
     }
   }
 
@@ -240,8 +273,11 @@ class Database(val spark: SparkSession, val calcDir: String,
   def hasSkipManifest: Boolean = { recover(); Fs.exists(manifestDir) }
 
   /** Manifest present AND attested complete by the commit marker. */
-  def manifestFresh: Boolean =
-    { recover(); Fs.exists(manifestDir) && Fs.exists(commitMarker) }
+  def manifestFresh: Boolean = { recover(); fresh }
+
+  /** [[manifestFresh]] without the recovery step. */
+  private def fresh: Boolean =
+    Fs.exists(manifestDir) && Fs.exists(commitMarker)
 
   private def fileStats(src: DataFrame): DataFrame = {
     def opt(name: String, c: Column, t: DataType): Column =
@@ -267,7 +303,7 @@ class Database(val spark: SparkSession, val calcDir: String,
 
   /** Full manifest rebuild: one column-pruned scan of the db. */
   def rebuildSkipManifest(): Unit = withWriteLock {
-    require(exists, s"no database at $dbPath")
+    require(present, s"no database at $dbPath")
     rebuildSkipManifestUnlocked()
   }
 
@@ -275,7 +311,7 @@ class Database(val spark: SparkSession, val calcDir: String,
     Fs.delete(commitMarker)
     val tmp = s"$dbPath/_graft_skip_tmp"
     Fs.delete(tmp)
-    fileStats(read()).coalesce(1).write.mode("overwrite").parquet(tmp)
+    fileStats(scan()).coalesce(1).write.mode("overwrite").parquet(tmp)
     Fs.delete(manifestDir)
     Fs.rename(tmp, manifestDir)
     Fs.writeString(commitMarker, s"committed=${java.time.Instant.now()}")
@@ -295,10 +331,10 @@ class Database(val spark: SparkSession, val calcDir: String,
     }
     val known = m.select(col("file"))
       .collect().map(r => normalizePath(r.getString(0))).toSet
-    val fresh = read().inputFiles.map(normalizePath).filterNot(known)
-    if (fresh.nonEmpty) {
+    val added = scan().inputFiles.map(normalizePath).filterNot(known)
+    if (added.nonEmpty) {
       val src = spark.read.option("basePath", dbPath)
-        .option("mergeSchema", "true").parquet(fresh.toIndexedSeq: _*)
+        .option("mergeSchema", "true").parquet(added.toIndexedSeq: _*)
       fileStats(src).coalesce(1).write.mode("append").parquet(manifestDir)
     }
     Fs.writeString(commitMarker, s"committed=${java.time.Instant.now()}")
@@ -311,7 +347,7 @@ class Database(val spark: SparkSession, val calcDir: String,
     * scan with listing). */
   private def prunedFiles(loCol: String, hiCol: String,
                           probes: Seq[String]): Option[Seq[String]] = {
-    if (!manifestFresh) return None
+    if (!fresh) return None
     val m = spark.read.parquet(manifestDir)
     if (!m.columns.contains(loCol)) return None
     val rows = m.select(col("file"), col(loCol), col(hiCol)).collect()
@@ -349,8 +385,8 @@ class Database(val spark: SparkSession, val calcDir: String,
                      bits: Int = 12): Unit = {
     require(numFiles >= 1, "numFiles must be positive")
     withWriteLock {
-      if (exists) {
-        val df = read()
+      if (present) {
+        val df = scan()
         val key: Column =
           if (zCols.isEmpty) xxhash64(col("_pset_id"))
           else if (zCols.size == 1) col(zCols.head).cast("long")
@@ -393,7 +429,7 @@ class Database(val spark: SparkSession, val calcDir: String,
     recover()
     require(psetIds.nonEmpty, "need at least one _pset_id")
     val probe = col("_pset_id").isin(psetIds: _*)
-    if (!Fs.exists(manifestDir)) return read().filter(probe)
+    if (!Fs.exists(manifestDir)) return scan().filter(probe)
     val m = spark.read.parquet(manifestDir)
       .select(col("file"), col("pid_hmin"), col("pid_hmax")).collect()
     val hs = hashProbes(psetIds)
@@ -412,10 +448,10 @@ class Database(val spark: SparkSession, val calcDir: String,
       if (Fs.exists(commitMarker)) Array.empty[String]
       else {
         val known = m.map(r => normalizePath(r.getString(0))).toSet
-        read().inputFiles.map(normalizePath).filterNot(known)
+        scan().inputFiles.map(normalizePath).filterNot(known)
       }
     val files = (kept.map(normalizePath) ++ unknown).distinct
-    if (files.isEmpty) read().filter(probe).limit(0)
+    if (files.isEmpty) scan().filter(probe).limit(0)
     else readFiles(files.toIndexedSeq).filter(probe)
   }
 
@@ -437,18 +473,19 @@ class Database(val spark: SparkSession, val calcDir: String,
     * `_run_seq` ⇒ row-group stats skip whole files). The predicate is
     * always re-applied — pruning is an optimization, never a
     * filter. */
-  def asOf(runSeq: Long): DataFrame = {
-    recover()
+  def asOf(runSeq: Long): DataFrame = { recover(); asOfRecovered(runSeq) }
+
+  private def asOfRecovered(runSeq: Long): DataFrame = {
     val probe = col("_run_seq") <= runSeq
-    if (!manifestFresh) return read().filter(probe)
+    if (!fresh) return scan().filter(probe)
     val m = spark.read.parquet(manifestDir)
-    if (!m.columns.contains("run_seq_min")) return read().filter(probe)
+    if (!m.columns.contains("run_seq_min")) return scan().filter(probe)
     val files = m.select(col("file"), col("run_seq_min")).collect()
       // a null per-file min cannot attest the file is all-future —
       // keep it (pruning degrades, the re-applied predicate corrects)
       .filter(r => r.isNullAt(1) || r.getLong(1) <= runSeq)
       .map(r => normalizePath(r.getString(0))).toIndexedSeq
-    if (files.isEmpty) read().filter(probe).limit(0)
+    if (files.isEmpty) scan().filter(probe).limit(0)
     else readFiles(files).filter(probe)
   }
 
@@ -472,7 +509,7 @@ class Database(val spark: SparkSession, val calcDir: String,
     recover()
     val commits: Seq[(Long, java.sql.Timestamp)] = {
       val m =
-        if (!manifestFresh) None
+        if (!fresh) None
         else {
           val mf = spark.read.parquet(manifestDir)
           if (!Seq("run_seq_max", "time_utc_max")
@@ -483,7 +520,7 @@ class Database(val spark: SparkSession, val calcDir: String,
             .map(r => (r.getLong(0), r.getTimestamp(1))).toSeq)
         }
       m.getOrElse {
-        readOpt() match {
+        scanOpt() match {
           case None => Seq.empty
           case Some(df) =>
             if (!df.columns.contains("_time_utc")) Seq.empty
@@ -503,7 +540,7 @@ class Database(val spark: SparkSession, val calcDir: String,
       s"no run in $dbPath had committed by $ts — earliest commit is " +
         byRun.values.minOption.map(_.toString).getOrElse("unknown") +
         " (or the db records no _time_utc)")
-    asOf(resolved.max)
+    asOfRecovered(resolved.max)
   }
 
   /** Incremental read (change data feed): every row appended strictly
@@ -527,13 +564,13 @@ class Database(val spark: SparkSession, val calcDir: String,
     require(afterRun <= untilRun,
       s"empty change interval: afterRun=$afterRun > untilRun=$untilRun")
     val probe = col("_run_seq") > afterRun && col("_run_seq") <= untilRun
-    if (!manifestFresh) return read().filter(probe)
+    if (!fresh) return scan().filter(probe)
     val m = spark.read.parquet(manifestDir)
     // both range bounds must exist (an older or externally-built
     // manifest carrying only the min must degrade to the filter scan,
     // not throw — mirrors the counters() schema guard)
     if (!Seq("run_seq_min", "run_seq_max").forall(m.columns.contains))
-      return read().filter(probe)
+      return scan().filter(probe)
     val files = m.select(col("file"), col("run_seq_min"), col("run_seq_max"))
       .collect()
       .filter { r =>
@@ -545,7 +582,7 @@ class Database(val spark: SparkSession, val calcDir: String,
         maxAfter && minUntil
       }
       .map(r => normalizePath(r.getString(0))).toIndexedSeq
-    if (files.isEmpty) read().filter(probe).limit(0)
+    if (files.isEmpty) scan().filter(probe).limit(0)
     else readFiles(files).filter(probe)
   }
 
@@ -566,7 +603,7 @@ class Database(val spark: SparkSession, val calcDir: String,
     * widened are cast. */
   def rehashWith(extraPsetCols: Map[String, DataType],
                  casts: Map[String, DataType]): Unit = withWriteLock {
-    var df = read()
+    var df = scan()
     casts.foreach { case (c, t) => df = df.withColumn(c, col(c).cast(t)) }
     extraPsetCols.foreach { case (c, t) =>
       if (!df.columns.contains(c)) df = df.withColumn(c, lit(null).cast(t))
@@ -582,7 +619,7 @@ class Database(val spark: SparkSession, val calcDir: String,
     * mutating run (ref psweep.py:1417-1427). */
   def backup(): Option[String] = {
     if (!exists) return None
-    val stampRow = read().agg(max(col("_time_utc")), first(col("_run_id")))
+    val stampRow = scan().agg(max(col("_time_utc")), first(col("_run_id")))
       .head()
     val stamp =
       if (stampRow.isNullAt(0)) "empty"
@@ -723,11 +760,11 @@ class Database(val spark: SparkSession, val calcDir: String,
     * per `_run_id` partition. Atomic: rewrite to a temp dir, then swap.
     * Values, schema, and partitioning are unchanged. */
   def compact(numPartitions: Int = 0): Unit = withWriteLock {
-    if (exists) {
-      val runs = read().select("_run_id").distinct().count().toInt
+    if (present) {
+      val runs = scan().select("_run_id").distinct().count().toInt
       val n = if (numPartitions > 0) numPartitions else math.max(1, runs)
       val hadManifest = Fs.exists(manifestDir)
-      swapIn(read().repartition(n, col("_run_id"))
+      swapIn(scan().repartition(n, col("_run_id"))
         .write.mode("overwrite").partitionBy("_run_id").parquet(_))
       if (hadManifest) rebuildSkipManifestUnlocked()
     }
@@ -751,6 +788,32 @@ object Database {
   def apply(spark: SparkSession, calcDir: String,
             basename: String = "database"): Database =
     new Database(spark, calcDir, basename)
+
+  /** [[Database.read]]'s schema snapshots: per qualified db path, the
+    * data-file listing a merged schema was taken at, and that schema.
+    * Written only by a merging read; dropped by [[Database.close]]. */
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[
+    String, (Set[(String, Long, Long)], StructType)]()
+
+  /** `(path, length, mtime)` of every data file under `dir`, skipping
+    * the names the parquet reader skips (`.x`, and `_x` unless it is a
+    * `k=v` partition dir) — so `_graft_stats`/`_graft_skip` writes leave
+    * it unchanged. A `listStatus` walk: see [[Fs]] on located listings.
+    * Empty when `dir` is missing or vanishes mid-walk. */
+  private def listing(dir: String): Set[(String, Long, Long)] = {
+    import org.apache.hadoop.fs.Path
+    val fs = Fs.fs(dir)
+    def walk(p: Path): Seq[(String, Long, Long)] =
+      fs.listStatus(p).toSeq.flatMap { st =>
+        val n = st.getPath.getName
+        if (n.startsWith(".") || (n.startsWith("_") && !n.contains("=")))
+          Seq.empty
+        else if (st.isDirectory) walk(st.getPath)
+        else Seq((st.getPath.toString, st.getLen, st.getModificationTime))
+      }
+    try walk(new Path(dir)).toSet
+    catch { case _: java.io.FileNotFoundException => Set.empty }
+  }
 
   /** Which of `values` already exist in `df`'s column `colName` — one
     * column-pruned pass, broadcast small side (the J1 dedup shape). */

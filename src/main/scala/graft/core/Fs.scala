@@ -10,11 +10,19 @@ import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
   * local disk, HDFS, or an object store — the reference's equivalents
   * (ref psweep.py:154-185 file/pickle/json IO; 1417-1427 backup) are
   * local-FS-only.
+  *
+  * Hot paths list with `listStatus` only: a `LocatedFileStatus`
+  * (`listFiles`, `listLocatedStatus`) or a `getPermission` call on the
+  * local filesystem forks one `ls` process per file.
   */
 object Fs {
 
-  def fs(path: String, conf: Configuration = new Configuration()): FileSystem =
-    new Path(path).getFileSystem(conf)
+  /** The one Hadoop configuration of the process, built on first use:
+    * every `new Configuration()` re-parses `core-default.xml` on its
+    * first lookup, which dominated a local helper call. Read-only. */
+  lazy val hadoopConf: Configuration = new Configuration()
+
+  def fs(path: String): FileSystem = new Path(path).getFileSystem(hadoopConf)
 
   def exists(path: String): Boolean = fs(path).exists(new Path(path))
 
@@ -28,12 +36,11 @@ object Fs {
 
   /** Recursive copy (backup / simulate-sandbox primitive). */
   def copyDir(src: String, dst: String): Unit = {
-    val conf = new Configuration()
-    val sfs = fs(src, conf); val dfs = fs(dst, conf)
+    val sfs = fs(src); val dfs = fs(dst)
     require(sfs.exists(new Path(src)), s"copy source missing: $src")
     require(!dfs.exists(new Path(dst)), s"copy dest already exists: $dst")
     FileUtil.copy(sfs, new Path(src), dfs, new Path(dst),
-      false, false, conf)
+      false, false, hadoopConf)
     ()
   }
 

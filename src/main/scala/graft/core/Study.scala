@@ -52,8 +52,10 @@ private[core] final case class TaskCtx(
   *     normalized through the inferred union schema *before hashing*
   *     (ref psweep.py:1380-1392 — types must equal what the database holds
   *     or hashes diverge);
-  *   - dedup/incremental-resume is a hash semi-join against the database
-  *     (broadcast of the small incoming hash set);
+  *   - dedup/incremental-resume, the counters and the `_pset_id`
+  *     collision check share one column-pruned aggregate over the
+  *     database (the incoming hashes and candidate ids ride it as `isin`
+  *     probes);
   *   - execution is one `mapPartitions` pass over the rows — Spark's
   *     executor pool replaces both `multiprocessing.Pool` and the dask
   *     cluster (ref psweep.py:1465-1476);
@@ -144,33 +146,12 @@ final class Study(val spark: SparkSession, val cfg: StudyConfig) {
     val norm = params.toVector.map(p => Study.normalizeFull(p, paramSchema))
     val hashes = norm.map(PsetHash.hash(_))
 
-    // 3.1-4/5: load-or-create + counter recovery (from the in-memory base
-    // when one is given, else from disk).
+    // 3.1-4/5: load-or-create (from the in-memory base when one is
+    // given, else from disk). A fresh skip manifest is the opt-in scale
+    // path: it serves the counters and the hash-range-pruned pre-checks
+    // without scanning the base.
     var base: Option[DataFrame] = baseDf.orElse(db.readOpt())
-    val (maxPsetSeq, maxRunSeq) = baseDf match {
-      case Some(bdf) =>
-        import org.apache.spark.sql.functions.{col, max}
-        val r = bdf.agg(max(col("_pset_seq")).cast(LongType),
-          max(col("_run_seq")).cast(LongType)).head()
-        (if (r.isNullAt(0)) -1L else r.getLong(0),
-         if (r.isNullAt(1)) -1L else r.getLong(1))
-      case None if db.manifestFresh =>
-        // disk-backed with a fresh manifest: counters from the
-        // per-file maxima (SURVEY §4.3(c)'s lightweight metadata
-        // read — zero data files)
-        db.counters()
-      case None => base match {
-        // no manifest: aggregate over the ALREADY-BUILT base frame
-        // (a db.counters() fallback would re-list and re-read the db)
-        case None => (-1L, -1L)
-        case Some(bdf) =>
-          import org.apache.spark.sql.functions.{col, max}
-          val r = bdf.agg(max(col("_pset_seq")).cast(LongType),
-            max(col("_run_seq")).cast(LongType)).head()
-          (if (r.isNullAt(0)) -1L else r.getLong(0),
-           if (r.isNullAt(1)) -1L else r.getLong(1))
-      }
-    }
+    val ranged = baseDf.isEmpty && db.manifestFresh
 
     // 3.1-6: backup before mutating (ref psweep.py:1417-1427).
     if (cfg.backup) db.backup()
@@ -207,48 +188,48 @@ final class Study(val spark: SparkSession, val cfg: StudyConfig) {
       }
     }
 
-    // 3.1-8b: skip_dups — drop incoming psets whose hash already exists
-    // (ref psweep.py:1432-1439).
-    val dupHashes: Set[String] =
-      if (!cfg.skipDups) Set.empty
-      // disk-backed with a fresh manifest: hash ranges prune the
-      // pre-check to touched files; otherwise the already-built base
-      // frame serves the scan (no per-call re-listing)
-      else if (baseDf.isEmpty && db.manifestFresh)
-        db.existingAmong("_pset_hash", hashes)
-      else
-        base.map(Database.existingAmong(_, "_pset_hash", hashes))
-          .getOrElse(Set.empty)
-    val keptIdx = norm.indices.filter(i => !dupHashes.contains(hashes(i)))
+    // 3.1-7/8b/9: counters (ref psweep.py:1409-1415), skip_dups hits
+    // (ref psweep.py:1432-1439) and `_pset_id` collisions of a candidate
+    // id drawn for every incoming pset (ref psweep.py:1441-1450) — one
+    // pre-write scan of the (rehashed) base, or the manifest's metadata.
+    val drawn = norm.map(_ => UUID.randomUUID().toString)
+    def collisions(ids: Seq[String]): Set[String] =
+      if (ranged) db.existingAmong("_pset_id", ids)
+      else base.map(Database.existingAmong(_, "_pset_id", ids))
+        .getOrElse(Set.empty)
+    val pre =
+      if (ranged) {
+        val (psetSeq, runSeq) = db.counters()
+        Study.PreWrite(psetSeq, runSeq,
+          if (cfg.skipDups) db.existingAmong("_pset_hash", hashes)
+          else Set.empty, Set.empty)
+      } else base.fold(Study.PreWrite(-1L, -1L, Set.empty, Set.empty))(
+        Study.preWriteScan(_, if (cfg.skipDups) hashes else Seq.empty, drawn))
+    val keptIdx = norm.indices.filter(i => !pre.dupHashes.contains(hashes(i)))
     if (keptIdx.isEmpty)
       return RunOutput(base.getOrElse(ValueSchema.toDF(spark, Seq.empty)),
         "none", 0L)
 
-    // 3.1-9: identity assignment — fresh run id; collision-checked pset ids
-    // (ref psweep.py:1441-1450).
+    // identity assignment — fresh run id; kept psets take their drawn
+    // ids, re-drawn and re-checked while any collides
     val runId = UUID.randomUUID().toString
     if (cfg.git) Git.noteRun(runId)
-    var psetIds = keptIdx.map(_ => UUID.randomUUID().toString)
-    def collisions(ids: Seq[String]): Set[String] =
-      if (baseDf.isEmpty && db.manifestFresh)
-        db.existingAmong("_pset_id", ids)
-      else
-        base.map(Database.existingAmong(_, "_pset_id", ids))
-          .getOrElse(Set.empty)
-    var colliding = collisions(psetIds)
+    var psetIds = keptIdx.map(drawn)
+    var colliding =
+      if (ranged) collisions(psetIds) else psetIds.toSet & pre.idHits
     while (colliding.nonEmpty) {
       psetIds = psetIds.map(id =>
         if (colliding.contains(id)) UUID.randomUUID().toString else id)
       colliding = collisions(psetIds)
     }
-    val runSeq = maxRunSeq + 1
+    val runSeq = pre.maxRunSeq + 1
     val work: Seq[Map[String, Any]] = keptIdx.zipWithIndex.map {
       case (i, k) =>
         norm(i) ++ Map[String, Any](
           "_run_id" -> runId,
           "_pset_id" -> psetIds(k),
           "_run_seq" -> runSeq,
-          "_pset_seq" -> (maxPsetSeq + 1 + k),
+          "_pset_seq" -> (pre.maxPsetSeq + 1 + k),
           "_pset_hash" -> hashes(i),
           "_calc_dir" -> effCalcDir)
     }
@@ -314,6 +295,33 @@ object Study {
 
   def apply(spark: SparkSession, cfg: StudyConfig): Study =
     new Study(spark, cfg)
+
+  /** What a round must know of its base before it writes: the counters
+    * (-1 on an empty base), which incoming hashes it already holds, and
+    * which candidate `_pset_id`s it already holds. */
+  private[core] final case class PreWrite(maxPsetSeq: Long, maxRunSeq: Long,
+                                          dupHashes: Set[String],
+                                          idHits: Set[String])
+
+  /** [[PreWrite]] of `base` in ONE column-pruned aggregate: the two
+    * counter maxima plus the set of `hashes` and of `ids` found in the
+    * base's `_pset_hash`/`_pset_id` columns (empty probe lists, or a
+    * base lacking the column, find nothing). */
+  private[core] def preWriteScan(base: DataFrame, hashes: Seq[String],
+                                 ids: Seq[String]): PreWrite = {
+    import org.apache.spark.sql.functions.{col, collect_set, lit, max, when}
+    def found(c: String, probes: Seq[String]) =
+      if (probes.isEmpty || !base.columns.contains(c))
+        lit(null).cast(ArrayType(StringType))
+      else collect_set(when(col(c).isin(probes: _*), col(c)))
+    val r = base.agg(max(col("_pset_seq")).cast(LongType),
+      max(col("_run_seq")).cast(LongType),
+      found("_pset_hash", hashes), found("_pset_id", ids)).head()
+    def set(i: Int): Set[String] =
+      if (r.isNullAt(i)) Set.empty else r.getSeq[String](i).toSet
+    PreWrite(if (r.isNullAt(0)) -1L else r.getLong(0),
+      if (r.isNullAt(1)) -1L else r.getLong(1), set(2), set(3))
+  }
 
   /** The fixed bookkeeping column set (SURVEY §1.4,
     * ref tests/test_all.py:200-214). */

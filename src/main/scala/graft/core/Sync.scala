@@ -1,6 +1,5 @@
 package graft.core
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileUtil, Path}
 
 /** Calc-dir pull/push between any two Hadoop-visible locations — the
@@ -80,9 +79,8 @@ object Sync {
     */
   def copyTree(src: String, dst: String, rules: Seq[Rule],
                dryRun: Boolean = false): Seq[String] = {
-    val conf = new Configuration()
-    val sfs = Fs.fs(src, conf)
-    val dfs = Fs.fs(dst, conf)
+    val sfs = Fs.fs(src)
+    val dfs = Fs.fs(dst)
     val srcRoot = new Path(src)
     require(sfs.exists(srcRoot), s"sync source missing: $src")
     val copied = scala.collection.mutable.ArrayBuffer[String]()
@@ -108,7 +106,7 @@ object Sync {
         }
         if (!skip) {
           if (!dryRun)
-            FileUtil.copy(sfs, p, dfs, target, false, true, conf)
+            FileUtil.copy(sfs, p, dfs, target, false, true, Fs.hadoopConf)
           copied += rel
         }
       }

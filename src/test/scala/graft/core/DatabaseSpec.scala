@@ -1,5 +1,6 @@
 package graft.core
 
+import org.apache.spark.graftshim.Jobs
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -356,6 +357,72 @@ class DatabaseSpec extends AnyFunSuite {
       .schema(csvCols.schema).csv(s"$calc/db_csv")
     assert(csv.orderBy("_pset_seq").collect().map(_.toString).toSeq ==
       csvCols.orderBy("_pset_seq").collect().map(_.toString).toSeq)
+  }
+
+  /** `db.read()` must equal a fresh footer merge of the db: the same
+    * schema and the same rows. Checked on the first read (served after
+    * whatever changed the db) and on a second one (a snapshot hit). */
+  private def assertExactRead(db: Database, after: String): Unit =
+    (1 to 2).foreach { _ =>
+      val got = db.read()
+      val want = spark.read.option("mergeSchema", "true").parquet(db.dbPath)
+      assert(got.schema == want.schema, s"schema after $after")
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+        s"rows after $after")
+    }
+
+  test("schema snapshot: read() equals a fresh mergeSchema read after " +
+    "appends, rewrites, a second handle's append and a repaired swap") {
+    val calc = tmpDir("graft-dbsnap-")
+    val study = Study(spark, calc)
+    study.run(p => Map("r_" -> 1.0), Grid.plist("a", Seq(1, 2)))
+    val db = Database(spark, calc)
+    assertExactRead(db, "the first run")
+    study.run(p => Map("r_" -> 2.0), Grid.plist("a", Seq(3)))
+    assertExactRead(db, "a plain append")
+    study.run(p => Map("r_" -> 3.0, "s_" -> "x"), Grid.plist("a", Seq(4)))
+    assertExactRead(db, "a schema-growing append")
+    db.rehashWith(Map("b" -> org.apache.spark.sql.types.LongType), Map.empty)
+    assertExactRead(db, "rehashWith")
+    db.compact()
+    assertExactRead(db, "compact")
+    db.optimizeLayout(numFiles = 2)
+    assertExactRead(db, "optimizeLayout")
+    val other = Database(spark, calc)
+    other.append(db.read().limit(1)
+      .withColumn("_pset_id", lit("p-other"))
+      .withColumn("_run_id", lit("run-other"))
+      .withColumn("t_", lit(7L)))
+    assertExactRead(db, "an append through a second handle")
+    // a swap that crashed between its renames: the live db parked at
+    // .__old, a replacement with another schema staged but never swapped
+    // in — the repaired read must serve the parked state
+    val tmp = Fold.stage(db.dbPath)
+    db.read().drop("r_").write.partitionBy("_run_id").parquet(tmp)
+    Fs.rename(db.dbPath, s"${db.dbPath}.__old")
+    assertExactRead(db, "a repaired swap that crashed before the new state")
+    assert(db.read().columns.contains("r_"))
+    // ... and one that crashed after its second rename: stale .__old
+    Fs.rename(db.dbPath, s"${db.dbPath}.__old")
+    Fs.rename(tmp, db.dbPath)
+    assertExactRead(db, "a repaired swap that crashed after the new state")
+    assert(!db.read().columns.contains("r_"))
+  }
+
+  test("schema snapshot: reading an unchanged db starts no Spark job, " +
+    "also after stats-store writes") {
+    val (db, _) = mkDb()
+    db.read()
+    assert(Jobs.count(spark.sparkContext)(db.read())._2 == 0)
+    Fs.writeString(s"${db.dbPath}/_graft_stats/probe.json", "{}")
+    assert(Jobs.count(spark.sparkContext)(db.read())._2 == 0)
+    // a data file written past the engine is a different listing: the
+    // footers merge again
+    db.read().limit(1).withColumn("_run_id", lit("run-external"))
+      .write.mode("append").partitionBy("_run_id").parquet(db.dbPath)
+    assert(Jobs.count(spark.sparkContext)(db.read())._2 > 0)
+    assertExactRead(db, "an append past the engine")
+    db.close()
   }
 
   test("counters on empty database") {

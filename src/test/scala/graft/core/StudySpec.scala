@@ -1,5 +1,6 @@
 package graft.core
 
+import org.apache.spark.graftshim.Jobs
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -206,6 +207,122 @@ class StudySpec extends AnyFunSuite {
     val df2disk = saver.run(f1, params, Some(df1)).db
     assert(df2disk.count() == 8)
     assert(Study(spark, calc).database.read().count() == 8)
+  }
+
+  /** `(_pset_seq, _run_seq)` of the rows of `db` whose `a` is in `as`. */
+  private def seqs(db: org.apache.spark.sql.DataFrame,
+                   as: Seq[Long]): Seq[(Long, Long)] =
+    db.filter(col("a").isin(as: _*)).orderBy("_pset_seq")
+      .select(col("_pset_seq").cast("long"), col("_run_seq").cast("long"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+
+  /** Optimized plans of the queries `f` executes. */
+  private def plans(f: => Any): Seq[String] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(fn: String,
+                    qe: org.apache.spark.sql.execution.QueryExecution,
+                    ns: Long): Unit = { seen.add(qe.optimizedPlan.toString); () }
+      def onFailure(fn: String,
+                    qe: org.apache.spark.sql.execution.QueryExecution,
+                    e: Exception): Unit = ()
+    }
+    Jobs.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try { f; Jobs.drain(spark.sparkContext) }
+    finally spark.listenerManager.unregister(listener)
+    seen.toArray(Array.empty[String]).toSeq
+  }
+
+  test("pre-write scan: one skipDups run on a db without a manifest " +
+    "starts 5 Spark jobs; counters, dedup and executed hold") {
+    val calc = tmpDir("graft-prewrite-")
+    val study = Study(spark, StudyConfig(calcDir = calc, skipDups = true))
+    study.run(f1, Grid.plist("a", Seq(1, 2, 3, 4)))
+    assert(!study.database.hasSkipManifest)
+    study.database.read() // the snapshot of the current listing
+    var out: RunOutput = null
+    val (queries, jobs) = Jobs.count(spark.sparkContext)(plans {
+      out = study.run(f1, Grid.plist("a", Seq(3, 4, 5, 6)))
+    })
+    // the pre-write aggregate (its map stage and its result: two jobs
+    // under AQE), the result-schema aggregate, the append, and the
+    // footer merge of the returned read; three base scans made it 11
+    assert(jobs == 5, s"$jobs jobs")
+    assert(queries.count(_.contains("collect_set")) == 1)
+    assert(out.executed == 2)
+    assert(out.db.count() == 6)
+    assert(seqs(out.db, Seq(5L, 6L)) == Seq((4L, 1L), (5L, 1L)))
+    assert(out.db.select("_pset_id").distinct().count() == 6)
+  }
+
+  test("pre-write scan: the schema-evolution round dedups against the " +
+    "rehashed hashes") {
+    val calc = tmpDir("graft-prewrite-evolve-")
+    val study = Study(spark, StudyConfig(calcDir = calc, skipDups = true))
+    study.run(f1, Grid.plist("a", Seq(1, 2)))
+    // {a:1} lacks b: washed to {a:1, b:null}, the rehashed old row
+    val out = study.run(f1, Seq(Map[String, Any]("a" -> 1L),
+      Map[String, Any]("a" -> 3L, "b" -> 10L)))
+    assert(out.executed == 1)
+    assert(out.db.count() == 3)
+    assert(seqs(out.db, Seq(3L)) == Seq((2L, 1L)))
+    assert(out.db.select("_pset_hash").distinct().count() == 3)
+  }
+
+  test("pre-write scan: the in-memory base path") {
+    val calc = tmpDir("graft-prewrite-mem-")
+    val study = Study(spark,
+      StudyConfig(calcDir = calc, save = false, skipDups = true))
+    val base = study.run(f1, Grid.plist("a", Seq(1, 2, 3))).db
+    val out = study.run(f1, Grid.plist("a", Seq(2, 3, 4)), Some(base))
+    assert(out.executed == 1)
+    assert(out.db.count() == 4)
+    assert(seqs(out.db, Seq(4L)) == Seq((3L, 1L)))
+    // a grown pset schema rehashes the in-memory base before the scan
+    val grown = study.run(f1, Seq(Map[String, Any]("a" -> 4L),
+      Map[String, Any]("a" -> 5L, "b" -> 1L)), Some(out.db))
+    assert(grown.executed == 1)
+    assert(seqs(grown.db, Seq(5L)) == Seq((4L, 2L)))
+    assert(!Fs.exists(s"$calc/database"))
+  }
+
+  test("pre-write scan: repeatFailed re-runs without skipDups") {
+    val calc = tmpDir("graft-prewrite-repeat-")
+    val flaky: Map[String, Any] => Map[String, Any] = p => {
+      val a = p("a").asInstanceOf[Long]
+      if (a % 2 == 0) throw new RuntimeException(s"boom $a")
+      Map("result_" -> a * 10.0)
+    }
+    val study = Study(spark,
+      StudyConfig(calcDir = calc, skipDups = true, failSafe = true))
+    study.run(flaky, Grid.plist("a", Seq(1, 2, 3, 4)))
+    val out = study.repeatFailed(f1)
+    assert(out.executed == 2)
+    assert(out.db.count() == 6)
+    assert(seqs(out.db.filter(col("result_").isNotNull &&
+      col("a") % 2 === 0), Seq(2L, 4L)) == Seq((4L, 1L), (5L, 1L)))
+  }
+
+  test("pre-write scan: a fresh skip manifest keeps the ranged path") {
+    val calc = tmpDir("graft-prewrite-manifest-")
+    val study = Study(spark, StudyConfig(calcDir = calc, skipDups = true))
+    study.run(f1, Grid.plist("a", Seq(1, 2, 3, 4)))
+    study.database.optimizeLayout(numFiles = 2)
+    assert(study.database.manifestFresh)
+    study.database.read()
+    var out: RunOutput = null
+    val queries = plans {
+      out = study.run(f1, Grid.plist("a", Seq(3, 4, 5, 6)))
+    }
+    // counters and both pre-checks are served by the manifest and the
+    // hash-range-pruned existingAmong, never by the pre-write scan
+    assert(!queries.exists(_.contains("collect_set")))
+    assert(queries.exists(_.contains("pset_seq_max")))
+    assert(out.executed == 2)
+    assert(out.db.count() == 6)
+    assert(seqs(out.db, Seq(5L, 6L)) == Seq((4L, 1L), (5L, 1L)))
+    assert(study.database.manifestFresh)
   }
 
   test("type conflict on shared column is rejected") {
