@@ -19,8 +19,10 @@ import org.apache.spark.sql.types._
   *     after any append or rewrite merges the footers once;
   *   - a [[Study]] round learns its counters, its skip-dups hits and its
   *     `_pset_id` collisions from ONE column-pruned aggregate over the
-  *     base; with the opt-in skip manifest, from the manifest's per-file
-  *     maxima and hash ranges instead ([[counters]], [[existingAmong]]).
+  *     base, with or without a skip manifest;
+  *   - the opt-in skip manifest prunes reads only: [[lookupAll]],
+  *     [[asOf]] and [[changes]] read the files its per-file ranges keep
+  *     ([[pruned]]), and [[asOfTime]] resolves commit times from it.
   *
   * Every public read recovers a crashed swap ([[recover]]) once at its
   * entry; the internals below it never recover again.
@@ -167,57 +169,6 @@ class Database(val spark: SparkSession, val calcDir: String,
     Fs.fs(dbPath).makeQualified(p).toString
   }
 
-  /** `(max _pset_seq, max _run_seq)`, or (-1, -1) on an empty database
-    * (ref psweep.py:1409-1415). Served from the skip manifest's
-    * per-file seq maxima when the commit marker attests completeness —
-    * SURVEY §4.3(c)'s "counters from a lightweight metadata read",
-    * zero data files touched (DatabaseSpec pins it); full column-pruned
-    * scan otherwise. */
-  def counters(): (Long, Long) = {
-    recover()
-    if (fresh) {
-      val m = spark.read.parquet(manifestDir)
-      if (Seq("pset_seq_max", "run_seq_max").forall(m.columns.contains)) {
-        val r = m.agg(max(col("pset_seq_max")).cast(LongType),
-          max(col("run_seq_max")).cast(LongType)).head()
-        return (if (r.isNullAt(0)) -1L else r.getLong(0),
-          if (r.isNullAt(1)) -1L else r.getLong(1))
-      }
-    }
-    scanOpt() match {
-      case None => (-1L, -1L)
-      case Some(df) =>
-        val r = df.agg(
-          max(col("_pset_seq")).cast(LongType),
-          max(col("_run_seq")).cast(LongType)).head()
-        (if (r.isNullAt(0)) -1L else r.getLong(0),
-         if (r.isNullAt(1)) -1L else r.getLong(1))
-    }
-  }
-
-  /** Which of `values` already exist in database column `colName`?
-    * One column-pruned scan; the small side is broadcast
-    * (the J1 dedup anti-join and the `_pset_id` collision re-check,
-    * ref psweep.py:1068-1081,1442-1446). For the two manifest-ranged
-    * columns (`_pset_id`, `_pset_hash`) a fresh manifest prunes the
-    * scan to files whose hash range covers some probe — the per-run
-    * skip_dups pre-check reads touched files, not the corpus. */
-  def existingAmong(colName: String, values: Seq[String]): Set[String] = {
-    recover()
-    if (values.isEmpty || !present) return Set.empty
-    val pruned = colName match {
-      case "_pset_id" => prunedFiles("pid_hmin", "pid_hmax", values)
-      case "_pset_hash" => prunedFiles("psh_hmin", "psh_hmax", values)
-      case _ => None
-    }
-    pruned match {
-      case Some(files) if files.isEmpty => Set.empty
-      case Some(files) =>
-        Database.existingAmong(readFiles(files), colName, values)
-      case None => Database.existingAmong(scan(), colName, values)
-    }
-  }
-
   /** Append new rows (one run) as a new `_run_id` partition. When the
     * opt-in skip manifest exists ([[optimizeLayout]] /
     * [[rebuildSkipManifest]]), the new files' stats are appended
@@ -226,8 +177,8 @@ class Database(val spark: SparkSession, val calcDir: String,
     // the commit marker must not attest manifest completeness while the
     // new partition's files exist without manifest rows — drop it
     // BEFORE the data lands; updateSkipManifest re-writes it after the
-    // fresh stats commit (a crash in between degrades lookups to the
-    // listing fallback, never to wrong answers)
+    // fresh stats commit (a crash in between degrades the pruned reads
+    // to the plain scan, never to wrong answers)
     if (Fs.exists(manifestDir)) Fs.delete(commitMarker)
     df.write.mode("append").partitionBy("_run_id").parquet(dbPath)
     updateSkipManifestUnlocked()
@@ -254,18 +205,17 @@ class Database(val spark: SparkSession, val calcDir: String,
     * present ⇒ every data file is covered by manifest rows, because
     * every mutation deletes it BEFORE data lands and re-writes it only
     * AFTER the manifest caught up, all under the single-writer lock.
-    * With the marker, point lookups and the metadata-served reads skip
-    * the per-call full file listing that otherwise finds crash-window
-    * unmanifested files; without it (a crash window, or a pre-marker
-    * manifest) they fall back to the listing — pruning degrades, never
-    * correctness. */
+    * Only with the marker do the manifest-served reads use the manifest;
+    * without it (a crash window, or a pre-marker manifest) they fall
+    * back to the plain scan — pruning degrades, never correctness. */
   private val commitMarker: String = s"$dbPath/_graft_skip_commit"
 
-  /** Columns every post-round-12 manifest carries; an older manifest
-    * lacking them is fully rebuilt on the next maintenance pass. */
+  /** Columns the manifest's readers need; an older manifest lacking
+    * them is fully rebuilt on the next maintenance pass, a manifest
+    * carrying more (older writers kept seq and hash ranges for the
+    * write path) is appended to as it is. */
   private val manifestCols = Seq("file", "rows", "pid_hmin", "pid_hmax",
-    "psh_hmin", "psh_hmax", "pset_seq_max", "run_seq_min", "run_seq_max",
-    "time_utc_max")
+    "run_seq_min", "run_seq_max", "time_utc_max")
 
   private def normalizePath(p: String): String =
     p.replaceFirst("^file:/+", "/")
@@ -282,20 +232,15 @@ class Database(val spark: SparkSession, val calcDir: String,
   private def fileStats(src: DataFrame): DataFrame = {
     def opt(name: String, c: Column, t: DataType): Column =
       if (src.columns.contains(name)) c else lit(null).cast(t)
-    def optLong(name: String, c: Column): Column = opt(name, c, LongType)
     src.select(
         regexp_replace(input_file_name(), "^file:/+", "/").as("file"),
         xxhash64(col("_pset_id")).as("__h"),
-        optLong("_pset_hash", xxhash64(col("_pset_hash"))).as("__ph"),
-        optLong("_pset_seq", col("_pset_seq").cast(LongType)).as("__ps"),
-        optLong("_run_seq", col("_run_seq").cast(LongType)).as("__rs"),
+        opt("_run_seq", col("_run_seq").cast(LongType), LongType).as("__rs"),
         opt("_time_utc", col("_time_utc").cast(TimestampType),
           TimestampType).as("__t"))
       .groupBy(col("file"))
       .agg(count(lit(1)).as("rows"),
         min(col("__h")).as("pid_hmin"), max(col("__h")).as("pid_hmax"),
-        min(col("__ph")).as("psh_hmin"), max(col("__ph")).as("psh_hmax"),
-        max(col("__ps")).as("pset_seq_max"),
         min(col("__rs")).as("run_seq_min"),
         max(col("__rs")).as("run_seq_max"),
         max(col("__t")).as("time_utc_max"))
@@ -319,9 +264,9 @@ class Database(val spark: SparkSession, val calcDir: String,
 
   /** Incremental maintenance: stat only files absent from the
     * manifest (an append's new partition). No-op while the manifest
-    * does not exist — the layout machinery is opt-in. A pre-marker
-    * manifest (missing the seq/hash-range columns) is fully rebuilt
-    * once instead of appended to with a mismatched schema. */
+    * does not exist — the layout machinery is opt-in. A manifest
+    * missing any of [[manifestCols]] is fully rebuilt once instead of
+    * appended to with a mismatched schema. */
   private def updateSkipManifestUnlocked(): Unit = {
     if (!Fs.exists(manifestDir)) return
     Fs.delete(commitMarker)
@@ -340,24 +285,25 @@ class Database(val spark: SparkSession, val calcDir: String,
     Fs.writeString(commitMarker, s"committed=${java.time.Instant.now()}")
   }
 
-  /** Data files whose manifest hash range over (`loCol`, `hiCol`)
-    * covers at least one probe value — served PURELY from manifest
-    * rows, so only meaningful when [[manifestFresh]] attests there are
-    * no unmanifested files; None otherwise (callers fall back to a
-    * scan with listing). */
-  private def prunedFiles(loCol: String, hiCol: String,
-                          probes: Seq[String]): Option[Seq[String]] = {
-    if (!fresh) return None
-    val m = spark.read.parquet(manifestDir)
-    if (!m.columns.contains(loCol)) return None
-    val rows = m.select(col("file"), col(loCol), col(hiCol)).collect()
-    val hs = hashProbes(probes)
-    Some(rows.filter { r =>
-      !r.isNullAt(1) && {
-        val lo = r.getLong(1); val hi = r.getLong(2)
-        hs.exists(h => lo <= h && h <= hi)
-      }
-    }.map(r => normalizePath(r.getString(0))).toSeq)
+  /** `scan().filter(probe)`, read from only the data files whose
+    * manifest row passes `keep` — the one read path of [[lookupAll]],
+    * [[asOf]] and [[changes]]. The manifest is used only when it is
+    * fresh (so it lists every data file) and carries `cols`; otherwise
+    * this is the plain filter scan. `keep` sees one manifest row's
+    * `cols`, in order, and must keep any file that may hold a matching
+    * row (a null bound cannot attest a miss). The probe is always
+    * re-applied — pruning is an optimization, never a filter. */
+  private def pruned(probe: Column, cols: String*)(
+      keep: Row => Boolean): DataFrame = {
+    val m = if (fresh) Some(spark.read.parquet(manifestDir)) else None
+    m.filter(df => cols.forall(df.columns.contains)) match {
+      case None => scan().filter(probe)
+      case Some(df) =>
+        val files = df.select(cols.map(col) :+ col("file"): _*).collect()
+          .filter(keep).map(r => normalizePath(r.getString(cols.size)))
+        if (files.isEmpty) scan().filter(probe).limit(0)
+        else readFiles(files.toIndexedSeq).filter(probe)
+    }
   }
 
   /** xxhash64 of each probe under Spark's own implementation (the one
@@ -410,49 +356,25 @@ class Database(val spark: SparkSession, val calcDir: String,
     }
   }
 
-  /** Point lookup by `_pset_id`, served through the skip manifest when
-    * present: keep files whose hash range covers the probe, PLUS any
-    * file the manifest does not know (a crash window between a data
-    * append and its manifest rows must degrade pruning, never
-    * correctness), re-apply the exact predicate. Falls back to a full
-    * filter scan with no manifest — pruning is an optimization, never
-    * a filter. */
+  /** Point lookup by `_pset_id`, served through a fresh skip manifest:
+    * keep files whose hash range covers the probe, re-apply the exact
+    * predicate ([[pruned]]). Without one (no manifest, or the crash
+    * window between a data append and its manifest rows) it is the
+    * plain filter scan — pruning is an optimization, never a filter. */
   def lookup(psetId: String): DataFrame = lookupAll(Seq(psetId))
 
   /** Batch form of [[lookup]]: rows for ANY of `psetIds`, pruned to
-    * the union of each probe's manifest-matching files (plus
-    * unmanifested files, same crash-window rule). With a clustered
-    * layout, m probes read ~m files of a million-file table instead
-    * of scanning it m times — the shape of a training-run's "fetch
-    * these specific psets" follow-up at 100 TB. */
+    * the union of each probe's manifest-matching files. With a
+    * clustered layout, m probes read ~m files of a million-file table
+    * instead of scanning it m times — the shape of a training-run's
+    * "fetch these specific psets" follow-up at 100 TB. */
   def lookupAll(psetIds: Seq[String]): DataFrame = {
     recover()
     require(psetIds.nonEmpty, "need at least one _pset_id")
-    val probe = col("_pset_id").isin(psetIds: _*)
-    if (!Fs.exists(manifestDir)) return scan().filter(probe)
-    val m = spark.read.parquet(manifestDir)
-      .select(col("file"), col("pid_hmin"), col("pid_hmax")).collect()
-    val hs = hashProbes(psetIds)
-    val kept = m.filter { r =>
-      !r.isNullAt(1) && {
-        val lo = r.getLong(1); val hi = r.getLong(2)
-        hs.exists(h => lo <= h && h <= hi)
-      }
-    }.map(r => r.getString(0))
-    // commit marker present: the manifest covers every data file, so
-    // the lookup is served purely from manifest rows — no per-call
-    // full file listing. Absent (a crash window between an append and
-    // its manifest rows, or a pre-marker manifest): enumerate and
-    // include unmanifested files — pruning degrades, never correctness.
-    val unknown =
-      if (Fs.exists(commitMarker)) Array.empty[String]
-      else {
-        val known = m.map(r => normalizePath(r.getString(0))).toSet
-        scan().inputFiles.map(normalizePath).filterNot(known)
-      }
-    val files = (kept.map(normalizePath) ++ unknown).distinct
-    if (files.isEmpty) scan().filter(probe).limit(0)
-    else readFiles(files.toIndexedSeq).filter(probe)
+    lazy val hs = hashProbes(psetIds)
+    pruned(col("_pset_id").isin(psetIds: _*), "pid_hmin", "pid_hmax") { r =>
+      r.isNullAt(0) || hs.exists(h => r.getLong(0) <= h && h <= r.getLong(1))
+    }
   }
 
   /** Time travel: the database as of run `runSeq` — every row with
@@ -475,19 +397,9 @@ class Database(val spark: SparkSession, val calcDir: String,
     * filter. */
   def asOf(runSeq: Long): DataFrame = { recover(); asOfRecovered(runSeq) }
 
-  private def asOfRecovered(runSeq: Long): DataFrame = {
-    val probe = col("_run_seq") <= runSeq
-    if (!fresh) return scan().filter(probe)
-    val m = spark.read.parquet(manifestDir)
-    if (!m.columns.contains("run_seq_min")) return scan().filter(probe)
-    val files = m.select(col("file"), col("run_seq_min")).collect()
-      // a null per-file min cannot attest the file is all-future —
-      // keep it (pruning degrades, the re-applied predicate corrects)
-      .filter(r => r.isNullAt(1) || r.getLong(1) <= runSeq)
-      .map(r => normalizePath(r.getString(0))).toIndexedSeq
-    if (files.isEmpty) scan().filter(probe).limit(0)
-    else readFiles(files).filter(probe)
-  }
+  private def asOfRecovered(runSeq: Long): DataFrame =
+    pruned(col("_run_seq") <= runSeq, "run_seq_min")(r =>
+      r.isNullAt(0) || r.getLong(0) <= runSeq)
 
   /** Time travel by WALL CLOCK: the database as of instant `ts` —
     * [[asOf]] of the latest run whose COMMIT TIME (the max `_time_utc`
@@ -563,27 +475,13 @@ class Database(val spark: SparkSession, val calcDir: String,
     recover()
     require(afterRun <= untilRun,
       s"empty change interval: afterRun=$afterRun > untilRun=$untilRun")
-    val probe = col("_run_seq") > afterRun && col("_run_seq") <= untilRun
-    if (!fresh) return scan().filter(probe)
-    val m = spark.read.parquet(manifestDir)
-    // both range bounds must exist (an older or externally-built
-    // manifest carrying only the min must degrade to the filter scan,
-    // not throw — mirrors the counters() schema guard)
-    if (!Seq("run_seq_min", "run_seq_max").forall(m.columns.contains))
-      return scan().filter(probe)
-    val files = m.select(col("file"), col("run_seq_min"), col("run_seq_max"))
-      .collect()
-      .filter { r =>
-        // keep a file iff [min, max] OVERLAPS (afterRun, untilRun]:
-        // its latest row is past afterRun AND its earliest row is
-        // within untilRun (a null bound cannot attest non-overlap)
-        val maxAfter = r.isNullAt(2) || r.getLong(2) > afterRun
-        val minUntil = r.isNullAt(1) || r.getLong(1) <= untilRun
-        maxAfter && minUntil
-      }
-      .map(r => normalizePath(r.getString(0))).toIndexedSeq
-    if (files.isEmpty) scan().filter(probe).limit(0)
-    else readFiles(files).filter(probe)
+    // keep a file iff [min, max] OVERLAPS (afterRun, untilRun]: its
+    // latest row is past afterRun AND its earliest row is within untilRun
+    pruned(col("_run_seq") > afterRun && col("_run_seq") <= untilRun,
+        "run_seq_min", "run_seq_max") { r =>
+      (r.isNullAt(1) || r.getLong(1) > afterRun) &&
+        (r.isNullAt(0) || r.getLong(0) <= untilRun)
+    }
   }
 
   /** Manifest-served variants of the point extractors (the static

@@ -147,11 +147,8 @@ final class Study(val spark: SparkSession, val cfg: StudyConfig) {
     val hashes = norm.map(PsetHash.hash(_))
 
     // 3.1-4/5: load-or-create (from the in-memory base when one is
-    // given, else from disk). A fresh skip manifest is the opt-in scale
-    // path: it serves the counters and the hash-range-pruned pre-checks
-    // without scanning the base.
+    // given, else from disk).
     var base: Option[DataFrame] = baseDf.orElse(db.readOpt())
-    val ranged = baseDf.isEmpty && db.manifestFresh
 
     // 3.1-6: backup before mutating (ref psweep.py:1417-1427).
     if (cfg.backup) db.backup()
@@ -191,20 +188,11 @@ final class Study(val spark: SparkSession, val cfg: StudyConfig) {
     // 3.1-7/8b/9: counters (ref psweep.py:1409-1415), skip_dups hits
     // (ref psweep.py:1432-1439) and `_pset_id` collisions of a candidate
     // id drawn for every incoming pset (ref psweep.py:1441-1450) — one
-    // pre-write scan of the (rehashed) base, or the manifest's metadata.
+    // pre-write scan of the (rehashed) base, skip manifest or not (the
+    // manifest only prunes reads).
     val drawn = norm.map(_ => UUID.randomUUID().toString)
-    def collisions(ids: Seq[String]): Set[String] =
-      if (ranged) db.existingAmong("_pset_id", ids)
-      else base.map(Database.existingAmong(_, "_pset_id", ids))
-        .getOrElse(Set.empty)
-    val pre =
-      if (ranged) {
-        val (psetSeq, runSeq) = db.counters()
-        Study.PreWrite(psetSeq, runSeq,
-          if (cfg.skipDups) db.existingAmong("_pset_hash", hashes)
-          else Set.empty, Set.empty)
-      } else base.fold(Study.PreWrite(-1L, -1L, Set.empty, Set.empty))(
-        Study.preWriteScan(_, if (cfg.skipDups) hashes else Seq.empty, drawn))
+    val pre = base.fold(Study.PreWrite(-1L, -1L, Set.empty, Set.empty))(
+      Study.preWriteScan(_, if (cfg.skipDups) hashes else Seq.empty, drawn))
     val keptIdx = norm.indices.filter(i => !pre.dupHashes.contains(hashes(i)))
     if (keptIdx.isEmpty)
       return RunOutput(base.getOrElse(ValueSchema.toDF(spark, Seq.empty)),
@@ -215,12 +203,12 @@ final class Study(val spark: SparkSession, val cfg: StudyConfig) {
     val runId = UUID.randomUUID().toString
     if (cfg.git) Git.noteRun(runId)
     var psetIds = keptIdx.map(drawn)
-    var colliding =
-      if (ranged) collisions(psetIds) else psetIds.toSet & pre.idHits
+    var colliding = psetIds.toSet & pre.idHits
     while (colliding.nonEmpty) {
       psetIds = psetIds.map(id =>
         if (colliding.contains(id)) UUID.randomUUID().toString else id)
-      colliding = collisions(psetIds)
+      colliding = base.fold(Set.empty[String])(
+        Database.existingAmong(_, "_pset_id", psetIds))
     }
     val runSeq = pre.maxRunSeq + 1
     val work: Seq[Map[String, Any]] = keptIdx.zipWithIndex.map {

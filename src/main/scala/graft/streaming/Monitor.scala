@@ -605,7 +605,6 @@ object Monitor {
   def tailDatabase(db: graft.core.Database): DataFrame =
     db.spark.readStream
       .schema(db.read().schema)
-      .option("mergeSchema", "true")
       .parquet(db.dbPath)
 
   /** Stream labeled documents into the persisted ONLINE CLASSIFIER at

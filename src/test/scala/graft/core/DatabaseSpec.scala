@@ -130,57 +130,6 @@ class DatabaseSpec extends AnyFunSuite {
     assert(db.lookupAll(Seq("p0-1234", "p1-77")).count() == 2L)
   }
 
-  test("metadata-served reads: counters and the ranged existingAmong " +
-    "come from the manifest when the marker attests completeness — " +
-    "zero data files touched; marker gone -> scan fallback sees " +
-    "everything") {
-    val calc = tmpDir("graft-dbmeta-")
-    val db = Database(spark, calc)
-    def runDf(runSeq: Int, n: Int) =
-      spark.range(0, n).select(
-        concat(lit(s"p$runSeq-"), col("id")).as("_pset_id"),
-        concat(lit(s"h$runSeq-"), col("id")).as("_pset_hash"),
-        (col("id") + runSeq * 1000).as("_pset_seq"),
-        lit(runSeq.toLong).as("_run_seq"),
-        lit(s"run$runSeq").as("_run_id"),
-        col("id").cast("double").as("x"))
-    db.append(runDf(0, 200))
-    db.rebuildSkipManifest()
-    db.append(runDf(1, 100)) // incremental manifest rows carry the maxima
-    assert(db.manifestFresh)
-    assert(db.counters() == (1099L, 1L))
-
-    // the zero-data-files pin: smuggle a foreign partition with huge
-    // seqs in behind the protocol's back; manifest-served counters and
-    // membership checks do not see it (no listing, no data read) —
-    // under the single-writer contract such a file cannot exist except
-    // in a crash window, which always removes the marker first
-    runDf(7, 5).coalesce(1).write.mode("append")
-      .partitionBy("_run_id").parquet(db.dbPath)
-    assert(db.counters() == (1099L, 1L))
-    assert(db.existingAmong("_pset_hash", Seq("h7-1", "h1-5")) ==
-      Set("h1-5"))
-    assert(db.existingAmong("_pset_id", Seq("p7-1", "p0-3")) ==
-      Set("p0-3"))
-    // ranged membership reads only covering files, not the corpus
-    assert(db.manifestFresh)
-
-    // crash state (no marker): fallback scan sees the foreign rows
-    Fs.delete(s"${db.dbPath}/_graft_skip_commit")
-    assert(db.counters() == (7004L, 7L))
-    assert(db.existingAmong("_pset_hash", Seq("h7-1")) == Set("h7-1"))
-    // maintenance re-attests and folds the stray files in
-    db.rebuildSkipManifest()
-    assert(db.manifestFresh)
-    assert(db.counters() == (7004L, 7L))
-    assert(db.existingAmong("_pset_id", Seq("p7-1")) == Set("p7-1"))
-
-    // a column the manifest has no ranges for still works (full scan)
-    assert(db.existingAmong("_run_id", Seq("run1", "zzz")) == Set("run1"))
-    // and a db without _pset_hash history: missing column -> empty
-    assert(db.existingAmong("no_such_col", Seq("v")) == Set.empty)
-  }
-
   test("asOf: time travel over the run log — history is exact, future " +
     "partitions' files are never read with a fresh manifest, and the " +
     "crash window falls back to the filter scan") {
@@ -296,9 +245,68 @@ class DatabaseSpec extends AnyFunSuite {
   test("existingAmong: dedup membership via semi-join (J1)") {
     val (db, _) = mkDb()
     val hashes = db.read().select("_pset_hash").collect().map(_.getString(0))
-    val found = db.existingAmong("_pset_hash", hashes.take(2).toSeq :+ "nope")
+    val found = Database.existingAmong(db.read(), "_pset_hash",
+      hashes.take(2).toSeq :+ "nope")
     assert(found == hashes.take(2).toSet)
-    assert(db.existingAmong("no_such_col", Seq("x")).isEmpty)
+    assert(Database.existingAmong(db.read(), "no_such_col", Seq("x")).isEmpty)
+  }
+
+  test("skip manifest: an older manifest with seq and hash ranges is kept") {
+    val calc = tmpDir("graft-dbmanifest-older-")
+    val db = Database(spark, calc)
+    def runDf(runSeq: Int, n: Int) =
+      spark.range(0, n).select(
+        concat(lit(s"p$runSeq-"), col("id")).as("_pset_id"),
+        concat(lit(s"h$runSeq-"), col("id")).as("_pset_hash"),
+        (col("id") + runSeq * 10000).as("_pset_seq"),
+        lit(runSeq.toLong).as("_run_seq"),
+        lit(s"run$runSeq").as("_run_id"),
+        col("id").cast("double").as("x"))
+    db.append(runDf(0, 4000))
+    db.optimizeLayout(numFiles = 16)
+    // the manifest as older writers left it: per-file _pset_hash ranges
+    // and _pset_seq maxima beside the columns read today
+    val skip = s"${db.dbPath}/_graft_skip"
+    spark.read.parquet(skip)
+      .withColumn("psh_hmin", col("pid_hmin"))
+      .withColumn("psh_hmax", col("pid_hmax"))
+      .withColumn("pset_seq_max", lit(3999L))
+      .write.parquet(s"$calc/older_skip")
+    Fs.delete(skip)
+    Fs.rename(s"$calc/older_skip", skip)
+    assert(db.manifestFresh)
+    db.append(runDf(1, 500).coalesce(2))
+    db.append(runDf(2, 100).coalesce(1))
+    assert(db.manifestFresh)
+    // appended to, not rebuilt: the 16 older rows keep their columns
+    val m = spark.read.option("mergeSchema", "true").parquet(skip)
+    assert(m.count() == db.read().inputFiles.length.toLong)
+    assert(m.filter(col("pset_seq_max").isNotNull).count() == 16L)
+
+    val cols = db.read().columns.map(col)
+    def assertScanRows(pruned: org.apache.spark.sql.DataFrame,
+                       probe: org.apache.spark.sql.Column): Unit = {
+      val a = pruned.select(cols: _*)
+      val b = db.read().filter(probe).select(cols: _*)
+      assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
+    }
+    def runFiles(r: Int) =
+      db.read().inputFiles.filter(_.contains(s"_run_id=run$r")).sorted.toSeq
+    val probe = db.lookup("p0-1234")
+    assertScanRows(probe, col("_pset_id") === "p0-1234")
+    assert(probe.count() == 1L)
+    assert(probe.inputFiles.count(_.contains("_run_id=run0")) == 1,
+      probe.inputFiles.mkString(", "))
+    val batch = db.lookupAll(Seq("p0-42", "p1-77", "p2-3"))
+    assertScanRows(batch, col("_pset_id").isin("p0-42", "p1-77", "p2-3"))
+    assert(batch.count() == 3L)
+    val h = db.asOf(0L)
+    assertScanRows(h, col("_run_seq") <= 0L)
+    assert(h.inputFiles.sorted.toSeq == runFiles(0))
+    val d = db.changes(0L, 1L)
+    assertScanRows(d, col("_run_seq") === 1L)
+    assert(d.inputFiles.sorted.toSeq == runFiles(1))
+    assert(db.changes(1L).inputFiles.sorted.toSeq == runFiles(2))
   }
 
   test("dfFilterConds: and/or/xor fusion (P1)") {
@@ -428,8 +436,14 @@ class DatabaseSpec extends AnyFunSuite {
   test("counters on empty database") {
     val db = Database(spark, tmpDir("graft-empty-"))
     assert(!db.exists)
-    assert(db.counters() == (-1L, -1L))
-    assert(db.existingAmong("_pset_hash", Seq("x")).isEmpty)
+    assert(db.readOpt().isEmpty)
+    // a base without rows: no counters, no hash or id found
+    val empty = db.spark.range(0).select(
+      col("id").as("_pset_seq"), col("id").as("_run_seq"),
+      col("id").cast("string").as("_pset_hash"),
+      col("id").cast("string").as("_pset_id"))
+    assert(Study.preWriteScan(empty, Seq("x"), Seq("y")) ==
+      Study.PreWrite(-1L, -1L, Set.empty, Set.empty))
   }
 
   test("git integration: auto-commit before, run-id commit after (E10)") {

@@ -304,25 +304,60 @@ class StudySpec extends AnyFunSuite {
       col("a") % 2 === 0), Seq(2L, 4L)) == Seq((4L, 1L), (5L, 1L)))
   }
 
-  test("pre-write scan: a fresh skip manifest keeps the ranged path") {
-    val calc = tmpDir("graft-prewrite-manifest-")
+  test("pre-write scan: a manifest db round equals a manifest-less one") {
+    val cfg = StudyConfig(skipDups = true)
+    val Seq(plain, manifested) = Seq("plain", "manifest").map(n =>
+      Study(spark, cfg.copy(calcDir = tmpDir(s"graft-prewrite-$n-"))))
+    Seq(plain, manifested).foreach(_.run(f1, Grid.plist("a", Seq(1, 2, 3, 4))))
+    manifested.database.optimizeLayout(numFiles = 2)
+    assert(manifested.database.manifestFresh)
+    assert(!plain.database.hasSkipManifest)
+    val next = Grid.plist("a", Seq(3, 4, 5, 6))
+    val p = plain.run(f1, next)
+    manifested.database.read()
+    var m: RunOutput = null
+    val (queries, jobs) = Jobs.count(spark.sparkContext)(plans {
+      m = manifested.run(f1, next)
+    })
+    // the plain round's 5 (its footer merge moves into the upkeep's
+    // listing), plus the manifest upkeep on append: the manifest read,
+    // its known-file collect, the new files' footer merge and the stats
+    // write (map stage and result)
+    assert(jobs == 10, s"$jobs jobs")
+    assert(queries.count(_.contains("collect_set")) == 1)
+    assert(!queries.exists(_.contains("pset_seq_max")))
+    assert(m.executed == 2 && p.executed == 2)
+    assert(seqs(m.db, Seq(3L, 4L, 5L, 6L)) == seqs(p.db, Seq(3L, 4L, 5L, 6L)))
+    def hashes(o: RunOutput) =
+      o.db.select("_pset_hash").collect().map(_.getString(0)).toSet
+    assert(hashes(m) == hashes(p))
+    assert(manifested.database.manifestFresh)
+  }
+
+  test("pre-write scan: a crashed append's foreign rows are seen next round") {
+    val calc = tmpDir("graft-prewrite-crash-")
     val study = Study(spark, StudyConfig(calcDir = calc, skipDups = true))
-    study.run(f1, Grid.plist("a", Seq(1, 2, 3, 4)))
-    study.database.optimizeLayout(numFiles = 2)
-    assert(study.database.manifestFresh)
-    study.database.read()
-    var out: RunOutput = null
-    val queries = plans {
-      out = study.run(f1, Grid.plist("a", Seq(3, 4, 5, 6)))
-    }
-    // counters and both pre-checks are served by the manifest and the
-    // hash-range-pruned existingAmong, never by the pre-write scan
-    assert(!queries.exists(_.contains("collect_set")))
-    assert(queries.exists(_.contains("pset_seq_max")))
-    assert(out.executed == 2)
-    assert(out.db.count() == 6)
-    assert(seqs(out.db, Seq(5L, 6L)) == Seq((4L, 1L), (5L, 1L)))
-    assert(study.database.manifestFresh)
+    study.run(f1, Grid.plist("a", Seq(1, 2)))
+    val db = study.database
+    db.optimizeLayout(numFiles = 2)
+    // an append's crash state: its file landed past the manifest, and
+    // the commit marker is gone (appends drop it before writing)
+    val foreign = db.read().filter(col("a") === 1L).withColumn("a", lit(9L))
+    foreign.withColumn("_pset_hash", PsetHash.expr(foreign.columns.toSeq))
+      .withColumn("_pset_id", lit("foreign-9"))
+      .withColumn("_pset_seq", lit(100L))
+      .withColumn("_run_seq", lit(7L))
+      .withColumn("_run_id", lit("run-foreign"))
+      .coalesce(1).write.mode("append").partitionBy("_run_id")
+      .parquet(db.dbPath)
+    Fs.delete(s"${db.dbPath}/_graft_skip_commit")
+    val out = study.run(f1, Grid.plist("a", Seq(9, 10)))
+    // {a: 9} is the foreign row's pset; {a: 10} numbers after its seqs
+    assert(out.executed == 1)
+    assert(seqs(out.db, Seq(9L, 10L)) == Seq((100L, 7L), (101L, 8L)))
+    // the append's manifest upkeep folded the foreign file in
+    assert(db.manifestFresh)
+    assert(db.lookup("foreign-9").inputFiles.length == 1)
   }
 
   test("type conflict on shared column is rejected") {
