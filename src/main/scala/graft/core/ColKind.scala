@@ -16,7 +16,6 @@ object ColKind extends Enumeration {
 
   def isPset(name: String): Boolean = of(name) == Pset
   def isPrefix(name: String): Boolean = of(name) == Prefix
-  def isPostfix(name: String): Boolean = of(name) == Postfix
 
   /** Select column names of one kind, preserving input order
     * (ref psweep.py:877-898 `filter_cols`). */

@@ -302,7 +302,8 @@ class Database(val spark: SparkSession, val calcDir: String,
         val files = df.select(cols.map(col) :+ col("file"): _*).collect()
           .filter(keep).map(r => normalizePath(r.getString(cols.size)))
         if (files.isEmpty) scan().filter(probe).limit(0)
-        else readFiles(files.toIndexedSeq).filter(probe)
+        else spark.read.option("basePath", dbPath).schema(scan().schema)
+          .parquet(files.toIndexedSeq: _*).filter(probe)
     }
   }
 
@@ -312,10 +313,6 @@ class Database(val spark: SparkSession, val calcDir: String,
     spark.createDataset(vs.distinct)(
         org.apache.spark.sql.Encoders.STRING)
       .select(xxhash64(col("value"))).collect().map(_.getLong(0))
-
-  private def readFiles(files: Seq[String]): DataFrame =
-    spark.read.option("basePath", dbPath)
-      .option("mergeSchema", "true").parquet(files.toIndexedSeq: _*)
 
   /** Opt-in clustered rewrite of the whole db into ~`numFiles` files,
     * plus a fresh skip manifest. Default clustering key is

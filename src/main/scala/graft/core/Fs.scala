@@ -64,19 +64,6 @@ object Fs {
 
   /** Raw byte IO for small model artifacts (Bloom bitmaps, codebooks) —
     * driver-side files, NOT data-plane parquet. */
-  def writeBytes(path: String, bytes: Array[Byte]): Unit = {
-    val f = fs(path)
-    val p = new Path(path)
-    if (p.getParent != null) f.mkdirs(p.getParent)
-    val out = f.create(p, true)
-    try out.write(bytes) finally out.close()
-  }
-
-  def readBytes(path: String): Array[Byte] = {
-    val in = fs(path).open(new Path(path))
-    try in.readAllBytes() finally in.close()
-  }
-
   def rename(src: String, dst: String): Unit = {
     require(fs(src).rename(new Path(src), new Path(dst)),
       s"rename failed: $src -> $dst")

@@ -16,31 +16,23 @@ import org.apache.spark.sql.Dataset
   * FAILS instead of recomputing. On `local[*]` the executor is the
   * driver, so the distinction is moot.
   *
-  * `spark.graft.pin.reliable` picks the trade per session:
-  *   - `auto` (default): reliable `checkpoint()` when the session has a
-  *     checkpoint dir (`SparkContext.setCheckpointDir` — the cluster
-  *     deployment shape, where the dir points at durable shared
-  *     storage and pins survive executor loss), `localCheckpoint()`
-  *     otherwise (single-JVM runs; an executor loss aborts loudly
-  *     instead of recomputing through lost state). This is
-  *     [[graft.ops.Tokenize]]'s long-standing `truncateLineage` rule,
-  *     promoted engine-wide.
-  *   - `true`: always reliable — fails fast if no checkpoint dir is
-  *     set, instead of silently degrading to non-fault-tolerant pins.
-  *   - `false`: always executor-local, even with a checkpoint dir
-  *     (bench/CI shape: the dir may exist for other tooling, pins
-  *     should stay cheap).
+  * The trade follows the session: a reliable `checkpoint()` when it
+  * has a checkpoint dir (`SparkContext.setCheckpointDir` — the cluster
+  * deployment shape, where the dir points at durable shared storage
+  * and pins survive executor loss), `localCheckpoint()` otherwise
+  * (single-JVM runs; an executor loss aborts loudly instead of
+  * recomputing through lost state). This is [[graft.ops.Tokenize]]'s
+  * long-standing `truncateLineage` rule, promoted engine-wide.
   *
-  * Values are identical in all modes — both checkpoints materialize
-  * the SAME rows this plan computed; only where the blocks live (and
-  * hence what survives executor loss) differs. PinSpec pins the mode
-  * selection and value-identity.
+  * Values are identical either way — both checkpoints materialize the
+  * SAME rows this plan computed; only where the blocks live (and hence
+  * what survives executor loss) differs. An eager reliable checkpoint
+  * writes its files in the job that computes the plan, so it needs no
+  * cache to avoid a second computation. PinSpec pins the selection,
+  * value-identity, and that a reliable pin computes its plan once.
   */
 object Pin {
   def pin[T](ds: Dataset[T]): Dataset[T] = {
-    val spark = ds.sparkSession
-    val mode = spark.conf.get("spark.graft.pin.reliable", "auto")
-    val hasDir = spark.sparkContext.getCheckpointDir.isDefined
     // label the eager materialization job with the CALLER's site — the
     // helper would otherwise collapse every pin in the engine onto one
     // "localCheckpoint at Pin.scala" line in the UI and the job-level
@@ -54,22 +46,12 @@ object Pin {
       }
       .map(e => s"${e.getFileName}:${e.getLineNumber}")
       .getOrElse("unknown")
-    val sc = spark.sparkContext
+    val sc = ds.sparkSession.sparkContext
     val prevDesc = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription(s"pin at $site")
-    try mode match {
-      case "true" =>
-        require(hasDir,
-          "spark.graft.pin.reliable=true needs a checkpoint dir — call " +
-            "SparkContext.setCheckpointDir(<durable shared path>) first " +
-            "(silently falling back to executor-local pins would defeat " +
-            "the reliability the conf asked for)")
-        ds.checkpoint(eager = true)
-      case "false" => ds.localCheckpoint(true)
-      case "auto" =>
-        if (hasDir) ds.checkpoint(eager = true) else ds.localCheckpoint(true)
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.pin.reliable must be auto|true|false, got '$other'")
+    try {
+      if (sc.getCheckpointDir.isDefined) ds.checkpoint(eager = true)
+      else ds.localCheckpoint(true)
     } finally sc.setJobDescription(prevDesc)
   }
 

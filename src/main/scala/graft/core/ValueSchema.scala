@@ -150,12 +150,6 @@ object ValueSchema {
       throw new IllegalArgumentException(s"cannot normalize $other to $t")
   }
 
-  /** Normalize a whole pset against a schema (missing keys -> null). */
-  def normalizePset(pset: Map[String, Any], schema: StructType): Map[String, Any] =
-    schema.fields.toSeq.flatMap { f =>
-      pset.get(f.name).map(v => f.name -> normalize(v, f.dataType))
-    }.toMap
-
   /** Bridge: pset list -> DataFrame with the inferred union schema. */
   def toDF(spark: SparkSession, psets: Seq[Map[String, Any]]): DataFrame = {
     val schema = infer(psets)

@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions._
   *   - sparse training ([[trainLogisticSparse]]) — batch gradient
   *     descent over index features, O(parts · d) per iteration — the
   *     2^18-bin hashing-trick regime where a Hessian cannot exist;
-  *   - scoring — [[marginExpr]]/[[scoreExpr]] inline small dense models
+  *   - scoring — [[marginExpr]] inlines small dense models
   *     into whole-stage codegen; [[scoreSparse]] scores index features
   *     via explode → broadcast weight join → map-side partial sum, the
   *     plan that survives a 100 TB corpus and a 2^18-entry model.
@@ -111,9 +111,8 @@ object Classifier {
     *     scheduler round-trips per iteration with microseconds of
     *     compute each (x iterations x concurrent CV folds). The
     *     partition count now derives from the DATA and the trainer's
-    *     per-row cost (`ceil(sum(unitsOf(row)) /
-    *     spark.graft.train.taskWorkUnits)`, default 2^23 multiply-adds
-    *     ≈ a few ms of compute per task, capped at
+    *     per-row cost (`ceil(sum(unitsOf(row)) / 2^23)`, 2^23
+    *     multiply-adds ≈ a few ms of compute per task, capped at
     *     `defaultParallelism`): tiny frames train in one task per
     *     iteration, a dense-Hessian trainer with its O(d²) row cost
     *     spreads sooner than a sparse-gradient one, corpus-scale
@@ -152,9 +151,7 @@ object Classifier {
       ds: org.apache.spark.sql.Dataset[T])(unitsOf: T => Long)
       : org.apache.spark.rdd.RDD[T] = {
     val sc = ds.sparkSession.sparkContext
-    val taskWorkUnits = ds.sparkSession.conf
-      .get("spark.graft.train.taskWorkUnits", (1L << 23).toString).toLong
-    require(taskWorkUnits > 0, "spark.graft.train.taskWorkUnits must be > 0")
+    val taskWorkUnits = 1L << 23
     val level = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val raw = ds.rdd.persist(level)
     // materializes the cache; the units total drives the spread
@@ -431,10 +428,6 @@ object Classifier {
     model.weights.zipWithIndex.foldLeft(lit(model.bias)) {
       case (acc, (w, i)) => acc + lit(w) * element_at(features, i + 1)
     }
-
-  /** `sigmoid(margin)` over [[marginExpr]]. */
-  def scoreExpr(features: Column, model: LogisticModel): Column =
-    lit(1.0) / (lit(1.0) + exp(-marginExpr(features, model)))
 
   /** Score sparse index features at scale: explode the indices, join
     * the broadcast (index → weight) table, re-aggregate per row key —
@@ -1014,9 +1007,7 @@ object Classifier {
     * value is engine-reproducible at the bit level. Scale shape: the
     * group relation is bounded by DISTINCT scores — right for
     * quantized scores (integer-count margins, binned/decile scores);
-    * raw continuous scores should be binned first — [[aucBinned]] does
-    * exactly that (KLL quantile edges → bucket → this) and is the safe
-    * default when the score domain is unknown (the ordering window
+    * raw continuous scores should be binned first (the ordering window
     * over the group relation is single-partition by construction).
     * Null scores/labels are excluded; a frame with no positives or no
     * negatives has no defined AUC (the output divides by zero — NaN),
@@ -1051,41 +1042,6 @@ object Classifier {
           (col("n_pos") + lit(1)).cast("double") / lit(2.0))
           / (col("n_pos").cast("double") * col("n_neg").cast("double")))
           .as("auc"))
-  }
-
-  /** [[aucExact]] with the "bin continuous scores first" contract
-    * built in: a KLL sketch ([[Quantile]]) of the score distribution
-    * yields `bins − 1` quantile edges (one map-side-combined
-    * aggregate, a few-KiB blob to the driver), scores are bucketed by
-    * edge count — a codegen'd monotone projection, ties never split —
-    * and [[aucExact]] runs over the BIN INDICES, so its group relation
-    * is bounded by `bins` regardless of how many distinct raw scores
-    * the corpus holds. The binning coarsens ties: pairs whose scores
-    * fall in one bin count ½ instead of their true order, an error
-    * that vanishes as `bins` grows (spec pins ≈ at 1024 bins on a
-    * continuous margin, and EQUALITY when the distinct scores already
-    * fit the bins and each carries enough mass for an edge). Scores
-    * already quantized (integer-count margins, deciles) can call
-    * [[aucExact]] directly. */
-  def aucBinned(df: DataFrame, scoreCol: String, labelCol: String,
-                bins: Int = 1024, sketchK: Int = 4096): DataFrame = {
-    require(bins >= 2, "need at least 2 bins")
-    val s = col(scoreCol).cast("double")
-    val y = col(labelCol).cast("boolean")
-    val valid = df.filter(s.isNotNull && !isnan(s) && y.isNotNull)
-      .select(s.as("__s"), y.as("__y"))
-    val blob = valid.agg(Quantile.kllAgg(col("__s"), sketchK).as("sk"))
-      .head().getAs[Array[Byte]](0)
-    val buf = Quantile.fromBlob(blob)
-    val edges = (1 until bins).iterator
-      .map(i => Quantile.quantileOf(buf, i.toDouble / bins))
-      .collect { case d: Double => d }.toSeq.distinct.sorted
-    // empty/constant-score input: no edges — one bin IS the binning
-    val bin =
-      if (edges.isEmpty) lit(0.0)
-      else size(filter(typedLit(edges), e => col("__s") > e))
-        .cast("double")
-    aucExact(valid.select(bin.as("__bin"), col("__y")), "__bin", "__y")
   }
 
   /** Calibration (reliability) curve: rows bucketed into `bins`
@@ -1606,8 +1562,7 @@ object Classifier {
   }
 
   /** [[fitHistogramCalibration]] with the edges DERIVED from the score
-    * distribution — the [[aucBinned]] discipline applied to
-    * calibration: a KLL sketch (one map-side-combined aggregate, a
+    * distribution: a KLL sketch (one map-side-combined aggregate, a
     * few-KiB blob to the driver) yields up to `bins − 1` quantile
     * edges, so the bins are equal-mass wherever the scores allow and
     * the caller never has to know the score domain. A constant-score
@@ -1646,10 +1601,9 @@ object Classifier {
 
   /** Class `c`'s one-vs-rest decision margin off a logits ARRAY
     * column: `logit_c − max(other logits)` — positive iff class c wins
-    * the argmax STRICTLY. The scoring face of
-    * [[fitSoftmaxCalibration]]; a pure projection, so the calibrated
-    * router serves as the same codegen'd literal chain the binary
-    * pipeline does. */
+    * the argmax STRICTLY. A pure projection, so the calibrated router
+    * serves as the same codegen'd literal chain the binary pipeline
+    * does. */
   def softmaxClassMargin(logits: Column, c: Int,
                          numClasses: Int): Column = {
     require(c >= 0 && c < numClasses, s"class $c outside [0, $numClasses)")
@@ -1657,58 +1611,6 @@ object Classifier {
     val others = (0 until numClasses).filter(_ != c)
       .map(o => element_at(logits, o + 1))
     mine - others.reduce(greatest(_, _))
-  }
-
-  /** Per-class one-vs-rest histogram calibration for a MULTICLASS
-    * router's OOF logits — the q_doc_classifier_pipeline calibration
-    * step on the softmax lifecycle (the round-14 gap: the binary
-    * classifier deployed calibrated, the router deployed raw argmax
-    * scores). Class c's score is [[softmaxClassMargin]]; its label is
-    * the one-vs-rest `label == c`; binning is the same strict-`> edge`
-    * convention as [[fitHistogramCalibration]]. ONE keyed aggregate
-    * over the exploded (class, bin) pairs — the collect is bounded by
-    * `numClasses · (edges + 1)` rows, so the fit costs a single pass
-    * however many classes. Null/NaN margins and null labels are
-    * excluded per class; an empty bin inherits that class's prior.
-    * Returns one [[CalibrationModel]] per class, servable with
-    * [[calibratedExpr]] over the same margin expression. */
-  def fitSoftmaxCalibration(df: DataFrame, logitsCol: String,
-                            labelCol: String, numClasses: Int,
-                            edges: Seq[Double]): Seq[CalibrationModel] = {
-    require(numClasses >= 2, "need at least 2 classes")
-    require(edges.nonEmpty && edges == edges.distinct.sorted,
-      "edges must be non-empty and strictly increasing")
-    val perClass = explode(array((0 until numClasses).map { c =>
-      struct(lit(c).as("cls"),
-        softmaxClassMargin(col(logitsCol), c, numClasses).as("m"),
-        (col(labelCol).cast("int") === c).as("y"))
-    }: _*))
-    val bin = size(filter(typedLit(edges), e => col("m") > e))
-    val rows = df.select(perClass.as("e"))
-      .select(col("e.cls").as("cls"), col("e.m").as("m"),
-        col("e.y").as("y"))
-      .filter(col("m").isNotNull && !isnan(col("m")) &&
-        col("y").isNotNull)
-      .groupBy(col("cls"), bin.as("__b"))
-      .agg(count(lit(1)).as("__n"),
-        sum(when(col("y"), 1L).otherwise(0L)).as("__np"))
-      .collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getLong(3)))
-    (0 until numClasses).map { c =>
-      val mine = rows.filter(_._1 == c)
-      val n = mine.map(_._3).sum
-      val np = mine.map(_._4).sum
-      require(n > 0, s"cannot calibrate class $c on an empty frame")
-      val prior = np.toDouble / n
-      val byBin = mine.map(t => t._2 -> (t._3, t._4)).toMap
-      val rates = (0 to edges.length).map { b =>
-        byBin.get(b) match {
-          case Some((bn, bp)) => bp.toDouble / bn
-          case None => prior // empty bin: the documented prior fallback
-        }
-      }
-      CalibrationModel(edges, rates, prior)
-    }
   }
 
   /** The calibrated probability of a score — a codegen'd literal

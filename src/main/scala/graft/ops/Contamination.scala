@@ -7,7 +7,7 @@ import org.apache.spark.sql.graftshim.shim
 
 /** Benchmark-contamination detection and removal for training corpora:
   * find training documents sharing n-gram shingles with an evaluation
-  * set, report overlap, drop the contaminated.
+  * set and report the overlap.
   *
   * Scale shape: the benchmark side is small (eval sets are thousands of
   * documents), so its exploded shingle set broadcasts; the corpus is
@@ -30,15 +30,6 @@ object Contamination {
       .groupBy(col("id"))
       .agg(count(lit(1)).as("shared_shingles"))
       .filter(col("shared_shingles") >= minShared)
-  }
-
-  /** Drop contaminated documents from the corpus. */
-  def decontaminate(corpus: DataFrame, benchmark: DataFrame, n: Int,
-                    minShared: Int, textCol: String = "text",
-                    idCol: String = "doc_id"): DataFrame = {
-    val bad = report(corpus, benchmark, n, minShared, textCol, idCol)
-      .select(col("id").as(idCol))
-    corpus.join(bad, Seq(idCol), "left_anti")
   }
 
   /** [[report]] for reference sets too big to broadcast — cross-corpus
@@ -95,26 +86,6 @@ object Contamination {
     (bos.toByteArray, refSh)
   }
 
-  /** Persist a [[buildReferenceBloom]] artifact pair so decontamination
-    * jobs load the frozen reference (an eval-set release) instead of
-    * re-aggregating it — layout: `path/bloom.bin` (the serialized
-    * bitmap, ~1.2 bytes/item) + `path/shingles` (the distinct shingle
-    * parquet the exact verify joins). Both halves are required: the
-    * bitmap alone would make the answer approximate. */
-  def saveReferenceBloom(bloomBytes: Array[Byte], refShingles: DataFrame,
-                         path: String): Unit = {
-    refShingles.write.mode("overwrite").parquet(s"$path/shingles")
-    graft.core.Fs.writeBytes(s"$path/bloom.bin", bloomBytes)
-  }
-
-  /** Load a persisted reference bloom; the pair feeds
-    * [[bloomReportWith]] / [[graft.streaming.Monitor.bloomDecontaminationSink]]
-    * unchanged (decision equality is spec-pinned). */
-  def loadReferenceBloom(spark: org.apache.spark.sql.SparkSession,
-                         path: String): (Array[Byte], DataFrame) =
-    (graft.core.Fs.readBytes(s"$path/bloom.bin"),
-      spark.read.parquet(s"$path/shingles"))
-
   /** The online half of [[bloomReport]]: probe + exact verify against a
     * prebuilt reference bloom/shingle pair. */
   def bloomReportWith(corpus: DataFrame, bloomBytes: Array[Byte],
@@ -131,17 +102,6 @@ object Contamination {
       .groupBy(col("id"))
       .agg(count(lit(1)).as("shared_shingles"))
       .filter(col("shared_shingles") >= minShared)
-  }
-
-  /** Drop documents that share >= `minShared` shingles with a
-    * corpus-scale reference set (the [[bloomReport]] two-phase plan). */
-  def bloomDecontaminate(corpus: DataFrame, reference: DataFrame, n: Int,
-                         minShared: Int, expectedItems: Long = 4000000L,
-                         fpp: Double = 0.01, textCol: String = "text",
-                         idCol: String = "doc_id"): DataFrame = {
-    val bad = bloomReport(corpus, reference, n, minShared, expectedItems,
-      fpp, textCol, idCol).select(col("id").as(idCol))
-    corpus.join(bad, Seq(idCol), "left_anti")
   }
 
   /** Embedding-space contamination: corpus items whose embedding is
@@ -168,15 +128,5 @@ object Contamination {
       .filter(col("__cos") >= threshold)
       .groupBy(col("id"))
       .agg(count(lit(1)).as("n_hits"), max(col("__cos")).as("max_cos"))
-  }
-
-  /** Drop semantically contaminated items from the corpus. */
-  def semanticDecontaminate(corpus: DataFrame, benchmark: DataFrame,
-                            threshold: Double,
-                            vecCol: String = "embedding",
-                            idCol: String = "vec_id"): DataFrame = {
-    val bad = semanticReport(corpus, benchmark, threshold, vecCol, idCol)
-      .select(col("id").as(idCol))
-    corpus.join(bad, Seq(idCol), "left_anti")
   }
 }

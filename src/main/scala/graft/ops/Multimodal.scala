@@ -17,11 +17,6 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  val metaSchema: StructType = StructType(Seq(
-    StructField("modality", StringType),
-    StructField("format", StringType),
-    StructField("byte_len", LongType)))
-
   /** Wrap a text corpus as fake multimodal assets: payload = utf-8 bytes
     * (stand-in for an encoded image), metadata derived per row. Real
     * pipelines read payloads via `binaryFile` or parquet binary columns. */

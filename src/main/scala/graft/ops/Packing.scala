@@ -1,148 +1,21 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.catalyst.encoders.RowEncoder
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
-/** Sequence packing for LLM pretraining: group documents into bins of at
-  * most `maxTokens` tokens (greedy first-fit in id order), so downstream
-  * tokenization fills fixed-length training sequences with minimal
-  * padding.
-  *
-  * Scale shape: documents are hash-partitioned and packed *within* each
-  * partition (greedy packing is embarrassingly parallel when global
-  * optimality isn't required — the waste bound barely moves), so no
-  * shuffle beyond the initial repartition and no driver-side state.
-  * Deterministic: partition = hash(id) % P, in-partition order = id.
+/** Sequence assembly for LLM pretraining: split oversized documents
+  * into windows ([[chunkOversized]]) and lay documents out as
+  * fixed-length training sequences ([[concatChunks]]).
   */
 object Packing {
 
-  val binSchema: StructType = StructType(Seq(
-    StructField("bin_id", StringType),
-    StructField("doc_ids", ArrayType(LongType, containsNull = false)),
-    StructField("n_docs", LongType),
-    StructField("total_tokens", LongType)))
-
-  /** [[binSchema]] plus the materialized sequence: the id array the
-    * dataloader consumes and each document's start offset within it. */
-  val binIdsSchema: StructType = binSchema
-    .add("token_ids", ArrayType(IntegerType, containsNull = false),
-      nullable = false)
-    .add("doc_offsets", ArrayType(LongType, containsNull = false),
-      nullable = false)
-
-  /** Pack documents into token-budget bins. A single document larger than
-    * `maxTokens` gets its own bin (chunk oversized docs upstream with
-    * [[chunkOversized]]). Output: (bin_id, doc_ids, n_docs, total_tokens).
-    *
-    * `tokens` overrides the default heuristic count with a REAL
-    * tokenizer's — [[Tokenize.bpeCountExpr]] under a natively trained
-    * merge table, or a column appended by the
-    * [[Tokenize.withTokenCount]] seam — so packed sequences budget in
-    * the tokens the model will actually see.
-    *
-    * `ids` (a per-document token-id array — [[Tokenize.bpeIdsExpr]] or
-    * the [[Tokenize.withTokenIds]] seam column) MATERIALIZES each bin
-    * as the sequence an LM dataloader actually consumes: two extra
-    * columns, `token_ids` (the documents' ids concatenated, with
-    * `sepId` — the reserved separator/EOS from
-    * [[Tokenize.bpeVocabFromHistogram]]'s `specials` — appended after
-    * every document when set) and `doc_offsets` (each document's start
-    * index within `token_ids`). When `ids` is set the budget is
-    * derived from it (`size(ids)`, plus one per document for the
-    * separator when `sepId` is set) and `total_tokens` is the LENGTH
-    * OF THE EMITTED SEQUENCE — the LM-visible length the `maxTokens`
-    * budget bounds, separators included — so `tokens` is ignored: a
-    * caller-supplied count disagreeing with the materialized array
-    * could overflow real sequences. Still one mapPartitions pass, no
-    * extra shuffle: the id arrays ride the same repartition the bare
-    * packing already pays. */
-  def packSequences(docs: DataFrame, maxTokens: Long,
-                    numPartitions: Int = 0,
-                    textCol: String = "text",
-                    idCol: String = "doc_id",
-                    tokens: Option[Column] = None,
-                    ids: Option[Column] = None,
-                    sepId: Option[Int] = None): DataFrame = {
-    require(sepId.isEmpty || ids.nonEmpty,
-      "sepId without ids: a separator needs a materialized sequence")
-    val parts =
-      if (numPartitions > 0) numPartitions
-      else docs.sparkSession.sparkContext.defaultParallelism
-    val sepCost = if (sepId.isDefined) 1L else 0L
-    ids match {
-      case None =>
-        val sized = docs.select(col(idCol).as("id"),
-          tokens.getOrElse(Text.tokenCount(col(textCol)))
-            .cast("long").as("n_tok"))
-          .repartition(parts, pmod(col("id"), lit(parts.toLong)))
-          .sortWithinPartitions(col("id"))
-        implicit val enc = RowEncoder.encoderFor(binSchema)
-        sized.mapPartitions { it =>
-          val pid = org.apache.spark.TaskContext.getPartitionId()
-          val bins = scala.collection.mutable.ArrayBuffer[Row]()
-          var curIds = scala.collection.mutable.ArrayBuffer[Long]()
-          var curTok = 0L
-          def flush(): Unit = if (curIds.nonEmpty) {
-            bins += Row(s"p$pid-b${bins.size}", curIds.toSeq,
-              curIds.size.toLong, curTok)
-            curIds = scala.collection.mutable.ArrayBuffer[Long]()
-            curTok = 0L
-          }
-          it.foreach { r =>
-            val id = r.getLong(0); val t = r.getLong(1)
-            if (curTok + t > maxTokens && curIds.nonEmpty) flush()
-            curIds += id
-            curTok += t
-          }
-          flush()
-          bins.iterator
-        }
-      case Some(idArr) =>
-        val sized = docs.select(col(idCol).as("id"),
-          coalesce(idArr, typedLit(Seq.empty[Int])).as("toks"))
-          .repartition(parts, pmod(col("id"), lit(parts.toLong)))
-          .sortWithinPartitions(col("id"))
-        implicit val enc = RowEncoder.encoderFor(binIdsSchema)
-        sized.mapPartitions { it =>
-          val pid = org.apache.spark.TaskContext.getPartitionId()
-          val bins = scala.collection.mutable.ArrayBuffer[Row]()
-          var curIds = scala.collection.mutable.ArrayBuffer[Long]()
-          var curToks = scala.collection.mutable.ArrayBuffer[Int]()
-          var curOffs = scala.collection.mutable.ArrayBuffer[Long]()
-          def flush(): Unit = if (curIds.nonEmpty) {
-            bins += Row(s"p$pid-b${bins.size}", curIds.toSeq,
-              curIds.size.toLong, curToks.size.toLong, curToks.toSeq,
-              curOffs.toSeq)
-            curIds = scala.collection.mutable.ArrayBuffer[Long]()
-            curToks = scala.collection.mutable.ArrayBuffer[Int]()
-            curOffs = scala.collection.mutable.ArrayBuffer[Long]()
-          }
-          it.foreach { r =>
-            val id = r.getLong(0)
-            val toks = r.getSeq[Int](1)
-            val t = toks.length.toLong + sepCost
-            if (curToks.length + t > maxTokens && curIds.nonEmpty) flush()
-            curIds += id
-            curOffs += curToks.length.toLong
-            curToks ++= toks
-            sepId.foreach(s => curToks += s)
-          }
-          flush()
-          bins.iterator
-        }
-    }
-  }
-
-  /** Sliding-window chunking for oversized documents — the upstream
-    * companion [[packSequences]]' "callers chunk oversized docs" contract
-    * refers to. Documents longer than `maxTokens` whitespace tokens split
-    * into windows of `maxTokens` advancing by `maxTokens - overlap`
-    * (consecutive chunks share `overlap` tokens, the long-context
-    * pretraining / RAG-indexing discipline); shorter documents pass
-    * through as their single chunk 0.
+  /** Sliding-window chunking for oversized documents. Documents longer
+    * than `maxTokens` whitespace tokens split into windows of
+    * `maxTokens` advancing by `maxTokens - overlap` (consecutive chunks
+    * share `overlap` tokens, the long-context pretraining /
+    * RAG-indexing discipline); shorter documents pass through as their
+    * single chunk 0.
     *
     * Per-row array arithmetic (tokenize once, `slice` per window) inside
     * whole-stage codegen — no shuffle, no UDF, linear at any corpus
@@ -172,8 +45,8 @@ object Packing {
     * [[Sampling.shufflePosition]] for a per-epoch permutation), their
     * token streams conceptually concatenated, and the stream cut into
     * fixed `maxTokens` sequences — documents STRADDLE sequence boundaries
-    * (the pretraining discipline [[packSequences]]' no-split bins are the
-    * alternative to). Output per doc: its global token offset, the
+    * (the pretraining discipline no-split bin packing is the alternative
+    * to). Output per doc: its global token offset, the
     * sequence its first token lands in, and the offset within it.
     *
     * The global prefix sum is NOT a single-partition window: docs bucket

@@ -134,20 +134,6 @@ object Sampling {
       .drop("__rn")
   }
 
-  /** Per-stratum selectable-row counts for the LISTED strata only —
-    * standalone supply inspection with a driver collect bounded by
-    * `listed.size`, never the corpus's stratum domain. ([[mixtureByCount]]
-    * now derives its supply from its own bucketed phase-1 aggregate — one
-    * corpus pass serves both the targets and the rank offsets — so this
-    * helper is the cheap counts-only entry point, not its sizing pass.)
-    * Package-private so the spec can pin the collected cardinality. */
-  private[ops] def supplyCounts(df: DataFrame, stratum: Column, key: Column,
-                                listed: Set[String]): Map[String, Long] =
-    df.filter(key.isNotNull)
-      .filter(stratum.isin(listed.toSeq: _*))
-      .groupBy(stratum.as("__s")).agg(count(lit(1)).as("__n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-
   /** Shared two-phase scaffolding for the mixture ops: restrict to
     * selectable rows of LISTED strata, tag each row with its hash
     * position, stratum string, and hash-prefix bucket, aggregate a
@@ -562,9 +548,7 @@ object Sampling {
     * adds the broadcast offset. Because the bucket is a PREFIX of the
     * hash position, concatenating buckets in offset order reproduces
     * the single-sort order exactly — the position column is invariant
-    * under `bucketChars` (spec-pinned), which only tunes parallelism.
-    * Pair with [[writeEpochShards]]' range partitioner to lay the
-    * result out as shard files. */
+    * under `bucketChars` (spec-pinned), which only tunes parallelism. */
   def curriculumOrder(df: DataFrame, stage: Column, key: Column,
                       stages: Seq[String],
                       bucketChars: Int = 0): DataFrame = {
@@ -592,55 +576,6 @@ object Sampling {
         col("__off") + row_number().over(w) - lit(1))
       .drop("__s", "__bkt", "__pos", "__off")
   }
-
-  /** Write the corpus as epoch-shuffled training shards: rows take their
-    * epoch's [[shufflePosition]], range-partition into `numShards` files
-    * whose WITHIN-shard and ACROSS-shard order is the epoch permutation —
-    * a trainer streaming shard 0, 1, 2... reads the exact global order,
-    * and any shard subset is a valid stratified slice of the epoch.
-    * `repartitionByRange` is Spark's sampled range partitioner (one
-    * shuffle); the per-shard sort is the write-side sort, no extra
-    * exchange. The global ROW ORDER (the concatenation of shards) is
-    * deterministic given (key, epoch); shard BOUNDARIES come from the
-    * range partitioner's reservoir sample, which is seeded per plan — a
-    * re-run rewrites a complete, globally-identical order whose cut
-    * points may sit elsewhere. Always consume a write atomically (the
-    * `overwrite` here replaces the whole directory); never mix shard
-    * files from two runs. */
-  def writeEpochShards(df: DataFrame, path: String, key: Column,
-                       epoch: Int, numShards: Int,
-                       manifest: Boolean = false): Unit = {
-    require(numShards > 0, "numShards must be positive")
-    df.withColumn("__pos", shufflePosition(key, epoch))
-      .repartitionByRange(numShards, col("__pos"))
-      .sortWithinPartitions(col("__pos"))
-      .drop("__pos")
-      .write.mode("overwrite").parquet(path)
-    if (manifest)
-      shardManifest(df.sparkSession, path, key)
-        .write.mode("overwrite").parquet(s"$path/_graft_manifest")
-  }
-
-  /** Reproducibility manifest for a written shard set: one row per
-    * shard file with its row count and an ORDER-FREE key digest
-    * (`bit_xor` of `xxhash64(key)` — any dropped, duplicated, or
-    * substituted row flips it, and recomputation is independent of
-    * scan order). Two runs that should have produced the same epoch
-    * can be compared shard-by-shard without re-reading payloads; the
-    * training job checks the manifest against what it actually read.
-    *
-    * Stored INSIDE the shard directory as `_graft_manifest` —
-    * underscore-prefixed paths are invisible to parquet readers, so
-    * consumers of the shards see only data. One read-back pass,
-    * aggregated per file, |shards| result rows. */
-  def shardManifest(spark: org.apache.spark.sql.SparkSession,
-                    path: String, key: Column): DataFrame =
-    spark.read.parquet(path)
-      .select(regexp_extract(input_file_name(), "([^/]+)$", 1)
-        .as("shard"), xxhash64(key).as("__h"))
-      .groupBy(col("shard"))
-      .agg(count(lit(1)).as("n_rows"),
-        expr("bit_xor(__h)").as("key_digest"))
 
   /** Split assignment column from cumulative hash ranges, e.g.
     * `splits = Seq("train" -> 0.8, "test" -> 0.1, "val" -> 0.1)`.

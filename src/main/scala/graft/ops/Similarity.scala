@@ -619,10 +619,6 @@ object Similarity {
         .otherwise(floor(x.cast("double") / scale + lit(0.5)))
         .cast("tinyint"))
 
-  /** Reconstruct `array<double>` from int8 codes: `q * scale`. */
-  def dequantize(q: Column, scale: Column): Column =
-    transform(q, x => x.cast("double") * scale)
-
   /** ALL `m` PQ sub-codebooks trained in ONE Lloyd loop: plain-L2
     * deterministic mini k-means per subspace — seeds from the `k`
     * lowest-id rows (one collect, sliced client-side), assignment by
@@ -1071,19 +1067,6 @@ object Similarity {
                     trainFraction: Double = 0.0): DataFrame = {
     val pairs = cosinePairs(corpus, threshold, numCentroids, iters,
       idCol, vecCol, trainFraction)
-    Dedup.keepClusterCanonical(corpus, pairs, idCol)
-  }
-
-  /** [[semanticDedup]] with ANN candidates: [[annCosinePairs]] feeds the
-    * same cluster-then-drop machinery. Missed pairs (recall < 1) mean
-    * extra survivors, never lost documents — the safe failure direction
-    * for a dedup stage — and the regime note on [[annCosinePairs]]
-    * applies: use at near-dup thresholds (~0.9+). */
-  def semanticDedupAnn(corpus: DataFrame, threshold: Double,
-                       planes: Int = 8, radius: Int = 2,
-                       idCol: String = "vec_id",
-                       vecCol: String = "embedding"): DataFrame = {
-    val pairs = annCosinePairs(corpus, threshold, planes, radius, idCol, vecCol)
     Dedup.keepClusterCanonical(corpus, pairs, idCol)
   }
 

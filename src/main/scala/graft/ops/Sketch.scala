@@ -365,14 +365,6 @@ object Sketch {
     }
   }
 
-  /** Per-group distinct-count estimates: `(group, est_distinct)`.
-    * One scan, sketches merged map-side; exact while each group's
-    * distinct count stays under k. */
-  def groupDistinct(df: DataFrame, groupCol: String, key: Column,
-                    k: Int = 4096): DataFrame =
-    df.groupBy(col(groupCol))
-      .agg(round(estimate(kmvAgg(key, k))).cast("long").as("est_distinct"))
-
   /** Pairwise overlap matrix over the groups of `groupCol`:
     * `(g_a, g_b, n_a, n_b, n_common, n_union)`, one row per unordered
     * pair, ordered (g_a, g_b). Estimates are rounded to longs —

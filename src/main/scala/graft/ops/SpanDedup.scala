@@ -233,7 +233,7 @@ object SpanDedup {
     * window whose fingerprint occurs ANYWHERE in `benchmark` marks its
     * positions, overlapping windows merge per doc — surgical
     * decontamination at passage granularity. The doc-level
-    * [[graft.ops.Contamination.decontaminate]] drops whole documents
+    * [[graft.ops.Contamination.report]] flags whole documents
     * that share shingles with the benchmark; this finds exactly WHERE
     * the leaked passage sits, so [[removeContaminatedSpans]] can cut
     * the quoted benchmark item and keep the rest of the document — the

@@ -20,7 +20,7 @@ import org.apache.spark.sql.types.{LongType, StringType}
   * Wiring: [[withTokenCount]] appends `outCol` to the frame; pass
   * `col(outCol)` wherever a budget operator takes a `tokens` column
   * ([[Sampling.mixtureByTokens]], [[Sampling.selectByQualityBudget]],
-  * [[Packing.packSequences]]). The heuristics remain the default
+  * [[Packing.concatChunks]]). The heuristics remain the default
   * everywhere — this path trades whole-stage codegen for tokenizer
   * fidelity, so reach for it when the budget contract demands real
   * tokens, not for per-row statistics.
@@ -289,39 +289,6 @@ object Tokenize {
     merges.toSeq
   }
 
-  /** Persist a trained merge table so serving jobs tokenize with the
-    * SAME vocabulary the training corpus produced (merge ORDER is the
-    * model — ranks break ties during encoding, so the table persists as
-    * `(rank, left, right)` parquet and loads back in rank order). */
-  def saveBpe(spark: org.apache.spark.sql.SparkSession,
-              merges: Seq[(String, String)], path: String): Unit = {
-    val rows = merges.zipWithIndex.map { case ((l, r), i) =>
-      org.apache.spark.sql.Row(i, l, r)
-    }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("rank",
-        org.apache.spark.sql.types.IntegerType),
-      org.apache.spark.sql.types.StructField("left",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("right",
-        org.apache.spark.sql.types.StringType)))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-      .write.mode("overwrite").parquet(path)
-  }
-
-  /** Load a merge table persisted by [[saveBpe]], in rank order. The
-    * collect is vocabulary-bounded (one row per merge — the trainBpe
-    * `numMerges` cap); a foreign parquet at the path fails fast. */
-  def loadBpe(spark: org.apache.spark.sql.SparkSession,
-              path: String): Seq[(String, String)] = {
-    val df = spark.read.parquet(path)
-    require(df.columns.sorted.sameElements(Array("left", "rank", "right")),
-      s"$path is not a saved merge table " +
-        s"(columns ${df.columns.mkString(",")})")
-    df.orderBy("rank").collect()
-      .map(r => (r.getAs[String]("left"), r.getAs[String]("right"))).toSeq
-  }
-
   // ---------------------------------------------------------------- //
   // GPT-2-format loader (the published vocab.json + merges.txt pair)
   // ---------------------------------------------------------------- //
@@ -370,10 +337,10 @@ object Tokenize {
         s"merge output '${l + r}' missing from $vocabPath — the files " +
           "are not a matching vocab/merges pair")
     }
-    // ids must be injective or DECODE is ambiguous: the inverse maps
-    // (Gpt2Counter.decode, bpeDecodeExpr via loadTrained) would keep
-    // an arbitrary winner and mis-reconstruct text silently — the one
-    // failure mode the decode contract forbids. (JSON keys are unique,
+    // ids must be injective or DECODE is ambiguous: the inverse map
+    // (Gpt2Counter.decode) would keep an arbitrary winner and
+    // mis-reconstruct text silently — the one failure mode the decode
+    // contract forbids. (JSON keys are unique,
     // so token-side duplicates cannot occur; id-side ones can.)
     val ids = vocab.values.toSeq
     require(ids.distinct.length == ids.length, {
@@ -407,21 +374,10 @@ object Tokenize {
   private[ops] lazy val unicodeToByte: Map[Char, Int] =
     (0 until 256).map(b => byteToUnicode(b) -> b).toMap
 
-  /** A raw symbol string's UTF-8 bytes through the byte→unicode table —
-    * the representation GPT-2-format files store. Mapped strings never
-    * contain whitespace or control characters, which is what makes the
-    * line-and-space-delimited merges.txt format bulletproof (a raw
-    * U+2028 pre-token symbol — valid under [[Text.bpeTokenPattern]] —
-    * would corrupt a naive writer). */
-  private[ops] def toByteLevel(s: String): String = {
-    val bytes = s.getBytes("UTF-8")
-    val sb = new java.lang.StringBuilder(bytes.length)
-    bytes.foreach(b => sb.append(byteToUnicode(b & 0xFF)))
-    sb.toString
-  }
-
-  /** Inverse of [[toByteLevel]]; a character outside the byte table
-    * means the file was not written byte-level — loud, not mangled. */
+  /** A byte-level symbol string (each UTF-8 byte through
+    * [[byteToUnicode]], the representation GPT-2-format files store)
+    * back to raw text; a character outside the byte table means the
+    * file was not written byte-level — loud, not mangled. */
   private[ops] def fromByteLevel(s: String): String = {
     val bytes = new Array[Byte](s.length)
     var i = 0
@@ -433,106 +389,6 @@ object Tokenize {
       i += 1
     }
     new String(bytes, "UTF-8")
-  }
-
-  /** Persist a NATIVELY trained tokenizer (merge table +
-    * [[bpeVocabFromHistogram]] id table) in the published GPT-2
-    * interchange format — `merges.txt` (rank-ordered `left right`
-    * lines) and `vocab.json` (token → id) under `dir`, with every
-    * symbol byte-level encoded through [[toByteLevel]] so the files
-    * are whitespace-free plain text any published-format consumer can
-    * parse (and [[loadGpt2]]'s own validation accepts). This is the
-    * fit-once-serve-for-months half the in-process memo could not
-    * give: train once, [[saveTrained]], and every later driver process
-    * [[loadTrained]]s tables bit-equal to the fit. */
-  def saveTrained(merges: Seq[(String, String)], vocab: Seq[(String, Int)],
-                  dir: String): Unit = {
-    require(vocab.nonEmpty, "vocab is empty")
-    val toks = vocab.map(_._1)
-    require(toks.distinct.length == toks.length,
-      "duplicate token strings in vocab")
-    val ids = vocab.map(_._2)
-    require(ids.distinct.length == ids.length, "duplicate ids in vocab")
-    val vset = toks.toSet
-    merges.foreach { case (l, r) =>
-      require(vset.contains(l + r),
-        s"merge output '${l + r}' missing from the vocab — save would " +
-          "produce a file pair loadGpt2/loadTrained reject")
-    }
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    val mergeText = new StringBuilder("#version: 0.2\n")
-    merges.foreach { case (l, r) =>
-      mergeText ++= toByteLevel(l); mergeText += ' '
-      mergeText ++= toByteLevel(r); mergeText += '\n'
-    }
-    graft.core.Fs.writeString(s"$dir/merges.txt", mergeText.toString)
-    val node = new com.fasterxml.jackson.databind.ObjectMapper()
-      .createObjectNode()
-    vocab.foreach { case (t, i) => node.put(toByteLevel(t), i): Unit }
-    graft.core.Fs.writeString(s"$dir/vocab.json", node.toString)
-  }
-
-  /** Load a tokenizer persisted by [[saveTrained]] back to the raw
-    * symbol domain: the same file parsing and vocab-coverage
-    * validation as [[loadGpt2]], then [[fromByteLevel]] on every
-    * symbol, returning a [[TrainedBpeTokenizer]] whose tables are
-    * bit-equal to the ones saved — so [[bpeIdsExpr]] /
-    * [[withTokenIds]] under the loaded tables reproduce the training
-    * process's ids exactly (spec-pinned). Use [[loadGpt2]] instead
-    * when the files are a PUBLISHED byte-level release and the GPT-2
-    * pre-tokenizer semantics are wanted. */
-  def loadTrained(dir: String): TrainedBpeTokenizer = {
-    val raw = loadGpt2(s"$dir/merges.txt", s"$dir/vocab.json")
-    TrainedBpeTokenizer(
-      raw.merges.map { case (l, r) => (fromByteLevel(l), fromByteLevel(r)) },
-      raw.vocab.toSeq.map { case (t, i) => (fromByteLevel(t), i) }
-        .sortBy(_._2))
-  }
-
-  /** Persist the fit-time SERVING STATISTICS beside a trained pair —
-    * the tokens-per-char reference the compression-drift monitor
-    * anchors on. [[saveTrained]] makes the TABLES survive the process;
-    * without this sidecar the drift reference does not (it is a
-    * corpus statistic — unrecoverable from merges.txt/vocab.json), so
-    * a pipeline serving a months-old tokenizer could encode but not
-    * monitor. The sidecar is a separate `stats.json`; the GPT-2 pair
-    * stays byte-identical to the published format and foreign loaders
-    * simply ignore the extra file. `Double.toString` is the shortest
-    * round-tripping decimal, so save → load is bit-exact. */
-  def saveTrainedStats(dir: String, refTokensPerChar: Double): Unit = {
-    require(java.lang.Double.isFinite(refTokensPerChar) &&
-      refTokensPerChar > 0.0,
-      s"ref_tokens_per_char must be a positive finite double, got " +
-        s"$refTokensPerChar")
-    graft.core.Fs.writeString(s"$dir/stats.json",
-      s"""{"ref_tokens_per_char": $refTokensPerChar}""" + "\n")
-  }
-
-  /** Inverse of [[saveTrainedStats]]: None when no sidecar exists (a
-    * bare interchange pair — the caller re-fits the reference or
-    * serves without the drift monitor); a PRESENT but malformed
-    * sidecar is loud, never a silent monitor-less fallback. */
-  def loadTrainedStats(dir: String): Option[Double] = {
-    // existence through the same Fs layer the writer uses — a
-    // java.nio check is local-FS-only and would silently ignore a
-    // present sidecar on an HDFS/object-store tokenizer dir
-    val path = s"$dir/stats.json"
-    if (!graft.core.Fs.exists(path)) None
-    else {
-      val s = graft.core.Fs.readString(path)
-      val m = java.util.regex.Pattern
-        .compile("\"ref_tokens_per_char\"\\s*:\\s*([-+0-9.eE]+)")
-        .matcher(s)
-      require(m.find(),
-        s"stats.json at $dir exists but carries no " +
-          "ref_tokens_per_char — a corrupt sidecar must not silently " +
-          "disable the drift monitor")
-      val v = m.group(1).toDouble
-      require(java.lang.Double.isFinite(v) && v > 0.0,
-        s"stats.json at $dir carries a non-positive or non-finite " +
-          s"ref_tokens_per_char: ${m.group(1)}")
-      Some(v)
-    }
   }
 
   /** The published GPT-2 pre-tokenizer pattern (contractions, space-
@@ -1069,7 +925,7 @@ object Tokenize {
   /** Token COUNT of `text` under a trained merge table, as a pure
     * Column. Null text counts 0, matching [[withTokenCount]]'s contract
     * so the budget operators ([[Sampling.mixtureByTokens]],
-    * [[Packing.packSequences]]) can consume either path unchanged. */
+    * [[Packing.concatChunks]]) can consume either path unchanged. */
   def bpeCountExpr(text: Column, merges: Seq[(String, String)]): Column = {
     require(merges.length <= exprMergeCeiling,
       s"merge table has ${merges.length} entries — past " +
@@ -1089,7 +945,7 @@ object Tokenize {
     * UTF-8 bytes — the binary collation DuckDB and Spark string sorts
     * share, so the assignment is oracle-replayable rank arithmetic),
     * then `A + rank` for each merge output in rank order. With this,
-    * sequence building ([[Packing.packSequences]]-style id arrays)
+    * sequence building (LM-dataloader id arrays)
     * runs off a trained table exactly as it would off a published
     * vocab.json. The alphabet collect is charset-bounded (distinct
     * single symbols, not words). A duplicate token string — two merges
@@ -1160,25 +1016,6 @@ object Tokenize {
     filter(regexp_extract_all(text, lit("(?s)."), lit(0)),
       s => element_at(m, s).isNull)
   }
-
-  /** The base char alphabet recovered from a trained VOCAB alone — the
-    * serving shape of [[alphabetFromHistogram]]: a pipeline that
-    * [[loadTrained]]s a months-old tokenizer has no training histogram,
-    * only the tables, yet still needs the [[oovChars]] reference set.
-    * Merge outputs always span >= 2 code points (each side is >= 1),
-    * so the single-code-point vocab strings are exactly the base
-    * alphabet. A caller-reserved single-char SPECIAL would join it —
-    * harmless for coverage (the monitor treats that char as covered,
-    * which it is: the encoder has an id for it). UTF-8 sorted like
-    * [[alphabetFromHistogram]], so the two derivations are comparable
-    * directly. */
-  def alphabetOf(vocab: Seq[(String, Int)]): Seq[String] =
-    vocab.iterator.map(_._1)
-      .filter(s => codePointSyms(s).length == 1)
-      .toSeq.sortWith { (a, b) =>
-        java.util.Arrays.compareUnsigned(
-          a.getBytes("UTF-8"), b.getBytes("UTF-8")) < 0
-      }
 
   /** Token IDS of `text` under a trained merge table and a derived
     * vocab ([[bpeVocabFromHistogram]]), as a pure Column: the token

@@ -409,7 +409,7 @@ object TrainingData {
     // calibrated probability while the router deployed raw argmax
     // scores). OOF logits come from the honest CV pool; per-class
     // one-vs-rest histogram binning over the OOF decision margins is
-    // ONE keyed aggregate (fitSoftmaxCalibration); deployment gates
+    // ONE keyed aggregate; deployment gates
     // require OOF accuracy 1.0 AND every class's bin rates to be the
     // exact 0/1 split. The served probability is a codegen'd literal
     // lookup per class, so with gates green the output is exact
@@ -454,21 +454,15 @@ object TrainingData {
           .pinned()
         // gate + per-class calibration counts FUSED into one aggregate
         // over one pass of uniq (the q_doc_classifier_pipeline
-        // discipline): the old shape paid an accuracy head() plus
-        // fitSoftmaxCalibration's grouped collect — two scheduler
-        // round-trips over a persisted frame. The fused row carries the
-        // same integers fitSoftmaxCalibration(edges=Seq(0.0)) would
-        // aggregate (per class: n above the 0-edge, positives above,
-        // positives overall), so the rebuilt CalibrationModels are
-        // value-identical; null/NaN margins surface as a loud count
-        // (the fit's per-class filter, preserved as a witness).
-        // Contract STRICTER than fitSoftmaxCalibration by design
-        // (ADVICE r15): the fit silently EXCLUDED null/NaN-margin rows
-        // per class; here any such row aborts via bad_c. Labels are
-        // non-null by construction (the when/otherwise chain is
-        // total), so the fit's null-label exclusion has no analog to
-        // mirror. A corpus that produces bad margins needs repair, not
-        // silent exclusion, before a deploy gate.
+        // discipline): one scheduler round-trip over a persisted frame
+        // instead of an accuracy head() plus a grouped collect. Per
+        // class the row carries n above the 0-edge, positives above and
+        // positives overall — exactly a one-edge (Seq(0.0)) one-vs-rest
+        // histogram calibration. Any null/NaN-margin row aborts via
+        // bad_c rather than being excluded (ADVICE r15): a corpus that
+        // produces bad margins needs repair, not silent exclusion,
+        // before a deploy gate. Labels are non-null by construction
+        // (the when/otherwise chain is total).
         val margins = (0 until 3).map(c =>
           Classifier.softmaxClassMargin(col("logits"), c, 3))
         val aggs =

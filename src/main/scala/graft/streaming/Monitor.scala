@@ -354,42 +354,6 @@ object Monitor {
       }
   }
 
-  /** Continuous ingestion through the PERSISTED incremental dedup index
-    * ([[graft.ops.Dedup.incrementalExactDedup]] per micro-batch via
-    * `foreachBatch`): survivors land in `outPath`, the fingerprint index
-    * at `indexPath` grows by exactly their fingerprints. Unlike
-    * [[dedupStream]]'s state-store dedup, the seen-set here is the
-    * on-disk index — it survives query RESTARTS and is shared with
-    * batch ingests against the same path, at the price of one index
-    * band/anti-join per micro-batch instead of per-key state lookups.
-    * The two compose: `dropDuplicatesWithinWatermark` upstream absorbs
-    * intra-stream re-deliveries cheaply, this sink pins the permanent
-    * cross-restart decision. A long-running stream should periodically
-    * [[graft.ops.Dedup.compactIndex]] the path between restarts.
-    *
-    * Exactly-once caveat (standard foreachBatch): the survivors are
-    * written to `outPath` BEFORE their fingerprints enter the index
-    * (the `sinkFirst` hook) — ordering is load-bearing: once a
-    * fingerprint is indexed, a retry of the same micro-batch keeps
-    * nothing, so index-first would turn a crash between the two writes
-    * into SILENT LOSS of those documents. Output-first makes the
-    * failure mode duplicate survivor rows in `outPath` (at-least-once;
-    * dedup downstream reads with a distinct-on-id if that matters) —
-    * dedup DECISIONS never double-keep either way. */
-  def incrementalDedupSink(docs: DataFrame, indexPath: String,
-                           outPath: String, checkpointDir: String,
-                           textCol: String = "text",
-                           idCol: String = "doc_id"): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.ops.Dedup.incrementalExactDedup(batch, indexPath, textCol,
-          idCol,
-          sinkFirst = _.write.mode("append").parquet(outPath))
-        () // survivors already persisted by the hook
-      }
-      .start()
-
   /** Stream a corpus through the persisted MinHash near-dup index
     * ([[graft.ops.Dedup.incrementalMinhashDedup]]): survivors of each
     * micro-batch — docs near-duplicating nothing that ever flowed
@@ -399,8 +363,10 @@ object Monitor {
     * estimator decisions — the only index shape that survives an
     * unbounded ingest); pass `exactVerify = true` to opt into the
     * stored-shingle exact mode, whose index grows with the corpus.
-    * Output-first ordering ([[incrementalDedupSink]]'s contract): a
-    * crash between the two writes re-delivers the batch and duplicates
+    * Output-first ordering (the `sinkFirst` hook) is load-bearing: once
+    * a signature is indexed, a retry of the same micro-batch keeps
+    * nothing, so index-first would turn a crash between the two writes
+    * into silent loss. Output-first re-delivers the batch and duplicates
     * output rows (at-least-once), never silently drops survivors.
     * Completes the near-dup corner of the streaming sink family
     * (exact / SimHash / semantic / span already stream). */
@@ -728,7 +694,7 @@ object Monitor {
     * checkpoint replaying the whole input is harmless: re-delivered
     * rows collapse before the cut (at-least-once delivery,
     * effectively-once decisions — same contract as
-    * [[incrementalDedupSink]], without even the duplicate-output-row
+    * [[minhashDedupSink]], without even the duplicate-output-row
     * caveat, because the reservoir is a rewrite, not an append). */
   def prioritySampleSink(docs: DataFrame, indexPath: String,
                          checkpointDir: String,
@@ -816,31 +782,12 @@ object Monitor {
       }
       .start()
 
-  /** Stream vectors into a persisted PQ index
-    * ([[graft.ops.Similarity.buildPqIndex]]): each micro-batch encodes
-    * with the FROZEN codebooks and appends its `m`-int codes — arrival
-    * order and batch splits cannot change a vector's code, so the
-    * drained index equals the batch-built one row for row (MonitorSpec).
-    * Re-delivery of an uncommitted batch duplicates code rows
-    * (at-least-once); the checkpoint prevents committed re-runs. */
-  def pqIndexSink(vecs: DataFrame, indexPath: String,
-                  checkpointDir: String,
-                  idCol: String = "vec_id",
-                  vecCol: String = "embedding"): StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.ops.Similarity.appendToPqIndex(batch, indexPath, idCol, vecCol)
-        ()
-      }
-      .start()
-
   /** Stream an embedding corpus through the persisted semantic-dedup
     * index ([[graft.ops.Similarity.incrementalSemanticDedup]]): each
     * micro-batch's survivors — vectors NOT cosine-near-duplicating
     * anything that ever flowed through `indexPath`, canonicalized
     * in-batch — append to `outPath`. Keep-one across the whole stream.
-    * Delivery contract as [[incrementalDedupSink]]: the checkpoint
+    * Delivery contract as [[minhashDedupSink]]: the checkpoint
     * guarantees a committed batch never re-runs; a replay against a
     * kept index would re-drop its rows (decisions stable), at the cost
     * of duplicate output rows in `outPath`. */

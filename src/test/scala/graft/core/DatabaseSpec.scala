@@ -417,6 +417,33 @@ class DatabaseSpec extends AnyFunSuite {
     assert(!db.read().columns.contains("r_"))
   }
 
+  test("pruned reads: lookupAll, asOf and changes on a manifested db " +
+    "serve read()'s schema and the plain scan's rows after a " +
+    "schema-growing append") {
+    val calc = tmpDir("graft-dbprune-")
+    val study = Study(spark, calc)
+    study.run(p => Map("r_" -> 1.0), Grid.plist("a", Seq(1, 2)))
+    val db = Database(spark, calc)
+    db.optimizeLayout(numFiles = 2)
+    study.run(p => Map("r_" -> 2.0, "s_" -> "x"), Grid.plist("a", Seq(3)))
+    assert(db.manifestFresh, "the append must keep the manifest fresh")
+    val all = db.read()
+    val run0 = all.agg(min(col("_run_seq"))).head().getLong(0)
+    val ids = all.filter(col("_run_seq") === run0)
+      .select("_pset_id").collect().map(_.getString(0)).toSeq
+    Seq(
+      "lookupAll" -> (db.lookupAll(ids), col("_pset_id").isin(ids: _*)),
+      "asOf" -> (db.asOf(run0), col("_run_seq") <= run0),
+      "changes" -> (db.changes(run0 - 1, run0),
+        col("_run_seq") > run0 - 1 && col("_run_seq") <= run0)
+    ).foreach { case (name, (got, probe)) =>
+      assert(got.schema == all.schema, s"$name schema")
+      val want = all.filter(probe)
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+        s"$name rows")
+    }
+  }
+
   test("schema snapshot: reading an unchanged db starts no Spark job, " +
     "also after stats-store writes") {
     val (db, _) = mkDb()

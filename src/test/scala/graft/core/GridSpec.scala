@@ -92,4 +92,14 @@ class GridSpec extends AnyFunSuite {
       Map[String, Any]("a" -> 1))
     assert(filterParamsUnique(p) == Seq(Map("a" -> 1), Map("a" -> 2)))
   }
+
+  test("filterParamsDupHash drops psets whose hash is given, keeps input " +
+    "order (J1, ref psweep.py:1068-1081)") {
+    val p = Seq(Map[String, Any]("a" -> 3), Map[String, Any]("a" -> 1),
+      Map[String, Any]("a" -> 2), Map[String, Any]("a" -> 1))
+    val known = Set(PsetHash.hash(Map[String, Any]("a" -> 1)))
+    assert(filterParamsDupHash(p, known) ==
+      Seq(Map("a" -> 3), Map("a" -> 2)))
+    assert(filterParamsDupHash(p, Set.empty) == p)
+  }
 }

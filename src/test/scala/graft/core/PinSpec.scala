@@ -5,9 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSpec
 import graft.core.Pin.PinOps
 
-/** Pins [[Pin]]'s mode selection and value-identity: the round-16
-  * reliability conf must never change WHAT a pin materializes, only
-  * where the blocks live. */
+/** Pins [[Pin]]'s checkpoint selection and value-identity: the
+  * session's checkpoint dir must never change WHAT a pin materializes,
+  * only where the blocks live. */
 class PinSpec extends AnyFunSuite {
   private lazy val spark = SparkSpec.spark
 
@@ -15,15 +15,6 @@ class PinSpec extends AnyFunSuite {
     import spark.implicits._
     Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v")
       .filter(org.apache.spark.sql.functions.col("id") > 1L)
-  }
-
-  private def withConf[T](k: String, v: Option[String])(body: => T): T = {
-    val prev = spark.conf.getOption(k)
-    v match { case Some(x) => spark.conf.set(k, x)
-              case None => spark.conf.unset(k) }
-    try body
-    finally prev match { case Some(x) => spark.conf.set(k, x)
-                         case None => spark.conf.unset(k) }
   }
 
   test("auto without a checkpoint dir pins executor-local, values equal") {
@@ -36,13 +27,6 @@ class PinSpec extends AnyFunSuite {
     assert(p.collect().map(_.getLong(0)).sorted.toSeq == Seq(2L, 3L))
   }
 
-  test("reliable=true without a checkpoint dir fails fast") {
-    withConf("spark.graft.pin.reliable", Some("true")) {
-      val e = intercept[IllegalArgumentException](frame().pinned())
-      assert(e.getMessage.contains("setCheckpointDir"))
-    }
-  }
-
   test("auto with a checkpoint dir pins reliably, values equal") {
     val dir = SparkSpec.tmpDir("graft-pin-ckpt-")
     spark.sparkContext.setCheckpointDir(dir)
@@ -53,18 +37,6 @@ class PinSpec extends AnyFunSuite {
       val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
         .filter(java.nio.file.Files.isRegularFile(_)).count()
       assert(wrote > 0, "reliable pin wrote nothing to the checkpoint dir")
-      // reliable=false forces executor-local even with the dir present
-      withConf("spark.graft.pin.reliable", Some("false")) {
-        val before = java.nio.file.Files.walk(
-          java.nio.file.Paths.get(dir))
-          .filter(java.nio.file.Files.isRegularFile(_)).count()
-        val p2 = frame().pinned()
-        assert(p2.collect().map(_.getLong(0)).sorted.toSeq == Seq(2L, 3L))
-        val after = java.nio.file.Files.walk(
-          java.nio.file.Paths.get(dir))
-          .filter(java.nio.file.Files.isRegularFile(_)).count()
-        assert(after == before, "forced-local pin still wrote to the dir")
-      }
     } finally {
       // the shared session must leave no checkpoint dir behind for
       // other suites (auto mode keys on its presence)
@@ -72,10 +44,19 @@ class PinSpec extends AnyFunSuite {
     }
   }
 
-  test("rejects an unknown mode loudly") {
-    withConf("spark.graft.pin.reliable", Some("sometimes")) {
-      val e = intercept[IllegalArgumentException](frame().pinned())
-      assert(e.getMessage.contains("auto|true|false"))
-    }
+  test("a reliable pin computes its plan once") {
+    import org.apache.spark.sql.functions.{col, udf}
+    val dir = SparkSpec.tmpDir("graft-pin-once-")
+    val calls = spark.sparkContext.longAccumulator("pin-udf-calls")
+    val bump = udf { (x: Long) => calls.add(1L); x }.asNondeterministic()
+    spark.sparkContext.setCheckpointDir(dir)
+    try {
+      val p = spark.range(0, 50, 1, 4).toDF("id")
+        .select(bump(col("id")).as("id")).pinned()
+      assert(calls.sum == 50L,
+        s"the pinned plan ran ${calls.sum} UDF calls for 50 rows")
+      assert(p.collect().map(_.getLong(0)).sorted.toSeq == (0L until 50L))
+      assert(calls.sum == 50L, "reading the pin recomputed the plan")
+    } finally spark.sparkContext.setCheckpointDir(null)
   }
 }

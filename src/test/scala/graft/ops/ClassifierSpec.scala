@@ -932,42 +932,6 @@ class ClassifierSpec extends AnyFunSuite {
       Classifier.softmaxPredictSparseExpr(col("idx"), sm)).collect())
   }
 
-  test("aucBinned: equals aucExact when the distinct scores fit the " +
-    "bins; tracks it within tolerance on a continuous margin") {
-    val rnd = new scala.util.Random(17)
-    // quantized regime: 8 distinct scores, each with real mass — every
-    // value lands on a KLL edge, the binning is a bijection on values,
-    // so binned AUC is bit-equal to exact
-    val quant = (0 until 500).map { i =>
-      val sc = rnd.nextInt(8).toDouble
-      (i.toLong, sc, sc + rnd.nextDouble() * 4.0 > 5.5)
-    }.toDF("id", "score", "label")
-    val ex = Classifier.aucExact(quant, "score", "label").head()
-    val bi = Classifier.aucBinned(quant, "score", "label").head()
-    assert(ex.getLong(0) == bi.getLong(0))
-    assert(ex.getLong(1) == bi.getLong(1))
-    assert(ex.getDouble(2) == bi.getDouble(2))
-    // continuous regime: ~2000 distinct doubles — the caller trap
-    // aucExact documents; binned stays within a percent at 1024 bins
-    val cont = (0 until 2000).map { i =>
-      val sc = rnd.nextGaussian()
-      (i.toLong, sc, sc + rnd.nextGaussian() * 0.5 > 0.0)
-    }.toDF("id", "score", "label")
-    val exC = Classifier.aucExact(cont, "score", "label").head().getDouble(2)
-    val biC = Classifier.aucBinned(cont, "score", "label").head().getDouble(2)
-    assert(math.abs(exC - biC) < 0.01, s"exact=$exC binned=$biC")
-    // NaN scores are excluded on both paths
-    val withNaN = cont.union(Seq((9999L, Double.NaN, true))
-      .toDF("id", "score", "label"))
-    assert(Classifier.aucBinned(withNaN, "score", "label")
-      .head().getDouble(2) == biC)
-    // constant scores: no edges, one bin, AUC is the coin-flip 0.5
-    val const = (0 until 50).map(i => (i.toLong, 1.0, i % 2 == 0))
-      .toDF("id", "score", "label")
-    assert(Classifier.aucBinned(const, "score", "label")
-      .head().getDouble(2) == 0.5)
-  }
-
   test("histogram calibration: hand-computed bin rates, empty-bin " +
     "prior fallback, exact lookup expression, loud NaN, null " +
     "passthrough, loud guards") {

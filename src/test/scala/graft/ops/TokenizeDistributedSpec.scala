@@ -455,39 +455,9 @@ class TokenizeDistributedSpec extends AnyFunSuite {
         Seq(("l", "o"), ("lo", "w"), ("l", "ow"))))
   }
 
-  test("packSequences budgets in TRAINED-tokenizer tokens via the " +
-    "tokens override, and bins materialize as id arrays") {
-    val h = Seq(("low", 4L), ("lower", 2L), ("new", 3L)).toDF("w", "freq")
-    val fm = Tokenize.trainBpeFromHistogram(h, numMerges = 5)
-    val v = Tokenize.bpeVocabFromHistogram(h, fm)
-    // under the trained table every doc is exactly 2 tokens
-    // ([low, er] / [new, low]); the heuristic would count 1-2 words —
-    // a maxTokens=4 budget must pack exactly 2 docs per bin
-    val d = (0 until 8).map(i =>
-      (i.toLong, if (i % 2 == 0) "lower" else "new low"))
-      .toDF("doc_id", "text")
-    val packed = graft.ops.Packing.packSequences(d, maxTokens = 4,
-      numPartitions = 1,
-      tokens = Some(Tokenize.bpeCountExpr(col("text"), fm)))
-    val bins = packed.orderBy("bin_id").collect()
-    assert(bins.length == 4 &&
-      bins.forall(b => b.getAs[Long]("n_docs") == 2L &&
-        b.getAs[Long]("total_tokens") == 4L))
-    // the bins rehydrate as id arrays off the SAME trained table — the
-    // GPT-2-loader id surface, natively
-    val ids = d.join(
-      packed.select(explode(col("doc_ids")).as("doc_id"), col("bin_id")),
-      "doc_id")
-      .groupBy("bin_id")
-      .agg(flatten(collect_list(
-        Tokenize.bpeIdsExpr(col("text"), fm, v))).as("ids"))
-      .collect()
-    assert(ids.forall(_.getSeq[Int](1).length == 4))
-  }
-
-  test("reserved specials + separator-delimited packed sequences: ids " +
-    "shift by the special count, bins carry token_ids/doc_offsets, and " +
-    "the budget bounds the LM-visible length") {
+  test("reserved specials: ids shift by the special count, a mintable " +
+    "or duplicate special is loud, and <eos>-delimited ids decode back " +
+    "to each doc's pre-token concat") {
     val h = Seq(("low", 4L), ("lower", 2L), ("new", 3L)).toDF("w", "freq")
     val fm = Tokenize.trainBpeFromHistogram(h, numMerges = 5)
     val v0 = Tokenize.bpeVocabFromHistogram(h, fm)
@@ -504,43 +474,18 @@ class TokenizeDistributedSpec extends AnyFunSuite {
     assertThrows[IllegalArgumentException](
       Tokenize.bpeVocabFromHistogram(h, fm,
         specials = Seq("<eos>", "<eos>")))
-    // docs are 2 tokens each under the table ([low, er] / [new, low]);
-    // with a separator each costs 3 — maxTokens=6 packs exactly 2 docs
-    val d = (0 until 4).map(i =>
-      (i.toLong, if (i % 2 == 0) "lower" else "new low"))
+    // the LM-dataloader round trip: each doc's ids plus a trailing
+    // <eos>, concatenated, decode through the seam decoder with the
+    // reserved id mapped to its literal — boundaries survive
+    val d = Seq((0L, "lower new"), (1L, "low low"), (2L, "new"))
       .toDF("doc_id", "text")
     val eos = 1
-    val packed = Packing.packSequences(d, maxTokens = 6,
-      numPartitions = 1,
-      ids = Some(Tokenize.bpeIdsExpr(col("text"), fm, v)),
-      sepId = Some(eos))
-    val bins = packed.orderBy("bin_id").collect()
-    assert(bins.length == 2)
-    val idsByDoc = d.select(col("doc_id"),
+    val seq = d.select(col("doc_id"),
       Tokenize.bpeIdsExpr(col("text"), fm, v).as("ids"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
-    bins.foreach { b =>
-      assert(b.getAs[Long]("n_docs") == 2L)
-      assert(b.getAs[Long]("total_tokens") == 6L)
-      val toks = b.getSeq[Int](b.fieldIndex("token_ids"))
-      val offs = b.getSeq[Long](b.fieldIndex("doc_offsets"))
-      assert(toks.length == 6 && toks(2) == eos && toks(5) == eos)
-      assert(offs == Seq(0L, 3L))
-      // the sequence IS each doc's expr-path ids + trailing separator
-      val docIds = b.getSeq[Long](b.fieldIndex("doc_ids"))
-      assert(toks == docIds.flatMap(id => idsByDoc(id) :+ eos))
-    }
-    // without sepId: no separator cost, arrays still materialized and
-    // total_tokens is the emitted-sequence length
-    val b2 = Packing.packSequences(d, maxTokens = 4, numPartitions = 1,
-      ids = Some(Tokenize.bpeIdsExpr(col("text"), fm, v))).collect()
-    assert(b2.forall(b =>
-      b.getSeq[Int](b.fieldIndex("token_ids")).length ==
-        b.getAs[Long]("total_tokens")))
-    assert(b2.map(_.getAs[Long]("n_docs")).sum == 4L)
-    // a separator with no materialized sequence is a contract error
-    assertThrows[IllegalArgumentException](
-      Packing.packSequences(d, 4, sepId = Some(1)))
+      .collect().sortBy(_.getLong(0)).toSeq
+      .flatMap(r => r.getSeq[Int](1) :+ eos)
+    val enc = Tokenize.TrainedBpeTokenizer(fm, v).init()
+    assert(enc.decode(seq) == "lowernew<eos>lowlow<eos>new<eos>")
   }
 
   test("withTokenIds: the seam's id face — TrainedBpeTokenizer matches " +
@@ -575,31 +520,6 @@ class TokenizeDistributedSpec extends AnyFunSuite {
     def msgs(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(e => e.getMessage +: msgs(e.getCause))
     assert(msgs(ex).exists(m => m != null && m.contains("TokenEncoder")))
-  }
-
-  test("packed sequences decode back: a bin's token_ids through the " +
-    "seam decoder reconstruct each doc's pre-token concat with <eos> " +
-    "boundaries — the LM-dataloader round trip") {
-    val h = Seq(("low", 4L), ("lower", 2L), ("new", 3L)).toDF("w", "freq")
-    val fm = Tokenize.trainBpeFromHistogram(h, numMerges = 3)
-    val v = Tokenize.bpeVocabFromHistogram(h, fm, specials = Seq("<eos>"))
-    val d = Seq((0L, "lower new"), (1L, "low low"), (2L, "new"))
-      .toDF("doc_id", "text")
-    val packed = Packing.packSequences(d, maxTokens = 100,
-      numPartitions = 1,
-      ids = Some(Tokenize.bpeIdsExpr(col("text"), fm, v)),
-      sepId = Some(0))
-    val enc = Tokenize.TrainedBpeTokenizer(fm, v).init()
-    val pre = Map(0L -> "lowernew", 1L -> "lowlow", 2L -> "new")
-    val bins = packed.collect()
-    assert(bins.nonEmpty)
-    bins.foreach { b =>
-      val decoded = enc.decode(b.getSeq[Int](b.fieldIndex("token_ids")))
-      val docIds = b.getSeq[Long](b.fieldIndex("doc_ids"))
-      // decode maps the reserved id 0 to its literal "<eos>" — the
-      // boundaries survive the round trip alongside the content
-      assert(decoded == docIds.map(id => pre(id) + "<eos>").mkString)
-    }
   }
 
   test("scale-up: histogram fold costs slice-scan + vocab-aggregate, " +

@@ -59,6 +59,8 @@ class TokenizeSpec extends AnyFunSuite {
       assert(enc.decode(enc.encode(t)) == t, t)
     val ex = intercept[IllegalArgumentException](enc.decode(Seq(9999)))
     assert(ex.getMessage.contains("not in vocab"))
+    // a non-byte-level character is loud, never mangled
+    assertThrows[IllegalArgumentException](Tokenize.fromByteLevel(" "))
   }
 
   test("byte-to-unicode table matches the published GPT-2 mapping: " +
@@ -149,56 +151,6 @@ class TokenizeSpec extends AnyFunSuite {
     assert(ta > 0L && ta <= 7L && tb <= 4L)
   }
 
-  test("saveTrained/loadTrained: a natively trained tokenizer " +
-    "round-trips through the GPT-2 interchange format bit-exactly") {
-    // multi-byte (é) and line-separator (U+2028) symbols exercise the
-    // byte-level file encoding — a raw writer would emit whitespace-
-    // class characters into the line-and-space-delimited format
-    val lsep = "\u2028" // a valid pre-token Java \\s excludes
-    val d = Seq((0L, "abab abab café café"),
-      (1L, "ab café"), (2L, s"x${lsep}y$lsep"))
-      .toDF("doc_id", "text")
-    val h = Tokenize.wordHistogram(d)
-    val fm = Tokenize.trainBpeFromHistogram(h, numMerges = 4)
-    assert(fm.nonEmpty)
-    val v = Tokenize.bpeVocabFromHistogram(h, fm)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-tok-save-").toString
-    try {
-      Tokenize.saveTrained(fm, v, dir)
-      // tables round-trip bit-equal, so fit-once survives the process
-      val loaded = Tokenize.loadTrained(dir)
-      assert(loaded.merges == fm && loaded.vocab == v)
-      // ids bit-equal: the expr path under the ORIGINAL tables vs the
-      // seam under the LOADED ones — the verdict's round-trip contract
-      val viaExpr = d.select(col("doc_id"),
-        coalesce(Tokenize.bpeIdsExpr(col("text"), fm, v),
-          typedLit(Seq.empty[Int])).as("ids"))
-        .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
-      val viaLoaded = Tokenize.withTokenIds(d, loaded)
-        .collect().map(r => r.getAs[Long]("doc_id") ->
-          r.getSeq[Int](r.fieldIndex("token_ids"))).toMap
-      assert(viaExpr == viaLoaded)
-      // the files are VALID published-format: loadGpt2's own parser and
-      // vocab-coverage validation accept them unchanged
-      val g2 = Tokenize.loadGpt2(s"$dir/merges.txt", s"$dir/vocab.json")
-      assert(g2.merges.length == fm.length &&
-        g2.vocab.size == v.length)
-      // the U+2028 alphabet symbol is byte-mapped in BOTH files (raw,
-      // it would corrupt line-oriented parsers) yet round-trips back
-      assert(v.exists(_._1 == lsep) && loaded.vocab.exists(_._1 == lsep))
-      assert(!graft.core.Fs.readString(s"$dir/merges.txt").contains(lsep))
-      assert(!graft.core.Fs.readString(s"$dir/vocab.json").contains(lsep))
-    } finally graft.core.Fs.delete(dir)
-    // a non-byte-level character in a file is loud, never mangled
-    assertThrows[IllegalArgumentException](Tokenize.fromByteLevel(" "))
-    // a merge table whose output is missing from the vocab cannot be
-    // saved (it would produce a pair the loaders reject)
-    assertThrows[IllegalArgumentException](
-      Tokenize.saveTrained(Seq(("a", "b")), Seq(("a", 0), ("b", 1)),
-        dir + "-bad"))
-  }
-
   test("alphabetFromHistogram + oovChars: the coverage monitor counts " +
     "exactly the code points outside the trained alphabet") {
     val d = Seq((0L, "abab cd"), (1L, "ab x")).toDF("doc_id", "text")
@@ -224,60 +176,6 @@ class TokenizeSpec extends AnyFunSuite {
     val n = Seq((0L, null: String)).toDF("doc_id", "text")
       .select(Tokenize.oovChars(col("text"), alpha)).head()
     assert(n.isNullAt(0))
-    // the SERVING shape: the same alphabet recovers from a persisted
-    // tokenizer's vocab alone (no histogram) — merge outputs span >= 2
-    // code points, so single-code-point vocab strings ARE the alphabet
-    assert(Tokenize.alphabetOf(v) == alpha)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-tok-alpha-").toString
-    try {
-      Tokenize.saveTrained(
-        Tokenize.trainBpeFromHistogram(h, numMerges = 2), v, dir)
-      assert(Tokenize.alphabetOf(Tokenize.loadTrained(dir).vocab) == alpha)
-    } finally graft.core.Fs.delete(dir)
-    // a supplementary-char alphabet symbol stays ONE symbol in the
-    // recovered set (codePointSyms, not code units)
-    val emojiVocab = Seq((emoji, 0), ("a", 1), (emoji + "a", 2))
-    assert(Tokenize.alphabetOf(emojiVocab) == Seq("a", emoji))
-  }
-
-  test("saveTrainedStats/loadTrainedStats: the drift reference " +
-    "survives the process bit-exactly; absence is None, corruption " +
-    "is loud") {
-    val d = Seq((0L, "abab abab low lower"), (1L, "ab low"))
-      .toDF("doc_id", "text")
-    val h = Tokenize.wordHistogram(d)
-    val fm = Tokenize.trainBpeFromHistogram(h, numMerges = 3)
-    val v = Tokenize.bpeVocabFromHistogram(h, fm)
-    // the fit-time reference: freq-weighted tokens per char over the
-    // histogram under the trained chain (the monitor's anchor)
-    val row = h.agg(
-      sum(col("freq") * Tokenize.bpeCountExpr(col("w"), fm)).as("t"),
-      sum(col("freq") * length(col("w"))).as("c")).head()
-    val ref = row.getAs[Long]("t").toDouble / row.getAs[Long]("c")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-tok-stats-").toString
-    try {
-      Tokenize.saveTrained(fm, v, dir)
-      // a bare interchange pair has no reference — None, not a guess
-      assert(Tokenize.loadTrainedStats(dir).isEmpty)
-      Tokenize.saveTrainedStats(dir, ref)
-      // bit-exact round trip: a fresh process can serve the monitor
-      // without the training histogram
-      assert(Tokenize.loadTrainedStats(dir).contains(ref))
-      // the GPT-2 pair itself is untouched by the sidecar
-      assert(Tokenize.loadTrained(dir).merges == fm)
-      // a present-but-corrupt sidecar is loud, never a silent
-      // monitor-less fallback
-      graft.core.Fs.writeString(s"$dir/stats.json", "{\"other\": 1}")
-      assertThrows[IllegalArgumentException](
-        Tokenize.loadTrainedStats(dir))
-      // non-positive references are rejected at save time too
-      assertThrows[IllegalArgumentException](
-        Tokenize.saveTrainedStats(dir, 0.0))
-      assertThrows[IllegalArgumentException](
-        Tokenize.saveTrainedStats(dir, Double.NaN))
-    } finally graft.core.Fs.delete(dir)
   }
 
   test("bpeDecodeExpr: decode inverts encode to the pre-token concat; " +

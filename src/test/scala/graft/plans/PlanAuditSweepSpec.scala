@@ -175,12 +175,10 @@ class PlanAuditSweepSpec extends AnyFunSuite {
         .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
         .limit(60).cache()
       vecs.count(): Unit
-      // one-time offline setup the bloom/PQ sinks assume
+      // one-time offline setup the bloom sink assumes
       val (bloom, refSh) = Contamination.buildReferenceBloom(
         batch.limit(10), n = 5, expectedItems = 10000L)
       refSh.cache().count(): Unit
-      Similarity.buildPqIndex(vecs, s"$dir/pq", m = 2, codewords = 4,
-        iters = 1)
       val clfBatch = batch.select(col("doc_id"),
         Classifier.hashedIndices(Text.tokens(col("text")), 64).as("idx"),
         (size(filter(Text.tokens(col("text")), t => t === "hash")) >= 2)
@@ -188,12 +186,6 @@ class PlanAuditSweepSpec extends AnyFunSuite {
       // each entry runs EXACTLY the composition its Monitor sink's
       // foreachBatch closure performs, once
       val folds: Seq[(String, () => Unit)] = Seq(
-        "incrementalDedupSink" -> (() => {
-          Dedup.incrementalExactDedup(batch, s"$dir/exact", "text",
-            "doc_id",
-            sinkFirst = _.write.mode("append").parquet(s"$dir/exact_out"))
-          ()
-        }),
         "minhashDedupSink" -> (() => {
           Dedup.incrementalMinhashDedup(batch, s"$dir/near",
             sinkFirst = _.write.mode("append").parquet(s"$dir/near_out"))
@@ -252,10 +244,6 @@ class PlanAuditSweepSpec extends AnyFunSuite {
           batch.join(bad, Seq("doc_id"), "left_anti")
             .selectExpr("doc_id", "source")
             .write.mode("append").parquet(s"$dir/bloom_out")
-        }),
-        "pqIndexSink" -> (() => {
-          Similarity.appendToPqIndex(vecs, s"$dir/pq")
-          ()
         }),
         "semanticDedupSink" -> (() => {
           Similarity.incrementalSemanticDedup(vecs, s"$dir/sem", 0.95)

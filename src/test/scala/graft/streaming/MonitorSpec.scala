@@ -489,38 +489,6 @@ class MonitorSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("incremental dedup sink: the on-disk fingerprint index survives " +
-    "query restarts and is shared across checkpoints") {
-    import spark.implicits._
-    val root = tmpDir("graft-incsink-")
-    val in = s"$root/in"; val out = s"$root/out"; val idx = s"$root/idx"
-    def write(rows: Seq[(Long, String)]): Unit =
-      rows.toDF("doc_id", "text").coalesce(1)
-        .write.mode("append").parquet(in)
-    val schema = StructType(Seq(StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    def start(cp: String) = Monitor.incrementalDedupSink(
-      spark.readStream.schema(schema).parquet(in), idx, out, cp)
-    write(Seq((1L, "alpha one"), (2L, "beta two"), (3L, "alpha one")))
-    val q1 = start(s"$root/cp1")
-    try q1.processAllAvailable() finally q1.stop()
-    // in-batch dedup: one survivor per fingerprint
-    assert(spark.read.parquet(out).count() == 2)
-    // a FRESH checkpoint replays the whole input — but the seen-set is
-    // the on-disk index, not stream state, so nothing re-survives
-    val q2 = start(s"$root/cp2")
-    try q2.processAllAvailable() finally q2.stop()
-    assert(spark.read.parquet(out).count() == 2)
-    // resuming the original checkpoint: re-crawled content drops, the
-    // genuinely new doc survives
-    write(Seq((10L, "alpha one"), (11L, "gamma three")))
-    val q3 = start(s"$root/cp1")
-    try q3.processAllAvailable() finally q3.stop()
-    val kept = spark.read.parquet(out).select("doc_id")
-      .collect().map(_.getLong(0)).sorted.toSeq
-    assert(kept == Seq(1L, 2L, 11L))
-  }
-
   test("minhash-dedup sink: a near-edited re-crawl in a LATER batch " +
     "drops against the persisted index; novel docs survive") {
     import spark.implicits._
@@ -869,7 +837,7 @@ class MonitorSpec extends AnyFunSuite {
   }
 
   test("bloom-decontamination sink: drained two-batch stream equals the " +
-    "batch bloomDecontaminate, exactly") {
+    "batch bloomReport anti-join, exactly") {
     import spark.implicits._
     import graft.ops.Contamination
     val dir = tmpDir("graft-bloomsink-")
@@ -887,8 +855,9 @@ class MonitorSpec extends AnyFunSuite {
     ).toDF("doc_id", "text", "source")
     val (bloomBytes, refSh) =
       Contamination.buildReferenceBloom(ref, n = 3, expectedItems = 1000L)
-    val expected = Contamination.bloomDecontaminate(docs, ref, 3, 3,
-      expectedItems = 1000L)
+    val bad = Contamination.bloomReport(docs, ref, 3, 3,
+      expectedItems = 1000L).select(col("id").as("doc_id"))
+    val expected = docs.join(bad, Seq("doc_id"), "left_anti")
       .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
     val schema = StructType(Seq(
       StructField("doc_id", LongType),
@@ -909,38 +878,6 @@ class MonitorSpec extends AnyFunSuite {
       .map(_.getLong(0)).sorted.toSeq
     assert(got == expected, s"stream=$got batch=$expected")
     assert(!got.contains(1L) && got.contains(2L))
-  }
-
-  test("pq-index sink: streamed appends produce the same codes as " +
-    "batch appends") {
-    import spark.implicits._
-    import graft.ops.Similarity
-    val dir = tmpDir("graft-pqsink-")
-    def vec(seed: Int): Array[Float] =
-      Array.tabulate(8)(i => ((seed * 31 + i * 7) % 13 - 6).toFloat)
-    val base = (0L until 20L).map(i => (i, vec(i.toInt))).toDF("vec_id", "embedding")
-    val late = (100L until 110L).map(i => (i, vec(i.toInt))).toDF("vec_id", "embedding")
-    // batch reference index
-    Similarity.buildPqIndex(base, s"$dir/ref", m = 2, codewords = 4,
-      trainFraction = 1.0)
-    Similarity.appendToPqIndex(late, s"$dir/ref")
-    // streamed index: same build, appends arrive via the sink
-    Similarity.buildPqIndex(base, s"$dir/idx", m = 2, codewords = 4,
-      trainFraction = 1.0)
-    late.coalesce(1).write.mode("append").parquet(s"$dir/in")
-    val schema = StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("embedding", ArrayType(FloatType))))
-    val q = Monitor.pqIndexSink(
-      spark.readStream.schema(schema).parquet(s"$dir/in"),
-      s"$dir/idx", s"$dir/ckpt")
-    try q.processAllAvailable() finally q.stop()
-    def codes(p: String) =
-      spark.read.parquet(s"$p/codes").collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
-    assert(codes(s"$dir/idx") == codes(s"$dir/ref"))
-    assert(codes(s"$dir/idx").map(_._1) ==
-      ((0L until 20L) ++ (100L until 110L)).toSet)
   }
 
   test("softmax sink: online folds refresh the persisted router; a " +
