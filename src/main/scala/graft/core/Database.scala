@@ -13,10 +13,9 @@ import org.apache.spark.sql.types._
   *   - appends write only the new run's partition; old data is never
   *     touched except on pset-schema growth, where the hash column must be
   *     recomputed (ref psweep.py:690-710) — a single distributed rewrite;
-  *   - [[read]] serves the merged schema from a snapshot keyed by the
-  *     exact data-file listing (`path, length, mtime` of every file): a
-  *     read of an unchanged db starts no Spark job, and the first read
-  *     after any append or rewrite merges the footers once;
+  *   - [[read]] merges the schema through [[Fs.parquet]]'s footer cache:
+  *     a read of an unchanged db starts no Spark job, and the first read
+  *     after an append reads only the new files' footers, on the driver;
   *   - a [[Study]] round learns its counters, its skip-dups hits and its
   *     `_pset_id` collisions from ONE column-pruned aggregate over the
   *     base, with or without a skip manifest;
@@ -53,7 +52,7 @@ class Database(val spark: SparkSession, val calcDir: String,
     * reads afterwards, just without the persisted stats tier. */
   def close(): Unit = {
     graft.ops.Stats.unregisterStore(dbPath)
-    Database.schemas.remove(snapshotKey)
+    Fs.forgetFooters(dbPath)
     ()
   }
 
@@ -144,30 +143,8 @@ class Database(val spark: SparkSession, val calcDir: String,
   private def scanOpt(): Option[DataFrame] =
     if (present) Some(scan()) else None
 
-  /** [[read]] without the recovery step. While the data-file listing
-    * equals the one the snapshot was taken at, the snapshot's schema is
-    * served and no footer is read; otherwise the footers are merged and
-    * that frame's schema becomes the snapshot. The listing is taken
-    * BEFORE the merge, so a file landing in between can only make the
-    * next read merge again, never serve a schema missing its columns. */
-  private def scan(): DataFrame = {
-    val files = Database.listing(dbPath)
-    Option(Database.schemas.get(snapshotKey))
-      .filter(snap => files.nonEmpty && snap._1 == files) match {
-      case Some((_, schema)) => spark.read.schema(schema).parquet(dbPath)
-      case None =>
-        val df = spark.read.option("mergeSchema", "true").parquet(dbPath)
-        if (files.nonEmpty) Database.schemas.put(snapshotKey, files -> df.schema)
-        df
-    }
-  }
-
-  /** This db's entry in [[Database.schemas]]: the qualified path, so
-    * handles opened through relative and absolute paths share it. */
-  private lazy val snapshotKey: String = {
-    val p = new org.apache.hadoop.fs.Path(dbPath)
-    Fs.fs(dbPath).makeQualified(p).toString
-  }
+  /** [[read]] without the recovery step. */
+  private def scan(): DataFrame = Fs.parquet(spark, dbPath, mergeSchema = true)
 
   /** Append new rows (one run) as a new `_run_id` partition. When the
     * opt-in skip manifest exists ([[optimizeLayout]] /
@@ -270,16 +247,17 @@ class Database(val spark: SparkSession, val calcDir: String,
   private def updateSkipManifestUnlocked(): Unit = {
     if (!Fs.exists(manifestDir)) return
     Fs.delete(commitMarker)
-    val m = spark.read.parquet(manifestDir)
+    val m = Fs.parquet(spark, manifestDir)
     if (!manifestCols.forall(m.columns.contains)) {
       rebuildSkipManifestUnlocked(); return
     }
     val known = m.select(col("file"))
       .collect().map(r => normalizePath(r.getString(0))).toSet
-    val added = scan().inputFiles.map(normalizePath).filterNot(known)
+    val db = scan()
+    val added = db.inputFiles.map(normalizePath).filterNot(known)
     if (added.nonEmpty) {
-      val src = spark.read.option("basePath", dbPath)
-        .option("mergeSchema", "true").parquet(added.toIndexedSeq: _*)
+      val src = spark.read.option("basePath", dbPath).schema(db.schema)
+        .parquet(added.toIndexedSeq: _*)
       fileStats(src).coalesce(1).write.mode("append").parquet(manifestDir)
     }
     Fs.writeString(commitMarker, s"committed=${java.time.Instant.now()}")
@@ -295,7 +273,7 @@ class Database(val spark: SparkSession, val calcDir: String,
     * re-applied — pruning is an optimization, never a filter. */
   private def pruned(probe: Column, cols: String*)(
       keep: Row => Boolean): DataFrame = {
-    val m = if (fresh) Some(spark.read.parquet(manifestDir)) else None
+    val m = if (fresh) Some(Fs.parquet(spark, manifestDir)) else None
     m.filter(df => cols.forall(df.columns.contains)) match {
       case None => scan().filter(probe)
       case Some(df) =>
@@ -420,7 +398,7 @@ class Database(val spark: SparkSession, val calcDir: String,
       val m =
         if (!fresh) None
         else {
-          val mf = spark.read.parquet(manifestDir)
+          val mf = Fs.parquet(spark, manifestDir)
           if (!Seq("run_seq_max", "time_utc_max")
               .forall(mf.columns.contains)) None
           else Some(mf.select(col("run_seq_max"), col("time_utc_max"))
@@ -683,32 +661,6 @@ object Database {
   def apply(spark: SparkSession, calcDir: String,
             basename: String = "database"): Database =
     new Database(spark, calcDir, basename)
-
-  /** [[Database.read]]'s schema snapshots: per qualified db path, the
-    * data-file listing a merged schema was taken at, and that schema.
-    * Written only by a merging read; dropped by [[Database.close]]. */
-  private val schemas = new java.util.concurrent.ConcurrentHashMap[
-    String, (Set[(String, Long, Long)], StructType)]()
-
-  /** `(path, length, mtime)` of every data file under `dir`, skipping
-    * the names the parquet reader skips (`.x`, and `_x` unless it is a
-    * `k=v` partition dir) — so `_graft_stats`/`_graft_skip` writes leave
-    * it unchanged. A `listStatus` walk: see [[Fs]] on located listings.
-    * Empty when `dir` is missing or vanishes mid-walk. */
-  private def listing(dir: String): Set[(String, Long, Long)] = {
-    import org.apache.hadoop.fs.Path
-    val fs = Fs.fs(dir)
-    def walk(p: Path): Seq[(String, Long, Long)] =
-      fs.listStatus(p).toSeq.flatMap { st =>
-        val n = st.getPath.getName
-        if (n.startsWith(".") || (n.startsWith("_") && !n.contains("=")))
-          Seq.empty
-        else if (st.isDirectory) walk(st.getPath)
-        else Seq((st.getPath.toString, st.getLen, st.getModificationTime))
-      }
-    try walk(new Path(dir)).toSet
-    catch { case _: java.io.FileNotFoundException => Set.empty }
-  }
 
   /** Which of `values` already exist in `df`'s column `colName` — one
     * column-pruned pass, broadcast small side (the J1 dedup shape). */

@@ -72,15 +72,12 @@ object Fold {
                 batchId: Option[String] = None)
                (merge: Option[DataFrame] => DataFrame): DataFrame = {
     swap(path, batchId) { tmp =>
-      val current =
-        if (Fs.exists(path) && Fs.listNames(path).nonEmpty)
-          Some(spark.read.parquet(path))
-        else None
+      val current = Fs.parquetOpt(spark, path)
       // the tmp write executes the merge plan (which reads the live
       // table) before any rename touches it — no lineage hazard
       Some(merge(current).coalesce(1).write.mode("overwrite").parquet(tmp))
     }
-    spark.read.parquet(path)
+    Fs.parquet(spark, path)
   }
 
   /** The cleared staging directory for a rewrite of `path` (a crashed

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.shim
 import org.apache.spark.sql.types.{DataType, LongType, StringType, ArrayType}
-import graft.core.Fold
+import graft.core.{Fold, Fs}
 import graft.core.Pin.PinOps
 
 /** Deduplication operators for training-data pipelines, each designed as a
@@ -121,11 +121,7 @@ object Dedup {
     val spark = batch.sparkSession
     Fold.recoverIndex(indexPath)
     val withFp = batch.withColumn("__fp", Text.fingerprint(col(textCol)))
-    val existing: Option[DataFrame] =
-      if (graft.core.Fs.exists(indexPath) &&
-        graft.core.Fs.listNames(indexPath).nonEmpty)
-        Some(spark.read.parquet(indexPath))
-      else None
+    val existing = Fs.parquetOpt(spark, indexPath)
     val newVsIndex = existing match {
       case Some(idx) =>
         // scale shape: the index is corpus-sized, the batch is not — a
@@ -710,11 +706,7 @@ object Dedup {
     } else sigBase).pinned()
     val mhCols = (0 until numHashes).map(i => s"mh$i")
     val dupOfIndex: DataFrame = {
-      val existing =
-        if (graft.core.Fs.exists(indexPath) &&
-          graft.core.Fs.listNames(indexPath).nonEmpty)
-          Some(spark.read.parquet(indexPath)) else None
-      existing match {
+      Fs.parquetOpt(spark, indexPath) match {
         case None => sig.select(col("id")).limit(0)
         case Some(idx) =>
           val idxHasSh = idx.columns.contains("sh")
@@ -906,16 +898,15 @@ object Dedup {
     * sequencing bug, not recoverable here. */
   def compactIndex(spark: SparkSession, indexPath: String,
                    numPartitions: Int = 0): Unit = {
-    import graft.core.Fs
     Fold.swap(indexPath) { tmp =>
-      Option.when(Fs.exists(indexPath) && Fs.listNames(indexPath).nonEmpty) {
+      Option.when(Fs.listNames(indexPath).nonEmpty) {
         val bytes = Fs.fs(indexPath)
           .getContentSummary(new org.apache.hadoop.fs.Path(indexPath))
           .getLength
         val perFile = spark.sessionState.conf.filesMaxPartitionBytes
         val n = if (numPartitions > 0) numPartitions
         else math.max(1, math.ceil(bytes.toDouble / perFile).toInt)
-        spark.read.parquet(indexPath).repartition(n)
+        Fs.parquet(spark, indexPath).repartition(n)
           .write.mode("overwrite").parquet(tmp)
       }
     }
@@ -969,16 +960,13 @@ object Dedup {
     val fps = batch.select(col(idCol).as("id"), sigExpr.as("f"))
       .filter(col("f").isNotNull)
       .pinned()
-    val existing: Option[DataFrame] =
-      if (graft.core.Fs.exists(indexPath) &&
-        graft.core.Fs.listNames(indexPath).nonEmpty) {
-        val idx = spark.read.parquet(indexPath)
-        require(idx.columns.sorted.toSeq == Seq("f", "id"),
-          s"index at $indexPath is not a simhash signature index " +
-            s"(columns ${idx.columns.mkString(", ")}) — one index " +
-            "family per path")
-        Some(idx)
-      } else None
+    val existing = Fs.parquetOpt(spark, indexPath).map { idx =>
+      require(idx.columns.sorted.toSeq == Seq("f", "id"),
+        s"index at $indexPath is not a simhash signature index " +
+          s"(columns ${idx.columns.mkString(", ")}) — one index " +
+          "family per path")
+      idx
+    }
     def bandChunks(df: DataFrame, fAs: String): DataFrame =
       df.select(col("f").as(fAs))
         .select(col(fAs), explode(array((0 until 4).map(i =>

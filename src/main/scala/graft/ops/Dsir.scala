@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import graft.core.Fs
 
 /** DSIR-style data selection via importance resampling (Xie et al. 2023,
   * "Data Selection for Language Models via Importance Resampling",
@@ -373,7 +374,7 @@ object Dsir {
     * routing output is independent of row order on disk. */
   def loadRouter(spark: org.apache.spark.sql.SparkSession,
                  path: String): FrozenRouter = {
-    val df = spark.read.parquet(path)
+    val df = Fs.parquet(spark, path)
     require(df.columns.sorted.sameElements(
       Array("bucket", "domain", "lw")),
       s"$path is not a saved router (columns ${df.columns.mkString(",")})")

@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, IntegralDivide, Li
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.shim
 import org.apache.spark.sql.types._
+import graft.core.Fs
 
 /** Physical-layout control for 100 TB tables: Z-order (Morton)
   * clustering so multi-column range predicates touch few files, and a
@@ -173,7 +174,7 @@ object Layout {
   def writeSkipManifest(spark: SparkSession, dir: String,
                         cols: Seq[String]): Unit = {
     require(cols.nonEmpty, "need at least one manifest column")
-    val m = spark.read.parquet(dir)
+    val m = Fs.parquet(spark, dir)
       .groupBy(input_file_name().as("file"))
       .agg(count(lit(1)).as("rows"),
         cols.flatMap(c => Seq(
@@ -194,7 +195,7 @@ object Layout {
   def skipScan(spark: SparkSession, dir: String,
                box: Seq[(String, Long, Long)]): (DataFrame, (Int, Int)) = {
     require(box.nonEmpty, "need at least one box dimension")
-    val manifest = spark.read.parquet(s"$dir/_graft_skip")
+    val manifest = Fs.parquet(spark, s"$dir/_graft_skip")
     val keep = box.foldLeft(lit(true)) { case (acc, (c, lo, hi)) =>
       acc && col(s"${c}_max") >= lit(lo) && col(s"${c}_min") <= lit(hi)
     }
@@ -209,7 +210,7 @@ object Layout {
     }
     val df =
       if (files.isEmpty)
-        spark.read.parquet(dir).filter(lit(false))
+        Fs.parquet(spark, dir).filter(lit(false))
       else spark.read.parquet(files.toIndexedSeq: _*).filter(precise)
     (df, pruned)
   }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core.Pin.PinOps
+import graft.core.Fs
 
 /** Sparse retrieval over a document corpus — BM25 scoring for
   * training-data curation (find documents matching a probe query,
@@ -464,7 +465,7 @@ object Retrieval {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) Set.empty
     else {
-      val stats = spark.read.parquet(s"$path/stats")
+      val stats = Fs.parquet(spark, s"$path/stats")
       if (!stats.columns.contains("batch_id")) Set.empty
       else stats.select(col("batch_id")).na.drop()
         .collect().map(_.getString(0)).toSet
@@ -494,9 +495,9 @@ object Retrieval {
     require(k > 0, "k must be positive")
     graft.core.Fold.recoverIndex(s"$path/postings")
     graft.core.Fold.recoverIndex(s"$path/stats")
-    val post = spark.read.parquet(s"$path/postings")
+    val post = Fs.parquet(spark, s"$path/postings")
       .filter(col("term").isin(queryTerms: _*))
-    val statsRaw = spark.read.parquet(s"$path/stats")
+    val statsRaw = Fs.parquet(spark, s"$path/stats")
     // a raced double-append that slipped past the appender's guard
     // (two writers, same batch) is detectable here: same batch_id twice
     if (statsRaw.columns.contains("batch_id")) {

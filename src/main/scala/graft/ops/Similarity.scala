@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Pin.PinOps
+import graft.core.Fs
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`array<float>`).
@@ -928,7 +929,7 @@ object Similarity {
   private def loadPqBooks(spark: org.apache.spark.sql.SparkSession,
                           path: String)
       : IndexedSeq[Array[Array[Double]]] = {
-    val rows = spark.read.parquet(s"$path/books")
+    val rows = Fs.parquet(spark, s"$path/books")
       .select(col("s"), col("cid"), col("vals")).collect()
     val m = rows.map(_.getInt(0)).max + 1
     (0 until m).map { s =>
@@ -967,7 +968,7 @@ object Similarity {
     require(cand >= k, s"candidates=$cand must be >= k=$k")
     val books = loadPqBooks(vectors.sparkSession, path)
     val sub = books.head.head.length
-    val codes = vectors.sparkSession.read.parquet(s"$path/codes")
+    val codes = Fs.parquet(vectors.sparkSession, s"$path/codes")
     pqAdcRank(codes, books, vectors, queries, k, cand, sub, idCol, vecCol)
   }
 
@@ -1070,20 +1071,6 @@ object Similarity {
     Dedup.keepClusterCanonical(corpus, pairs, idCol)
   }
 
-  /** Approximate cosine near-dup pairs: LSH signature buckets generate
-    * candidates (multi-probe on one side covers all pairs within
-    * `radius` signature bits), exact cosine verifies every emitted pair —
-    * so precision is 1.0 and only RECALL is approximate. This is the
-    * opt-in scale path past [[cosinePairs]]' exactness: candidate volume
-    * is bucket-quadratic, not corpus-quadratic, whatever the threshold.
-    *
-    * Regime note: signature collision probability per plane is
-    * `1 - angle/pi`, so LSH candidates are only dense enough for NEAR-DUP
-    * thresholds (~0.9+, the dedup use case); at low thresholds (broad
-    * similarity mining) recall collapses and [[cosinePairs]]' exact
-    * blocking is the right tool. Pairs of identical signature meet once;
-    * each emitted pair is verified once (probes are distinct signatures,
-    * so a pair can only meet through one probe). */
   /** Incremental SEMANTIC dedup across batches via a persisted LSH
     * signature index — the embedding-modality member of the incremental
     * family ([[graft.ops.Dedup.incrementalExactDedup]] /
@@ -1143,16 +1130,13 @@ object Similarity {
       .select(col(idCol).as("id"), col(vecCol).as("v"),
         lshSignature(col(vecCol), hp).as("sig"))
       .pinned()
-    val existing: Option[DataFrame] =
-      if (graft.core.Fs.exists(indexPath) &&
-        graft.core.Fs.listNames(indexPath).nonEmpty) {
-        val idx = spark.read.parquet(indexPath)
-        require(idx.columns.sorted.toSeq == Seq("id", "sig", "v"),
-          s"index at $indexPath is not a semantic (id, sig, v) index " +
-            s"(columns ${idx.columns.mkString(", ")}) — one index " +
-            "family per path")
-        Some(idx)
-      } else None
+    val existing = Fs.parquetOpt(spark, indexPath).map { idx =>
+      require(idx.columns.sorted.toSeq == Seq("id", "sig", "v"),
+        s"index at $indexPath is not a semantic (id, sig, v) index " +
+          s"(columns ${idx.columns.mkString(", ")}) — one index " +
+          "family per path")
+      idx
+    }
     val probeCol = explode(probeSignatures(col("sig"), planes, radius))
     val dupOfIndex = existing match {
       case None => sigs.select(col("id")).limit(0)
@@ -1196,6 +1180,20 @@ object Similarity {
       .drop("__sig", "__kept")
   }
 
+  /** Approximate cosine near-dup pairs: LSH signature buckets generate
+    * candidates (multi-probe on one side covers all pairs within
+    * `radius` signature bits), exact cosine verifies every emitted pair —
+    * so precision is 1.0 and only RECALL is approximate. This is the
+    * opt-in scale path past [[cosinePairs]]' exactness: candidate volume
+    * is bucket-quadratic, not corpus-quadratic, whatever the threshold.
+    *
+    * Regime note: signature collision probability per plane is
+    * `1 - angle/pi`, so LSH candidates are only dense enough for NEAR-DUP
+    * thresholds (~0.9+, the dedup use case); at low thresholds (broad
+    * similarity mining) recall collapses and [[cosinePairs]]' exact
+    * blocking is the right tool. Pairs of identical signature meet once;
+    * each emitted pair is verified once (probes are distinct signatures,
+    * so a pair can only meet through one probe). */
   def annCosinePairs(corpus: DataFrame, threshold: Double,
                      planes: Int = 8, radius: Int = 1,
                      idCol: String = "vec_id",

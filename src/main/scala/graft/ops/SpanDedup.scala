@@ -175,7 +175,7 @@ object SpanDedup {
         val keys =
           if (batchCounts.count() <= (1L << 25)) broadcast(batchH)
           else batchH
-        spark.read.parquet(indexPath)
+        Fs.parquet(spark, indexPath)
           .join(keys, Seq("h"), "left_semi")
           .groupBy(col("h"))
           .agg(sum(col("cnt")).as("__seen"))

@@ -22,9 +22,6 @@ import graft.core.Pin.PinOps
   */
 object Relational {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
   /** Unique memory-sink names for repeated q_stream_sessionize runs
     * within one session (Bench runs every query twice). */
   private val streamQueryId = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -62,10 +59,16 @@ object Relational {
     * ("events schema contract"). */
   private[queries] def eventsTs(
       s: SparkSession, dir: String): (org.apache.spark.sql.types.StructType, Column) = {
-    // set the legacy conf BEFORE probing: with it, ns-INT64 files infer
-    // `ts: long` instead of throwing; native timestamp files are unaffected
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
+    // probe under the legacy conf: with it, ns-INT64 files infer
+    // `ts: long` instead of throwing; native timestamp files are
+    // unaffected. Only the probe needs it — a read under the explicit
+    // schema executes without it — so the caller's value is restored.
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val prev = s.conf.getAll.get(key)
+    s.conf.set(key, "true")
+    val schema =
+      try Tables(s, dir, "events").schema
+      finally prev.fold(s.conf.unset(key))(s.conf.set(key, _))
     val tsCol = schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         expr("timestamp_micros(ts div 1000)")
@@ -79,8 +82,9 @@ object Relational {
   /** Events table with `ts` normalized to a microsecond timestamp
     * regardless of the on-disk encoding (see [[eventsTs]]). */
   private[queries] def events(s: SparkSession, dir: String): DataFrame = {
-    val (_, tsCol) = eventsTs(s, dir)
-    t(s, dir, "events").withColumn("ts", tsCol)
+    val (schema, tsCol) = eventsTs(s, dir)
+    s.read.schema(schema).parquet(s"$dir/events.parquet")
+      .withColumn("ts", tsCol)
   }
 
   /** Exact cross-engine sum of a double expression: round to cents with
@@ -97,7 +101,7 @@ object Relational {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // P8: boolean predicate filter + projection (pushed to parquet)
     "q_filter_proj" -> ((s, dir) => {
-      t(s, dir, "lineitem")
+      Tables(s, dir, "lineitem")
         .filter(col("l_shipdate") >= lit("1995-06-01").cast("timestamp") &&
           col("l_quantity") < 25 && col("l_discount") > 0.02)
         .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
@@ -107,7 +111,7 @@ object Relational {
 
     // P1: df_filter_conds fused masks — (A and B) xor C
     "q_filter_conds_xor" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
+      val li = Tables(s, dir, "lineitem")
       Database.dfFilterConds(li,
         Seq(col("l_quantity") > 30 && col("l_discount") < 0.05,
           col("l_extendedprice") > 30000), "xor")
@@ -117,7 +121,7 @@ object Relational {
 
     // A6/A7: grouped aggregation (the TPC-H Q1 shape)
     "q_agg_pricing" -> ((s, dir) => {
-      t(s, dir, "lineitem")
+      Tables(s, dir, "lineitem")
         .filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(
@@ -136,7 +140,7 @@ object Relational {
     // GROUP BY; quantities floored to cents pre-aggregation for an exact
     // cross-engine sum
     "q_skew_agg" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem").withColumn("qty_cents",
+      val li = Tables(s, dir, "lineitem").withColumn("qty_cents",
         floor(col("l_quantity") * 100 + lit(0.5)).cast("long"))
       graft.ops.Skew.saltedAgg(li, Seq("l_returnflag"), n = 8,
         saltSource = Seq("l_orderkey"),
@@ -149,9 +153,9 @@ object Relational {
     // small side replicated n times — must be join-transparent, so the
     // oracle is the plain inner join
     "q_skew_join" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
+      val li = Tables(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
-      val ord = t(s, dir, "orders")
+      val ord = Tables(s, dir, "orders")
         .filter(col("o_orderpriority") === "1-URGENT")
         .select(col("o_orderkey").as("l_orderkey"), col("o_orderstatus"))
       graft.ops.Skew.saltedJoin(li, ord, "l_orderkey", n = 8,
@@ -165,10 +169,10 @@ object Relational {
 
     // J5-style multi-way join with broadcast dims (TPC-H Q5 shape)
     "q_join_stars" -> ((s, dir) => {
-      val orders = t(s, dir, "orders")
-      val customer = broadcast(t(s, dir, "customer"))
-      val nation = broadcast(t(s, dir, "nation"))
-      val region = broadcast(t(s, dir, "region"))
+      val orders = Tables(s, dir, "orders")
+      val customer = broadcast(Tables(s, dir, "customer"))
+      val nation = broadcast(Tables(s, dir, "nation"))
+      val region = broadcast(Tables(s, dir, "region"))
       orders
         .join(customer, col("o_custkey") === col("c_custkey"))
         .join(nation, col("c_nationkey") === col("n_nationkey"))
@@ -181,8 +185,8 @@ object Relational {
 
     // left_semi: customers having a big order (EXISTS)
     "q_join_semi" -> ((s, dir) => {
-      val customer = t(s, dir, "customer")
-      val big = t(s, dir, "orders").filter(col("o_totalprice") > 100000)
+      val customer = Tables(s, dir, "customer")
+      val big = Tables(s, dir, "orders").filter(col("o_totalprice") > 100000)
       customer.join(big, col("c_custkey") === col("o_custkey"), "left_semi")
         .groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("n_customers"))
@@ -192,8 +196,8 @@ object Relational {
     // left_anti: customers with no orders at all (NOT EXISTS) — the J1
     // dedup anti-join shape on relational data
     "q_join_anti" -> ((s, dir) => {
-      val customer = t(s, dir, "customer")
-      val orders = t(s, dir, "orders")
+      val customer = Tables(s, dir, "customer")
+      val orders = Tables(s, dir, "orders")
       customer.join(orders, col("c_custkey") === col("o_custkey"), "left_anti")
         .select(col("c_custkey"), col("c_name"))
         .orderBy(col("c_custkey"))
@@ -206,7 +210,7 @@ object Relational {
     "q_dedup_first" -> ((s, dir) => {
       val ord = struct(col("l_linenumber"), col("l_quantity"),
         col("l_extendedprice"), col("l_partkey"), col("l_suppkey"))
-      t(s, dir, "lineitem")
+      Tables(s, dir, "lineitem")
         .groupBy(col("l_orderkey"))
         .agg(min_by(struct(col("l_linenumber"), col("l_quantity")), ord)
           .as("f"))
@@ -218,7 +222,7 @@ object Relational {
     "q_window_rank" -> ((s, dir) => {
       val byCust = Window.partitionBy(col("o_custkey"))
         .orderBy(col("o_orderdate"), col("o_orderkey"))
-      t(s, dir, "orders")
+      Tables(s, dir, "orders")
         .withColumn("order_rank", row_number().over(byCust))
         .withColumn("running_spend",
           sum(floor(col("o_totalprice") * 100 + lit(0.5)).cast("long"))
@@ -232,7 +236,7 @@ object Relational {
 
     // E8: union of two slices (append semantics)
     "q_union_slices" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
+      val o = Tables(s, dir, "orders")
       val a = o.filter(col("o_orderstatus") === "F")
         .select(col("o_orderkey"), col("o_totalprice"))
       val b = o.filter(col("o_totalprice") > 150000)
@@ -247,7 +251,7 @@ object Relational {
     // regeneration moved them off the TPC-H 1992-1998 range; the old
     // 1994-vs-1995 pair had become vacuously empty)
     "q_except_years" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
+      val o = Tables(s, dir, "orders")
       val y95 = o.filter(year(col("o_orderdate")) === 1995)
         .select(col("o_custkey")).distinct()
       val y96 = o.filter(year(col("o_orderdate")) === 1996)
@@ -257,7 +261,7 @@ object Relational {
 
     // the INTERSECT twin: customers active in BOTH years
     "q_intersect_years" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
+      val o = Tables(s, dir, "orders")
       val y95 = o.filter(year(col("o_orderdate")) === 1995)
         .select(col("o_custkey")).distinct()
       val y96 = o.filter(year(col("o_orderdate")) === 1996)
@@ -267,7 +271,7 @@ object Relational {
 
     // sort + limit: top 10 orders, deterministic tiebreak
     "q_top_orders" -> ((s, dir) => {
-      t(s, dir, "orders")
+      Tables(s, dir, "orders")
         .orderBy(col("o_totalprice").desc, col("o_orderkey"))
         .select(col("o_orderkey"), col("o_totalprice"))
         .limit(10)
@@ -275,15 +279,15 @@ object Relational {
 
     // distinct projection
     "q_distinct" -> ((s, dir) => {
-      t(s, dir, "orders")
+      Tables(s, dir, "orders")
         .select(col("o_orderstatus"), col("o_orderpriority")).distinct()
         .orderBy(col("o_orderstatus"), col("o_orderpriority"))
     }),
 
     // G2 relational analog: small cross join
     "q_cross_small" -> ((s, dir) => {
-      val r = t(s, dir, "region").select(col("r_name"))
-      val n = t(s, dir, "nation").select(col("n_name"))
+      val r = Tables(s, dir, "region").select(col("r_name"))
+      val n = Tables(s, dir, "nation").select(col("n_name"))
       r.crossJoin(n).orderBy(col("r_name"), col("n_name"))
     }),
 
@@ -339,8 +343,7 @@ object Relational {
       val (schema, tsCol) = eventsTs(s, dir)
       // the file stream source wants a directory: stream the sf dir,
       // glob-filtered down to the events table
-      val ev = s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(dir)
+      val ev = Tables.stream(s, dir, "events", schema)
         .filter(col("user_id") < 20)
         .select(col("user_id"),
           tsCol.as("ts"),
@@ -369,8 +372,7 @@ object Relational {
     // batch query's own ts > prev + gap
     "q_stream_sessionize_native" -> ((s, dir) => {
       val (schema, tsCol) = eventsTs(s, dir)
-      val ev = s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(dir)
+      val ev = Tables.stream(s, dir, "events", schema)
         .filter(col("user_id") < 20)
         .select(col("user_id"), tsCol.as("ts"),
           floor(col("value") * 100 + lit(0.5)).cast("long").as("value"))
@@ -393,9 +395,7 @@ object Relational {
     // per-source unique count is independent of micro-batch arrival
     // order — what makes a batch-parity oracle possible).
     "q_stream_dedup" -> ((s, dir) => {
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val docsStream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
+      val docsStream = Tables.stream(s, dir, "documents")
         .withColumn("fp", md5(concat_ws(":", col("source"), col("text"))))
       val name = s"graft_stream_dedup_${streamQueryId.incrementAndGet()}"
       val q = graft.streaming.Monitor.dedupStream(docsStream, Seq("fp"))
@@ -422,9 +422,7 @@ object Relational {
     // here pins the two sides to identical semantics instead of leaving
     // a latent "one null-signature survivor per source" divergence.
     "q_stream_simdedup" -> ((s, dir) => {
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val docsStream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
+      val docsStream = Tables.stream(s, dir, "documents")
         .filter(col("text").isNotNull)
         .withColumn("sig", graft.ops.Dedup.simhash64(
           graft.ops.Text.tokens(col("text"))))
@@ -453,7 +451,7 @@ object Relational {
     // and without the memo it paid 3 aggregate+collect training passes
     // per run (raw + 2 targets), dominating the query's wall time.
     "q_stream_domain_route" -> ((s, dir) => {
-      val d = s.read.parquet(s"$dir/documents.parquet")
+      val d = Tables(s, dir, "documents")
       val router = frozenRouters.getOrElseUpdate((dir, 1024), {
         val trained = graft.ops.Dsir.freezeRouter(
           d.filter(!col("source").isin("src1", "src2")),
@@ -468,8 +466,7 @@ object Relational {
         graft.ops.Dsir.saveRouter(s, trained, p)
         graft.ops.Dsir.loadRouter(s, p)
       })
-      val docsStream = s.readStream.schema(d.schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
+      val docsStream = Tables.stream(s, dir, "documents", d.schema)
         .filter(!col("source").isin("src1", "src2"))
       val name = s"graft_stream_droute_${streamQueryId.incrementAndGet()}"
       val q = graft.streaming.Monitor.domainRouteMonitor(docsStream, router)
@@ -488,8 +485,7 @@ object Relational {
     // event keeps the double sum exact in any order.
     "q_stream_windowed" -> ((s, dir) => {
       val (schema, tsCol) = eventsTs(s, dir)
-      val ev = s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(dir)
+      val ev = Tables.stream(s, dir, "events", schema)
         .select(tsCol.as("ts"),
           col("event_type"),
           floor(col("value") * 100 + lit(0.5)).as("value"))
@@ -529,8 +525,7 @@ object Relational {
           col("event_type")).as("__g"), col("value")),
         "__g", col("value"), minK = 1024)
       val (schema, tsCol) = eventsTs(s, dir)
-      val ev = s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(dir)
+      val ev = Tables.stream(s, dir, "events", schema)
         .select(tsCol.as("ts"), col("event_type"),
           col("value").cast("double").as("value"))
         .filter(col("value").isNotNull)
@@ -567,8 +562,7 @@ object Relational {
           col("event_type")).as("__g"), col("value")),
         "__g", col("value"), minK = 1024)
       val (schema, tsCol) = eventsTs(s, dir)
-      val ev = s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(dir)
+      val ev = Tables.stream(s, dir, "events", schema)
         .select(tsCol.as("ts"), col("event_type"),
           col("value").cast("double").as("value"))
         .filter(col("value").isNotNull)
@@ -597,8 +591,7 @@ object Relational {
     // batch display over the sink
     "q_stream_attribution" -> ((s, dir) => {
       val (schema, tsCol) = eventsTs(s, dir)
-      def ev = s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(dir)
+      def ev = Tables.stream(s, dir, "events", schema)
       val clicks = ev.filter(col("event_type") === "click")
         .select(col("user_id").as("click_user"), tsCol.as("click_ts"),
           floor(col("value") * 100 + lit(0.5)).cast("long")
@@ -639,8 +632,7 @@ object Relational {
     // hours (the q_stream_sessionize "minus open sessions" convention)
     "q_stream_attribution_hourly" -> ((s, dir) => {
       val (schema, tsCol) = eventsTs(s, dir)
-      def ev = s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(dir)
+      def ev = Tables.stream(s, dir, "events", schema)
       val clicks = ev.filter(col("event_type") === "click")
         .select(col("user_id").as("click_user"), tsCol.as("click_ts"),
           floor(col("value") * 100 + lit(0.5)).cast("long")
@@ -671,7 +663,7 @@ object Relational {
     // constant memory. Per-source counts are batch display over the
     // drained sink
     "q_stream_contamination" -> ((s, dir) => {
-      val docsDf = s.read.parquet(s"$dir/documents.parquet")
+      val docsDf = Tables(s, dir, "documents")
       // fixed SMALL benchmark slice (the q_doc_contamination
       // convention) — a corpus-relative cut like `>= N` would grow the
       // plan-literal shingle set with the corpus and invert the
@@ -679,8 +671,7 @@ object Relational {
       val benchShingles = docsDf.filter(col("doc_id") < 20)
         .select(explode(graft.ops.Dedup.shingles(col("text"), 3)).as("sh"))
         .distinct().collect().map(_.getString(0)).sorted.toSeq
-      val stream = s.readStream.schema(docsDf.schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
+      val stream = Tables.stream(s, dir, "documents", docsDf.schema)
         // coalesce: a null-text doc shares nothing -> vacuously clean,
         // matching the oracle's NOT-EXISTS semantics
         .filter(!coalesce(
@@ -705,9 +696,7 @@ object Relational {
     // logic over the drained sink, so the oracle is the plain per-source
     // aggregate with the same weight literals
     "q_stream_mixture" -> ((s, dir) => {
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val docsStream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
+      val docsStream = Tables.stream(s, dir, "documents")
       val name = s"graft_stream_mixture_${streamQueryId.incrementAndGet()}"
       val q = graft.streaming.Monitor.mixtureMonitor(docsStream).writeStream
         .outputMode("complete").format("memory").queryName(name)
@@ -839,7 +828,7 @@ object Relational {
     // multi-column file skipping. All-integer arithmetic, so the curve
     // head is deterministic and the oracle replays it bit-for-bit
     "q_events_zorder" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Tables(s, dir, "events")
         .select(col("event_id").cast("long").as("event_id"),
           col("user_id").cast("long").as("user_id"))
       val r = ev.agg(min(col("user_id")), max(col("user_id")),
@@ -862,7 +851,7 @@ object Relational {
     "q_events_skipscan" -> ((s, dir) => {
       val layout = zorderLayouts.getOrElseUpdate(dir, {
         val p = TrainingData.scratchDir("graft-zorder-") + "/events"
-        val ev = s.read.parquet(s"$dir/events.parquet")
+        val ev = Tables(s, dir, "events")
           .select(col("event_id").cast("long").as("event_id"),
             col("user_id").cast("long").as("user_id"),
             col("event_type"))
@@ -872,7 +861,7 @@ object Relational {
           Seq("user_id", "event_id"))
         p
       })
-      val r = s.read.parquet(s"$dir/events.parquet")
+      val r = Tables(s, dir, "events")
         .agg(min(col("user_id").cast("long")),
           max(col("user_id").cast("long")),
           min(col("event_id").cast("long")),
@@ -923,7 +912,7 @@ object Relational {
     // rollup: subtotals per (status, priority), per status, grand total —
     // grouping-set machinery the reference has no analog for
     "q_rollup_orders" -> ((s, dir) => {
-      t(s, dir, "orders")
+      Tables(s, dir, "orders")
         .rollup(col("o_orderstatus"), col("o_orderpriority"))
         .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("total"))
         .orderBy(asc_nulls_first("o_orderstatus"),
@@ -933,7 +922,7 @@ object Relational {
     // CUBE: all four grouping sets (both dims, each alone, grand
     // total) with grouping_id disambiguating aggregated-out nulls
     "q_cube_orders" -> ((s, dir) => {
-      t(s, dir, "orders")
+      Tables(s, dir, "orders")
         .cube(col("o_orderstatus"), col("o_orderpriority"))
         .agg(grouping_id().as("gid"), count(lit(1)).as("n"),
           dsum(col("o_totalprice")).as("total"))
@@ -943,7 +932,7 @@ object Relational {
 
     // pivot-style conditional aggregation (engine-portable form)
     "q_pivot_status" -> ((s, dir) => {
-      t(s, dir, "orders")
+      Tables(s, dir, "orders")
         .groupBy(col("o_orderpriority"))
         .agg(
           count(when(col("o_orderstatus") === "F", 1)).as("n_f"),
@@ -1021,7 +1010,7 @@ object Relational {
 
     // A1/A3-style: per-group max + latest-partition filter
     "q_latest_orders" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
+      val o = Tables(s, dir, "orders")
       val latest = o.groupBy(col("o_custkey"))
         .agg(max(col("o_orderdate")).as("last_date"))
       o.join(latest, Seq("o_custkey"))

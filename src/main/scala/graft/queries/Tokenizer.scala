@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Fs
 import graft.ops.Tokenize
 
 /** Tokenizer-training queries: the distributed BPE merge loop
@@ -20,9 +21,6 @@ import graft.ops.Tokenize
   * engine adds on top, like the dedup and mixture packs.)
   */
 object Tokenizer {
-
-  private def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
 
   /** Merges trained per sf dir once per process (steady state is
     * ENCODING with a trained table; the train loop is the fit step). */
@@ -44,7 +42,7 @@ object Tokenizer {
 
   private def hist(s: SparkSession, dir: String): DataFrame = {
     val p = histPaths.getOrElseUpdate(dir, {
-      val source = docs(s, dir)
+      val source = Tables(s, dir, "documents")
       def write(path: String): Unit =
         Tokenize.wordHistogram(source).write.parquet(path)
       graft.ops.Stats.cachedArtifact(source, "bpe-word-histogram")(write)
@@ -58,7 +56,7 @@ object Tokenizer {
           path
         }
     })
-    s.read.parquet(p)
+    Fs.parquet(s, p)
   }
 
   private val nMerges = 8
@@ -141,9 +139,7 @@ object Tokenizer {
     // meter). The oracle is the batch encode replay — identical output.
     "q_stream_bpe_encode" -> ((s, dir) => {
       val m = merges(s, dir)
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val stream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
+      val stream = Tables.stream(s, dir, "documents")
         .select(col("doc_id").cast("long").as("doc_id"),
           Tokenize.bpeCountExpr(col("text"), m).as("n_tok"))
       val name = s"graft_stream_bpe_${streamQueryId.incrementAndGet()}"
@@ -164,11 +160,9 @@ object Tokenizer {
     // replay, identical output.
     "q_stream_tok_coverage" -> ((s, dir) => {
       val a = alphabet(s, dir)
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
       val pre = array_join(regexp_extract_all(col("text"),
         lit(graft.ops.Text.bpeTokenPattern), lit(0)), "")
-      val stream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
+      val stream = Tables.stream(s, dir, "documents")
         .select(col("source"),
           when(col("doc_id") % 7 === 0, concat(col("text"), lit(covProbe)))
             .otherwise(col("text")).as("text"))
@@ -201,7 +195,7 @@ object Tokenizer {
     "q_doc_tok_drift" -> ((s, dir) => {
       val m = merges(s, dir)
       val ref = refTpc(s, dir)
-      docs(s, dir)
+      Tables(s, dir, "documents")
         .select(col("source"),
           Tokenize.bpeCountExpr(col("text"), m).as("nt"),
           length(array_join(regexp_extract_all(col("text"),
@@ -222,9 +216,7 @@ object Tokenizer {
     "q_stream_tok_drift" -> ((s, dir) => {
       val m = merges(s, dir)
       val ref = refTpc(s, dir)
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val stream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
+      val stream = Tables.stream(s, dir, "documents")
         .select(col("source"),
           Tokenize.bpeCountExpr(col("text"), m).as("nt"),
           length(array_join(regexp_extract_all(col("text"),
@@ -277,7 +269,7 @@ object Tokenizer {
       val oovRate = sum(col("co")).cast("double") / sum(col("cc"))
       val drift = (sum(col("nt")).cast("double") / sum(col("nc"))) /
         lit(ref)
-      docs(s, dir)
+      Tables(s, dir, "documents")
         .select(col("source"),
           length(pre(covText)).cast("long").as("cc"),
           size(Tokenize.oovChars(pre(covText), a)).cast("long")
@@ -311,9 +303,7 @@ object Tokenizer {
       def pre(t: org.apache.spark.sql.Column) = array_join(
         regexp_extract_all(t, lit(graft.ops.Text.bpeTokenPattern),
           lit(0)), "")
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val stream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
+      val stream = Tables.stream(s, dir, "documents")
         .select(col("source"),
           length(pre(covText)).cast("long").as("cc"),
           size(Tokenize.oovChars(pre(covText), a)).cast("long")
@@ -366,7 +356,7 @@ object Tokenizer {
           Await.result(
             Future.sequence(Seq(("gate", 2), ("escalated", 6)).map {
               case (scenario, rep) => Future {
-                val drifted = docs(s, dir).select(
+                val drifted = Tables(s, dir, "documents").select(
                   when(srcNum % 3 === 0,
                     concat(col("text"),
                       lit(driftSpam * rep)))
@@ -413,7 +403,7 @@ object Tokenizer {
     // fold-equals-rebuild.
     "q_doc_bpe_merges_incremental" -> ((s, dir) => {
       import s.implicits._
-      val d = docs(s, dir)
+      val d = Tables(s, dir, "documents")
       val folded = Tokenize.foldWordHistograms(Seq(
         Tokenize.wordHistogram(d.where(col("doc_id") % 2 === 0)),
         Tokenize.wordHistogram(d.where(col("doc_id") % 2 =!= 0))))
@@ -428,7 +418,7 @@ object Tokenizer {
     // join and no mapPartitions in the scoring plan.
     "q_doc_bpe_encode" -> ((s, dir) => {
       val m = merges(s, dir)
-      docs(s, dir)
+      Tables(s, dir, "documents")
         .select(col("doc_id"),
           Tokenize.bpeCountExpr(col("text"), m).as("n_tok"))
         .orderBy("doc_id")
@@ -440,8 +430,8 @@ object Tokenizer {
     // (the fit-once/serve-literal count is just another tokens column).
     "q_doc_bpe_mixture" -> ((s, dir) => {
       val m = merges(s, dir)
-      graft.ops.Sampling.mixtureByTokens(docs(s, dir), col("source"),
-        col("doc_id"), Tokenize.bpeCountExpr(col("text"), m),
+      graft.ops.Sampling.mixtureByTokens(Tables(s, dir, "documents"),
+        col("source"), col("doc_id"), Tokenize.bpeCountExpr(col("text"), m),
         Map("src0" -> 6L, "src1" -> 3L, "src2" -> 1L))
         .select(col("doc_id"), col("source"))
         .orderBy(col("doc_id"))
@@ -478,7 +468,7 @@ object Tokenizer {
     "q_doc_bpe_ids" -> ((s, dir) => {
       val m = merges(s, dir)
       val v = vocab(s, dir)
-      docs(s, dir)
+      Tables(s, dir, "documents")
         .where(col("doc_id") % 5 === 0)
         .select(col("doc_id"),
           posexplode(Tokenize.bpeIdsExpr(col("text"), m, v)))
@@ -497,7 +487,7 @@ object Tokenizer {
     "q_doc_bpe_roundtrip" -> ((s, dir) => {
       val m = merges(s, dir)
       val v = vocab(s, dir)
-      docs(s, dir)
+      Tables(s, dir, "documents")
         .select(col("doc_id"),
           array_join(Tokenize.bpeDecodeExpr(
             Tokenize.bpeIdsExpr(col("text"), m, v), v), "")
@@ -520,7 +510,7 @@ object Tokenizer {
     "q_doc_pack_ids" -> ((s, dir) => {
       val m = merges(s, dir)
       val v = eosVocab(s, dir)
-      val sub = docs(s, dir).where(col("doc_id") % 5 === 0)
+      val sub = Tables(s, dir, "documents").where(col("doc_id") % 5 === 0)
       val packed = graft.ops.Packing.concatChunks(sub, maxTokens = 256,
         orderKey = graft.ops.Sampling.shufflePosition(col("doc_id"), 1),
         tokens = Some(Tokenize.bpeCountExpr(col("text"), m) + lit(1L)))
@@ -543,7 +533,7 @@ object Tokenizer {
     // count whitespace as spurious OOV).
     "q_doc_tok_coverage" -> ((s, dir) => {
       val a = alphabet(s, dir)
-      val drifted = docs(s, dir).withColumn("text",
+      val drifted = Tables(s, dir, "documents").withColumn("text",
         when(col("doc_id") % 7 === 0, concat(col("text"), lit(covProbe)))
           .otherwise(col("text")))
       val pre = array_join(regexp_extract_all(col("text"),

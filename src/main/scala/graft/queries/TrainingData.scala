@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Classifier, Dedup, Dsir, Freq, Multimodal, Profile, Quantile, Retrieval, Similarity, Sketch, Text}
+import graft.core.Fs
 import graft.core.Pin.PinOps
 
 /** The training-data pipeline operators (dedup / similarity / multimodal /
@@ -117,11 +118,11 @@ object TrainingData {
     * when the type already matches; DuckDB reads the same file, and
     * the oracle compare is value-based, so the contract is symmetric. */
   private def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
+    Tables(s, dir, "documents")
       .withColumn("doc_id", col("doc_id").cast("long"))
 
   private def emb(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/embeddings.parquet")
+    Tables(s, dir, "embeddings")
       .withColumn("vec_id", col("vec_id").cast("long"))
 
   private val stop = Seq("the", "a", "data", "value")
@@ -536,9 +537,7 @@ object TrainingData {
       val model = softmaxModels.getOrElseUpdate(dir,
         Classifier.trainSoftmax(feats, "f", "label", dim = words.size,
           numClasses = 3))
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val stream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
+      val stream = Tables.stream(s, dir, "documents")
         .withColumn("f", f(col("text")))
         .filter((c0 > c1 && c0 > c2) || (c1 > c0 && c1 > c2) ||
           (c2 > c0 && c2 > c1))
@@ -585,9 +584,7 @@ object TrainingData {
           dim))
         .withColumn("label", label)
       val model = sparseDomainModel(s, dir, featsB, words, dim)
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val stream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
+      val stream = Tables.stream(s, dir, "documents")
         .withColumn("f", f(col("text")))
         .withColumn("idx", Classifier.hashedIndices(kept(col("text")),
           dim))
@@ -644,9 +641,7 @@ object TrainingData {
       val seed = distilledDomainInit(s, dir, featsB, words, dim)
       val tmp = scratchDir("graft-domonline-")
       Classifier.saveSoftmax(seed, s"$tmp/model")
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      def stream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
+      def stream = Tables.stream(s, dir, "documents")
         .withColumn("f", f(col("text")))
         .select(col("doc_id").cast("long").as("doc_id"),
           Classifier.hashedIndices(kept(col("text")), dim).as("idx"),
@@ -922,9 +917,7 @@ object TrainingData {
       val acc = Classifier.trainAccuracy(featsB, "f", "label", model)
       require(acc == 1.0,
         s"classifier under-converged on the oracle concept: acc=$acc")
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val stream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
+      val stream = Tables.stream(s, dir, "documents")
         .select(col("doc_id").cast("long").as("doc_id"),
           Classifier.vocabCountFeatures(Text.tokens(col("text")), vocab)
             .as("f"))
@@ -958,9 +951,7 @@ object TrainingData {
         Classifier.hashedIndices(kept(txt), dim).as("idx"),
         (size(filter(Text.tokens(txt), t => t === "hash")) >= 2)
           .as("label"))
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      def stream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
+      def stream = Tables.stream(s, dir, "documents")
         .select(labeled(col("doc_id"), col("text")): _*)
       val tmp = scratchDir("graft-clfonline-")
       // online NEWTON folds: ~6 warm-started IRLS steps per batch reach
@@ -1378,9 +1369,7 @@ object TrainingData {
     // micro-batch), then search over the drained index — equal to the
     // batch scorer over everything that arrived, one shared oracle
     "q_stream_bm25" -> ((s, dir) => {
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val docsStream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
+      val docsStream = Tables.stream(s, dir, "documents")
       val tmp = scratchDir("graft-bm25stream-")
       val q = graft.streaming.Monitor.bm25IndexSink(docsStream,
         s"$tmp/idx", s"$tmp/ckpt")
@@ -1508,9 +1497,7 @@ object TrainingData {
     // counters in state), drained under AvailableNow == the batch
     // attribution — one shared oracle
     "q_stream_gate_funnel" -> ((s, dir) => {
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val docsStream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
+      val docsStream = Tables.stream(s, dir, "documents")
       val name =
         s"graft_stream_gate_${streamQueryId.incrementAndGet()}"
       val q = graft.streaming.Monitor.gateMonitor(docsStream, Seq(
@@ -1536,7 +1523,7 @@ object TrainingData {
     // k would silently leave the exact regime the first time a group
     // outgrew it
     "q_sketch_audience" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Tables(s, dir, "events")
         .select(col("event_type"), col("user_id").cast("long").as("user_id"))
       val k = Sketch.exactRegimeK(ev, "event_type", col("user_id"),
         minK = 4096)
@@ -1552,7 +1539,7 @@ object TrainingData {
     // anti-join. Exact regime (sized like q_sketch_audience, shared
     // probe via the stats cache) -> exact integers for the oracle
     "q_sketch_newaudience" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Tables(s, dir, "events")
         .select(col("event_type"), col("user_id").cast("long").as("user_id"))
       val k = Sketch.exactRegimeK(ev, "event_type", col("user_id"),
         minK = 4096)
@@ -1590,15 +1577,13 @@ object TrainingData {
     // with the batch query; the cross-batch bit-identity is pinned by
     // SketchSpec/MonitorSpec
     "q_stream_sketch_audience" -> ((s, dir) => {
-      val batchEv = s.read.parquet(s"$dir/events.parquet")
+      val batchEv = Tables(s, dir, "events")
         .select(col("event_type"), col("user_id").cast("long").as("user_id"))
       // size k from the (batch view of the) data, like q_sketch_audience:
       // the sink must stay in the exact regime for the shared oracle
       val k = Sketch.exactRegimeK(batchEv, "event_type", col("user_id"),
         minK = 4096)
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      val evStream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(dir)
+      val evStream = Tables.stream(s, dir, "events")
         .select(col("event_type"), col("user_id").cast("long").as("user_id"))
       val tmp = scratchDir("graft-sketchstream-")
       val q = graft.streaming.Monitor.sketchSink(evStream,
@@ -1606,7 +1591,7 @@ object TrainingData {
         k = k)
       try q.processAllAvailable() finally q.stop()
       Sketch.overlapMatrixFromSketches(
-        s.read.parquet(s"$tmp/sketches"))
+        Fs.parquet(s, s"$tmp/sketches"))
         .withColumnRenamed("g_a", "type_a")
         .withColumnRenamed("g_b", "type_b")
     }),
@@ -1619,7 +1604,7 @@ object TrainingData {
     // discrete quantiles are EXACT elements of the input and the
     // oracle compares doubles bit-for-bit at any sf
     "q_sketch_quantiles" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Tables(s, dir, "events")
         .select(col("event_type"), col("value").cast("double").as("value"))
         .filter(col("event_type").isNotNull)
       val k = Quantile.exactRegimeK(ev, "event_type", col("value"),
@@ -1651,15 +1636,13 @@ object TrainingData {
         explode(Text.tokens(col("text"))).as("tok"))
       val k = Freq.exactRegimeK(batchToks, "source", col("tok"),
         minK = 1024)
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val docStream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
+      val docStream = Tables.stream(s, dir, "documents")
         .select(col("source"), explode(Text.tokens(col("text"))).as("tok"))
       val tmp = scratchDir("graft-mgstream-")
       val q = graft.streaming.Monitor.freqSketchSink(docStream,
         s"$tmp/sketches", s"$tmp/ckpt", "source", col("tok"), k)
       try q.processAllAvailable() finally q.stop()
-      s.read.parquet(s"$tmp/sketches")
+      Fs.parquet(s, s"$tmp/sketches")
         .select(col("g").as("source"),
           explode(Freq.topItems(col("sk"), 10)).as("__t"))
         .select(col("source"), col("__t.item").as("item"),
@@ -1674,7 +1657,7 @@ object TrainingData {
     // query is built; exact regime on both sketches, so every column
     // is an exact integer / an exact input element
     "q_sketch_profile" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Tables(s, dir, "events")
         .select(col("event_type"),
           col("user_id").cast("long").as("user_id"),
           col("value").cast("double").as("value"))
@@ -1695,21 +1678,19 @@ object TrainingData {
     // quantile probe — one shared oracle with the batch query; the
     // exact-regime fold bit-identity is pinned by QuantileSpec
     "q_stream_quantiles" -> ((s, dir) => {
-      val batchEv = s.read.parquet(s"$dir/events.parquet")
+      val batchEv = Tables(s, dir, "events")
         .select(col("event_type"), col("value").cast("double").as("value"))
         .filter(col("event_type").isNotNull)
       val k = Quantile.exactRegimeK(batchEv, "event_type", col("value"),
         minK = 4096)
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      val evStream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(dir)
+      val evStream = Tables.stream(s, dir, "events")
         .select(col("event_type"), col("value").cast("double").as("value"))
         .filter(col("event_type").isNotNull)
       val tmp = scratchDir("graft-kllstream-")
       val q = graft.streaming.Monitor.quantileSketchSink(evStream,
         s"$tmp/sketches", s"$tmp/ckpt", "event_type", col("value"), k)
       try q.processAllAvailable() finally q.stop()
-      s.read.parquet(s"$tmp/sketches")
+      Fs.parquet(s, s"$tmp/sketches")
         .select(col("g").as("event_type"),
           Quantile.kllQuantile(col("sk"), 0.25).as("p25"),
           Quantile.kllQuantile(col("sk"), 0.5).as("p50"),
@@ -1754,9 +1735,7 @@ object TrainingData {
       // the folded state must stay in the exact regime for the shared
       // oracle; the probe rides the stats cache
       val (kD, kQ) = Sketch.profileK(d, cols)
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val docStream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
+      val docStream = Tables.stream(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("source"),
           col("n_chars").cast("long").as("n_chars"),
           Text.tokenCount(col("text")).cast("long").as("n_toks"))
@@ -1767,7 +1746,7 @@ object TrainingData {
         kD, kQ)
       try q.processAllAvailable() finally q.stop()
       Sketch.columnProfileFromState(
-        s.read.parquet(s"$tmp/profile"), Seq(0.25, 0.5, 0.95))
+        Fs.parquet(s, s"$tmp/profile"), Seq(0.25, 0.5, 0.95))
         .orderBy(col("col_name"))
     }),
 
@@ -2023,7 +2002,7 @@ object TrainingData {
       drain()
       b2.coalesce(1).write.mode("append").parquet(s"$tmp/in")
       drain()
-      s.read.parquet(s"$tmp/out")
+      Fs.parquet(s, s"$tmp/out")
         .select(col("doc_id")).orderBy(col("doc_id"))
     }),
 
@@ -2071,7 +2050,7 @@ object TrainingData {
       drain()
       b2.coalesce(1).write.mode("append").parquet(s"$tmp/in")
       drain()
-      s.read.parquet(s"$tmp/out")
+      Fs.parquet(s, s"$tmp/out")
         .select(col("doc_id")).orderBy(col("doc_id"))
     }),
 
@@ -2168,16 +2147,14 @@ object TrainingData {
     // must equal the batch sample, so all three priority queries share
     // one oracle
     "q_stream_priority" -> ((s, dir) => {
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val docsStream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
+      val docsStream = Tables.stream(s, dir, "documents")
       val tmp = scratchDir("graft-priostream-")
       val q = graft.streaming.Monitor.prioritySampleSink(docsStream,
         s"$tmp/reservoir", s"$tmp/ckpt", col("doc_id"),
         graft.ops.Text.tokenCount(col("text")).cast("double"), n = 50)
       try q.processAllAvailable() finally q.stop()
       graft.ops.Sampling.incrementalPrioritySample(
-        s.read.parquet(s"$dir/documents.parquet").limit(0),
+        Tables(s, dir, "documents").limit(0),
         s"$tmp/reservoir", col("doc_id"),
         graft.ops.Text.tokenCount(col("text")).cast("double"), n = 50)
         .select(col("key").cast("long").as("doc_id"), col("est_weight"))
@@ -2191,14 +2168,12 @@ object TrainingData {
     // exactly — so this shares q_doc_span_dedup's oracle; the genuine
     // cross-batch fold is pinned by MonitorSpec's two-drop test
     "q_stream_span" -> ((s, dir) => {
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val docsStream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
+      val docsStream = Tables.stream(s, dir, "documents")
       val tmp = scratchDir("graft-spanstream-")
       val q = graft.streaming.Monitor.spanDedupSink(docsStream,
         s"$tmp/idx", s"$tmp/out", s"$tmp/ckpt", k = 8)
       try q.processAllAvailable() finally q.stop()
-      s.read.parquet(s"$tmp/out")
+      Fs.parquet(s, s"$tmp/out")
         .orderBy(col("doc_id"), col("span_start"))
     }),
 
@@ -2209,20 +2184,19 @@ object TrainingData {
     // q_stream_contamination's plan-literal shingle set can't go.
     // Output: per-source clean counts (shared < 3), exact
     "q_stream_contamination_bloom" -> ((s, dir) => {
-      val d = s.read.parquet(s"$dir/documents.parquet")
+      val d = Tables(s, dir, "documents")
       val (bloomBytes, refSh) = graft.ops.Contamination.buildReferenceBloom(
         d.filter(col("doc_id") < 40), n = 3, expectedItems = 500000L)
       // pin the shingle table so batches re-verify, not re-derive
       val pinned = refSh.pinned()
-      val stream = s.readStream.schema(d.schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
+      val stream = Tables.stream(s, dir, "documents", d.schema)
         .filter(col("doc_id") >= 40)
       val tmp = scratchDir("graft-bloomstream-")
       val q = graft.streaming.Monitor.bloomDecontaminationSink(stream,
         bloomBytes, pinned, n = 3, minShared = 3,
         s"$tmp/out", s"$tmp/ckpt")
       try q.processAllAvailable() finally q.stop()
-      s.read.parquet(s"$tmp/out")
+      Fs.parquet(s, s"$tmp/out")
         .groupBy(col("source")).agg(count(lit(1)).as("n_clean"))
         .orderBy(col("source"))
     }),
@@ -2324,15 +2298,13 @@ object TrainingData {
     // canonical closure, replayed exactly (LSH candidates included) by
     // the oracle; the cross-batch fold is pinned by MonitorSpec
     "q_stream_semantic" -> ((s, dir) => {
-      val schema = s.read.parquet(s"$dir/embeddings.parquet").schema
-      val vecsStream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
+      val vecsStream = Tables.stream(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"))
       val tmp = scratchDir("graft-semstream-")
       val q = graft.streaming.Monitor.semanticDedupSink(vecsStream,
         s"$tmp/idx", s"$tmp/out", s"$tmp/ckpt", threshold = 0.9)
       try q.processAllAvailable() finally q.stop()
-      s.read.parquet(s"$tmp/out")
+      Fs.parquet(s, s"$tmp/out")
         .select(col("vec_id")).orderBy(col("vec_id"))
     }),
 

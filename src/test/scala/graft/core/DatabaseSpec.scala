@@ -369,7 +369,7 @@ class DatabaseSpec extends AnyFunSuite {
 
   /** `db.read()` must equal a fresh footer merge of the db: the same
     * schema and the same rows. Checked on the first read (served after
-    * whatever changed the db) and on a second one (a snapshot hit). */
+    * whatever changed the db) and on a second one (a footer-cache hit). */
   private def assertExactRead(db: Database, after: String): Unit =
     (1 to 2).foreach { _ =>
       val got = db.read()
@@ -451,11 +451,13 @@ class DatabaseSpec extends AnyFunSuite {
     assert(Jobs.count(spark.sparkContext)(db.read())._2 == 0)
     Fs.writeString(s"${db.dbPath}/_graft_stats/probe.json", "{}")
     assert(Jobs.count(spark.sparkContext)(db.read())._2 == 0)
-    // a data file written past the engine is a different listing: the
-    // footers merge again
+    // a data file written past the engine is a different listing: its
+    // one footer is read, on the driver, and merged into the schema
     db.read().limit(1).withColumn("_run_id", lit("run-external"))
       .write.mode("append").partitionBy("_run_id").parquet(db.dbPath)
-    assert(Jobs.count(spark.sparkContext)(db.read())._2 > 0)
+    val footers = Fs.footersRead
+    assert(Jobs.count(spark.sparkContext)(db.read())._2 == 0)
+    assert(Fs.footersRead - footers == 1L)
     assertExactRead(db, "an append past the engine")
     db.close()
   }
