@@ -70,8 +70,8 @@ object Fs {
     }
   }
 
-  /** Raw byte IO for small model artifacts (Bloom bitmaps, codebooks) —
-    * driver-side files, NOT data-plane parquet. */
+  /** Rename `src` to `dst`, failing loudly where Hadoop's `rename` only
+    * returns false. */
   def rename(src: String, dst: String): Unit = {
     require(fs(src).rename(new Path(src), new Path(dst)),
       s"rename failed: $src -> $dst")

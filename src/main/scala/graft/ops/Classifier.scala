@@ -176,6 +176,113 @@ object Classifier {
     }
   }
 
+  /** The one iterative-trainer driver: the shared push/pull iteration
+    * of a parameter server (PS2, SIGMOD 2019) with a model-specific
+    * per-partition `kernel`. The input is decoded and cached once
+    * ([[cacheTrainRows]], `unitsOf` per row); then each of `iters`
+    * passes (fixed — no early stop, so the job count is deterministic)
+    * broadcasts the weights, runs ONE `mapPartitions` job in which
+    * `kernel(w, rows)` returns the partition's `(g, h, n)` partial
+    * (gradient, Hessian — empty for gradient descent — and weight
+    * total), sums the partials on the driver in partition-id order
+    * (deterministic bits), and takes `step(w, g, h, n)`:
+    * [[newtonStep]] or [[gdStep]]. The cache is dropped on the way
+    * out, failure included. */
+  private def fit[T: scala.reflect.ClassTag](
+      ds: org.apache.spark.sql.Dataset[T])(
+      unitsOf: T => Long, w0: Array[Double], iters: Int)(
+      kernel: (Array[Double], Iterator[T]) =>
+        (Array[Double], Array[Double], Double))(
+      step: (Array[Double], Array[Double], Array[Double], Double) =>
+        Array[Double]): Array[Double] = {
+    val sc = ds.sparkSession.sparkContext
+    val data = cacheTrainRows(ds)(unitsOf)
+    try {
+      var w = w0
+      for (_ <- 0 until iters) {
+        val bw = sc.broadcast(w)
+        val partials = data.mapPartitions { it =>
+          val (g, h, n) = kernel(bw.value, it)
+          Iterator.single((TaskContext.getPartitionId(), g, h, n))
+        }.collect().sortBy(_._1)
+        bw.destroy()
+        val n = partials.map(_._4).sum
+        require(n > 0, "cannot train on an empty frame")
+        val g = new Array[Double](partials.head._2.length)
+        val h = new Array[Double](partials.head._3.length)
+        partials.foreach { case (_, pg, ph, _) =>
+          var i = 0
+          while (i < g.length) { g(i) += pg(i); i += 1 }
+          i = 0
+          while (i < h.length) { h(i) += ph(i); i += 1 }
+        }
+        w = step(w, g, h, n)
+      }
+      w
+    } finally { data.unpersist(): Unit }
+  }
+
+  /** Whether entry `i` of a weight vector made of `d`-blocks (bias last
+    * in each) is penalized: the intercept never is — the sklearn/
+    * reference-solver convention shared by every trainer in this file
+    * (a regularized bias would shrink calibrated probabilities toward
+    * 1/2 at high l2). */
+  private def penalized(d: Int, i: Int): Boolean = i % d != d - 1
+
+  /** Ridge-regularized Newton step: solve
+    * `(H/n + l2·I') δ = g/n + l2·I'w` with pivoted Gaussian elimination
+    * ([[solve]]) and return `w − δ`, where `I'` is zero at every bias
+    * entry ([[penalized]]). Separability still needs l2 > 0 on the
+    * weights; the bias diagonal Σ w·p(1−p) > 0 keeps the system
+    * nonsingular on any non-degenerate frame. `h` is the packed upper
+    * triangle when `packed`, else the full row-major matrix. */
+  private def newtonStep(d: Int, l2: Double, packed: Boolean)(
+      w: Array[Double], g: Array[Double], h: Array[Double],
+      n: Double): Array[Double] = {
+    val m = w.length
+    val hm =
+      if (!packed) Array.tabulate(m, m)((i, j) => h(i * m + j) / n)
+      else {
+        val t = Array.ofDim[Double](m, m)
+        var k = 0; var a = 0
+        while (a < m) {
+          var b = a
+          while (b < m) {
+            t(a)(b) = h(k) / n; t(b)(a) = t(a)(b); k += 1; b += 1
+          }
+          a += 1
+        }
+        t
+      }
+    var i = 0
+    while (i < m) { if (penalized(d, i)) hm(i)(i) += l2; i += 1 }
+    val rhs = Array.tabulate(m)(i =>
+      g(i) / n + (if (penalized(d, i)) l2 * w(i) else 0.0))
+    val delta = solve(hm, rhs)
+    Array.tabulate(m)(i => w(i) - delta(i))
+  }
+
+  /** Full-batch gradient-descent step `w − lr·(g/n + l2·I'w)`, `I'` zero
+    * at every bias entry ([[penalized]]). */
+  private def gdStep(d: Int, lr: Double, l2: Double)(
+      w: Array[Double], g: Array[Double], h: Array[Double],
+      n: Double): Array[Double] =
+    Array.tabulate(w.length)(i =>
+      w(i) - lr * (g(i) / n + (if (penalized(d, i)) l2 * w(i) else 0.0)))
+
+  /** Per-row importance weight column (a DSIR/DoReMi weight, class
+    * rebalancing), 1.0 without one: it multiplies the row's gradient
+    * and Hessian contribution and its share of n — weight w is exactly
+    * w copies of the row. */
+  private def rowWeight(weightCol: Option[String]): Column =
+    weightCol.map(c => col(c).cast("double")).getOrElse(lit(1.0))
+
+  /** Non-positive or null weights fail loudly (a silently dropped row
+    * would be indistinguishable from converged training). */
+  private def checkRowWeight(rw: Double): Unit =
+    require(rw > 0.0 && !rw.isNaN && !rw.isInfinite,
+      s"row weight must be finite positive, got $rw")
+
   /** Train by IRLS (Newton) with L2 ridge `l2 > 0` over the WEIGHTS
     * only — the intercept is never penalized, the sklearn/reference-
     * solver convention shared by every trainer in this file (a
@@ -200,96 +307,45 @@ object Classifier {
     val spark = df.sparkSession
     import spark.implicits._
     val d = dim + 1 // bias last
-    // per-row importance weight (a DSIR/DoReMi weight column, class
-    // rebalancing): multiplies the row's gradient and Hessian
-    // contribution and its share of n — weight w is exactly w copies
-    // of the row. Non-positive or null weights fail loudly (a silently
-    // dropped row would be indistinguishable from converged training).
-    val wexpr = weightCol.map(c => col(c).cast("double"))
-      .getOrElse(lit(1.0))
     // decoded once, cached as primitive-array rows, scale-adaptive
     // partition count — see cacheTrainRows (per-row cost: the d² /2
     // Hessian upper triangle dominates)
-    val data = cacheTrainRows(df.select(col(labelCol).cast("double"),
-      col(featuresCol).cast("array<double>"), wexpr)
+    val w = fit(df.select(col(labelCol).cast("double"),
+      col(featuresCol).cast("array<double>"), rowWeight(weightCol))
       .as[(Double, Array[Double], Double)])(
-      _ => d.toLong * (d + 3) / 2)
-    try {
-      var w = init.map(m => m.weights :+ m.bias)
-        .getOrElse(new Array[Double](d))
-      for (_ <- 0 until iters) {
-        val bw = spark.sparkContext.broadcast(w)
-        val partials = data.mapPartitions { it =>
-          val wv = bw.value
-          val g = new Array[Double](d)
-          val h = new Array[Double](d * (d + 1) / 2)
-          var n = 0.0
-          it.foreach { case (y, f, rw) =>
-            require(f.length == dim,
-              s"feature width ${f.length} != dim $dim")
-            require(rw > 0.0 && !rw.isNaN && !rw.isInfinite,
-              s"row weight must be finite positive, got $rw")
-            var m = wv(d - 1); var i = 0
-            while (i < dim) { m += wv(i) * f(i); i += 1 }
-            val p = 1.0 / (1.0 + math.exp(-m))
-            val r = rw * (p - y)
-            i = 0
-            while (i < dim) { g(i) += r * f(i); i += 1 }
-            g(d - 1) += r
-            val s = rw * p * (1.0 - p)
-            var a = 0; var k = 0
-            while (a < d) {
-              val xa = if (a == dim) 1.0 else f(a)
-              val sxa = s * xa
-              var b = a
-              while (b < d) {
-                val xb = if (b == dim) 1.0 else f(b)
-                h(k) += sxa * xb; k += 1; b += 1
-              }
-              a += 1
-            }
-            n += rw
-          }
-          Iterator.single((TaskContext.getPartitionId(), g, h, n))
-        }.collect().sortBy(_._1)
-        bw.destroy()
-        val n = partials.map(_._4).sum
-        require(n > 0, "cannot train on an empty frame")
-        val g = new Array[Double](d)
-        val hTri = new Array[Double](d * (d + 1) / 2)
-        partials.foreach { case (_, pg, ph, _) =>
-          var i = 0
-          while (i < d) { g(i) += pg(i); i += 1 }
-          i = 0
-          while (i < hTri.length) { hTri(i) += ph(i); i += 1 }
-        }
-        // ridge-regularized Newton system: (H/n + l2·I') δ = g/n + l2·I'w
-        // with I' zero at the BIAS index — the intercept is never
-        // penalized (the sklearn/reference-solver convention; a
-        // regularized bias would shrink calibrated probabilities
-        // toward 1/2 at high l2). Separability still needs l2 > 0 on
-        // the weights; the bias diagonal Σ w·p(1−p) > 0 keeps the
-        // system nonsingular on any non-degenerate frame.
-        val hm = Array.ofDim[Double](d, d)
-        var k = 0; var a = 0
+      _ => d.toLong * (d + 3) / 2,
+      init.map(m => m.weights :+ m.bias).getOrElse(new Array[Double](d)),
+      iters) { (wv, it) =>
+      val g = new Array[Double](d)
+      val h = new Array[Double](d * (d + 1) / 2)
+      var n = 0.0
+      it.foreach { case (y, f, rw) =>
+        require(f.length == dim, s"feature width ${f.length} != dim $dim")
+        checkRowWeight(rw)
+        var m = wv(d - 1); var i = 0
+        while (i < dim) { m += wv(i) * f(i); i += 1 }
+        val p = 1.0 / (1.0 + math.exp(-m))
+        val r = rw * (p - y)
+        i = 0
+        while (i < dim) { g(i) += r * f(i); i += 1 }
+        g(d - 1) += r
+        val s = rw * p * (1.0 - p)
+        var a = 0; var k = 0
         while (a < d) {
+          val xa = if (a == dim) 1.0 else f(a)
+          val sxa = s * xa
           var b = a
           while (b < d) {
-            hm(a)(b) = hTri(k) / n; hm(b)(a) = hm(a)(b); k += 1; b += 1
+            val xb = if (b == dim) 1.0 else f(b)
+            h(k) += sxa * xb; k += 1; b += 1
           }
-          if (a < dim) hm(a)(a) += l2
           a += 1
         }
-        val rhs = Array.tabulate(d)(i =>
-          g(i) / n + (if (i < dim) l2 * w(i) else 0.0))
-        val delta = solve(hm, rhs)
-        val next = new Array[Double](d)
-        var i = 0
-        while (i < d) { next(i) = w(i) - delta(i); i += 1 }
-        w = next
+        n += rw
       }
-      LogisticModel(w.take(dim), w(dim))
-    } finally { data.unpersist(): Unit }
+      (g, h, n)
+    }(newtonStep(d, l2, packed = true))
+    LogisticModel(w.take(dim), w(dim))
   }
 
   /** Train by full-batch gradient descent over SPARSE index features
@@ -312,65 +368,36 @@ object Classifier {
     val spark = df.sparkSession
     import spark.implicits._
     val d = dim + 1
-    // per-row importance weight — see trainLogistic
-    val wexpr = weightCol.map(c => col(c).cast("double"))
-      .getOrElse(lit(1.0))
     // decoded once, cached as primitive-array rows, scale-adaptive
     // partition count — see cacheTrainRows (per-row cost = the row's
     // ACTUAL sparse index length, summed in the cache-materialization
     // pass — a corpus of long documents spreads as its work demands,
     // where the old constant 16 serialized it on a handful of tasks)
-    val data = cacheTrainRows(
-      df.select(col(labelCol).cast("double"), col(idxCol), wexpr)
-        .as[(Double, Array[Int], Double)])(
-      t => 8L + t._2.length)
-    try {
-      var w = init.map(m => m.weights :+ m.bias)
-        .getOrElse(new Array[Double](d))
-      for (_ <- 0 until iters) {
-        val bw = spark.sparkContext.broadcast(w)
-        val partials = data.mapPartitions { it =>
-          val wv = bw.value
-          val g = new Array[Double](d)
-          var n = 0.0
-          it.foreach { case (y, idx, rw) =>
-            require(rw > 0.0 && !rw.isNaN && !rw.isInfinite,
-              s"row weight must be finite positive, got $rw")
-            var m = wv(d - 1)
-            var k = 0
-            while (k < idx.length) {
-              val i = idx(k)
-              require(i >= 0 && i < dim, s"index $i outside [0, $dim)")
-              m += wv(i); k += 1
-            }
-            val r = rw * (1.0 / (1.0 + math.exp(-m)) - y)
-            k = 0
-            while (k < idx.length) { g(idx(k)) += r; k += 1 }
-            g(d - 1) += r
-            n += rw
-          }
-          Iterator.single((TaskContext.getPartitionId(), g, n))
-        }.collect().sortBy(_._1)
-        bw.destroy()
-        val n = partials.map(_._3).sum
-        require(n > 0, "cannot train on an empty frame")
-        val g = new Array[Double](d)
-        partials.foreach { case (_, pg, _) =>
-          var i = 0
-          while (i < d) { g(i) += pg(i); i += 1 }
+    val w = fit(df.select(col(labelCol).cast("double"), col(idxCol),
+      rowWeight(weightCol)).as[(Double, Array[Int], Double)])(
+      t => 8L + t._2.length,
+      init.map(m => m.weights :+ m.bias).getOrElse(new Array[Double](d)),
+      iters) { (wv, it) =>
+      val g = new Array[Double](d)
+      var n = 0.0
+      it.foreach { case (y, idx, rw) =>
+        checkRowWeight(rw)
+        var m = wv(d - 1)
+        var k = 0
+        while (k < idx.length) {
+          val i = idx(k)
+          require(i >= 0 && i < dim, s"index $i outside [0, $dim)")
+          m += wv(i); k += 1
         }
-        val next = new Array[Double](d)
-        var i = 0
-        while (i < d) {
-          // bias (index dim) unpenalized — the family-wide convention
-          next(i) = w(i) - lr *
-            (g(i) / n + (if (i < dim) l2 * w(i) else 0.0))
-          i += 1
-        }
-        w = next
+        val r = rw * (1.0 / (1.0 + math.exp(-m)) - y)
+        k = 0
+        while (k < idx.length) { g(idx(k)) += r; k += 1 }
+        g(d - 1) += r
+        n += rw
       }
-      LogisticModel(w.take(dim), w(dim))
-    } finally { data.unpersist(): Unit }
+      (g, Array.emptyDoubleArray, n)
+    }(gdStep(d, lr, l2))
+    LogisticModel(w.take(dim), w(dim))
   }
 
   /** In-place pivoted Gaussian elimination — the (d+1)×(d+1) Newton
@@ -511,112 +538,78 @@ object Classifier {
         "keep (numClasses-1)*(dim+1) <= 256 (bin features first)")
     val spark = df.sparkSession
     import spark.implicits._
-    val wexpr = weightCol.map(c => col(c).cast("double"))
-      .getOrElse(lit(1.0))
+    val C = numClasses
     // decoded once, cached as primitive-array rows, scale-adaptive
     // partition count — see cacheTrainRows (per-row cost: the m²
-    // block Hessian dominates)
-    val data = cacheTrainRows(df.select(col(labelCol).cast("int"),
-      col(featuresCol).cast("array<double>"), wexpr)
-      .as[(Int, Array[Double], Double)])(_ => m.toLong * m)
-    try {
-      val C = numClasses
-      var w = new Array[Double](m) // class-major: c*d + i
-      for (_ <- 0 until iters) {
-        val bw = spark.sparkContext.broadcast(w)
-        val partials = data.mapPartitions { it =>
-          val wv = bw.value
-          val g = new Array[Double](m)
-          val h = new Array[Double](m * m)
-          var n = 0.0
-          val logits = new Array[Double](C)
-          val p = new Array[Double](C)
-          val x = new Array[Double](d)
-          it.foreach { case (y, f, rw) =>
-            require(f.length == dim,
-              s"feature width ${f.length} != dim $dim")
-            require(y >= 0 && y < C, s"label $y outside [0, $C)")
-            require(rw > 0.0 && !rw.isNaN && !rw.isInfinite,
-              s"row weight must be finite positive, got $rw")
-            var i = 0
-            while (i < dim) { x(i) = f(i); i += 1 }
-            x(dim) = 1.0
-            var c = 0; var mx = 0.0
-            while (c < C - 1) {
-              var s = 0.0; i = 0
-              while (i < d) { s += wv(c * d + i) * x(i); i += 1 }
-              logits(c) = s
-              if (s > mx) mx = s
-              c += 1
-            }
-            logits(C - 1) = 0.0
-            var z = 0.0; c = 0
-            while (c < C) {
-              p(c) = math.exp(logits(c) - mx); z += p(c); c += 1
-            }
-            c = 0
-            while (c < C) { p(c) /= z; c += 1 }
-            // gradient blocks
-            var a = 0
-            while (a < C - 1) {
-              val ra = rw * (p(a) - (if (y == a) 1.0 else 0.0))
-              i = 0
-              while (i < d) { g(a * d + i) += ra * x(i); i += 1 }
-              a += 1
-            }
-            // Hessian blocks: S_ab = w * p_a (δ_ab − p_b)
-            a = 0
-            while (a < C - 1) {
-              var b = 0
-              while (b < C - 1) {
-                val s = rw * p(a) * ((if (a == b) 1.0 else 0.0) - p(b))
-                if (s != 0.0) {
-                  i = 0
-                  while (i < d) {
-                    val sxi = s * x(i)
-                    var j = 0
-                    while (j < d) {
-                      h((a * d + i) * m + b * d + j) += sxi * x(j)
-                      j += 1
-                    }
-                    i += 1
-                  }
-                }
-                b += 1
-              }
-              a += 1
-            }
-            n += rw
-          }
-          Iterator.single((TaskContext.getPartitionId(), g, h, n))
-        }.collect().sortBy(_._1)
-        bw.destroy()
-        val n = partials.map(_._4).sum
-        require(n > 0, "cannot train on an empty frame")
-        val g = new Array[Double](m)
-        val hFlat = new Array[Double](m * m)
-        partials.foreach { case (_, pg, ph, _) =>
-          var i = 0
-          while (i < m) { g(i) += pg(i); i += 1 }
-          i = 0
-          while (i < m * m) { hFlat(i) += ph(i); i += 1 }
-        }
-        // per-class bias entries (i mod d == dim) unpenalized — the
-        // family-wide intercept convention (see trainLogistic)
-        val hm = Array.tabulate(m, m)((i, j) => hFlat(i * m + j) / n)
+    // block Hessian dominates); weights class-major: c*d + i
+    val w = fit(df.select(col(labelCol).cast("int"),
+      col(featuresCol).cast("array<double>"), rowWeight(weightCol))
+      .as[(Int, Array[Double], Double)])(_ => m.toLong * m,
+      new Array[Double](m), iters) { (wv, it) =>
+      val g = new Array[Double](m)
+      val h = new Array[Double](m * m)
+      var n = 0.0
+      val logits = new Array[Double](C)
+      val p = new Array[Double](C)
+      val x = new Array[Double](d)
+      it.foreach { case (y, f, rw) =>
+        require(f.length == dim, s"feature width ${f.length} != dim $dim")
+        require(y >= 0 && y < C, s"label $y outside [0, $C)")
+        checkRowWeight(rw)
         var i = 0
-        while (i < m) { if (i % d != dim) hm(i)(i) += l2; i += 1 }
-        val rhs = Array.tabulate(m)(i =>
-          g(i) / n + (if (i % d != dim) l2 * w(i) else 0.0))
-        val delta = solve(hm, rhs)
-        val next = new Array[Double](m)
-        i = 0
-        while (i < m) { next(i) = w(i) - delta(i); i += 1 }
-        w = next
+        while (i < dim) { x(i) = f(i); i += 1 }
+        x(dim) = 1.0
+        var c = 0; var mx = 0.0
+        while (c < C - 1) {
+          var s = 0.0; i = 0
+          while (i < d) { s += wv(c * d + i) * x(i); i += 1 }
+          logits(c) = s
+          if (s > mx) mx = s
+          c += 1
+        }
+        logits(C - 1) = 0.0
+        var z = 0.0; c = 0
+        while (c < C) {
+          p(c) = math.exp(logits(c) - mx); z += p(c); c += 1
+        }
+        c = 0
+        while (c < C) { p(c) /= z; c += 1 }
+        // gradient blocks
+        var a = 0
+        while (a < C - 1) {
+          val ra = rw * (p(a) - (if (y == a) 1.0 else 0.0))
+          i = 0
+          while (i < d) { g(a * d + i) += ra * x(i); i += 1 }
+          a += 1
+        }
+        // Hessian blocks: S_ab = w * p_a (δ_ab − p_b)
+        a = 0
+        while (a < C - 1) {
+          var b = 0
+          while (b < C - 1) {
+            val s = rw * p(a) * ((if (a == b) 1.0 else 0.0) - p(b))
+            if (s != 0.0) {
+              i = 0
+              while (i < d) {
+                val sxi = s * x(i)
+                var j = 0
+                while (j < d) {
+                  h((a * d + i) * m + b * d + j) += sxi * x(j)
+                  j += 1
+                }
+                i += 1
+              }
+            }
+            b += 1
+          }
+          a += 1
+        }
+        n += rw
       }
-      SoftmaxModel(Array.tabulate(numClasses - 1)(c =>
-        w.slice(c * d, (c + 1) * d)), numClasses)
-    } finally { data.unpersist(): Unit }
+      (g, h, n)
+    }(newtonStep(d, l2, packed = false))
+    SoftmaxModel(Array.tabulate(numClasses - 1)(c =>
+      w.slice(c * d, (c + 1) * d)), numClasses)
   }
 
   /** Train a multinomial softmax classifier by full-batch gradient
@@ -653,87 +646,60 @@ object Classifier {
         s"($dim, $numClasses)"))
     val spark = df.sparkSession
     import spark.implicits._
-    val wexpr = weightCol.map(c => col(c).cast("double"))
-      .getOrElse(lit(1.0))
+    val C = numClasses
     // decoded once, cached as primitive-array rows, scale-adaptive
     // partition count — see cacheTrainRows (per-row cost = (C−1) ×
     // the row's ACTUAL sparse index length, summed in the
-    // cache-materialization pass)
-    val data = cacheTrainRows(
-      df.select(col(labelCol).cast("int"), col(idxCol), wexpr)
-        .as[(Int, Array[Int], Double)])(
-      t => (8L + t._2.length) * (numClasses - 1))
-    try {
-      val C = numClasses
-      var w = init.map(_.weights.flatten.toArray)
-        .getOrElse(new Array[Double](m)) // class-major: c*d + i, bias last
-      for (_ <- 0 until iters) {
-        val bw = spark.sparkContext.broadcast(w)
-        val partials = data.mapPartitions { it =>
-          val wv = bw.value
-          val g = new Array[Double](m)
-          var n = 0.0
-          val logits = new Array[Double](C)
-          val p = new Array[Double](C)
-          it.foreach { case (y, idx, rw) =>
-            require(y >= 0 && y < C, s"label $y outside [0, $C)")
-            require(rw > 0.0 && !rw.isNaN && !rw.isInfinite,
-              s"row weight must be finite positive, got $rw")
-            var k = 0
-            while (k < idx.length) {
-              val i = idx(k)
-              require(i >= 0 && i < dim, s"index $i outside [0, $dim)")
-              k += 1
-            }
-            var c = 0; var mx = 0.0
-            while (c < C - 1) {
-              var s = wv(c * d + dim) // bias
-              k = 0
-              while (k < idx.length) { s += wv(c * d + idx(k)); k += 1 }
-              logits(c) = s
-              if (s > mx) mx = s
-              c += 1
-            }
-            logits(C - 1) = 0.0
-            var z = 0.0; c = 0
-            while (c < C) {
-              p(c) = math.exp(logits(c) - mx); z += p(c); c += 1
-            }
-            c = 0
-            while (c < C) { p(c) /= z; c += 1 }
-            var a = 0
-            while (a < C - 1) {
-              val ra = rw * (p(a) - (if (y == a) 1.0 else 0.0))
-              k = 0
-              while (k < idx.length) { g(a * d + idx(k)) += ra; k += 1 }
-              g(a * d + dim) += ra
-              a += 1
-            }
-            n += rw
-          }
-          Iterator.single((TaskContext.getPartitionId(), g, n))
-        }.collect().sortBy(_._1)
-        bw.destroy()
-        val n = partials.map(_._3).sum
-        require(n > 0, "cannot train on an empty frame")
-        val g = new Array[Double](m)
-        partials.foreach { case (_, pg, _) =>
-          var i = 0
-          while (i < m) { g(i) += pg(i); i += 1 }
+    // cache-materialization pass); weights class-major: c*d + i, bias
+    // last
+    val w = fit(df.select(col(labelCol).cast("int"), col(idxCol),
+      rowWeight(weightCol)).as[(Int, Array[Int], Double)])(
+      t => (8L + t._2.length) * (numClasses - 1),
+      init.map(_.weights.flatten.toArray).getOrElse(new Array[Double](m)),
+      iters) { (wv, it) =>
+      val g = new Array[Double](m)
+      var n = 0.0
+      val logits = new Array[Double](C)
+      val p = new Array[Double](C)
+      it.foreach { case (y, idx, rw) =>
+        require(y >= 0 && y < C, s"label $y outside [0, $C)")
+        checkRowWeight(rw)
+        var k = 0
+        while (k < idx.length) {
+          val i = idx(k)
+          require(i >= 0 && i < dim, s"index $i outside [0, $dim)")
+          k += 1
         }
-        val next = new Array[Double](m)
-        var i = 0
-        while (i < m) {
-          // per-class bias (i mod d == dim) unpenalized — family-wide
-          next(i) = w(i) - lr *
-            (g(i) / n + (if (i % d != dim) l2 * w(i) else 0.0))
-          i += 1
+        var c = 0; var mx = 0.0
+        while (c < C - 1) {
+          var s = wv(c * d + dim) // bias
+          k = 0
+          while (k < idx.length) { s += wv(c * d + idx(k)); k += 1 }
+          logits(c) = s
+          if (s > mx) mx = s
+          c += 1
         }
-        w = next
+        logits(C - 1) = 0.0
+        var z = 0.0; c = 0
+        while (c < C) {
+          p(c) = math.exp(logits(c) - mx); z += p(c); c += 1
+        }
+        c = 0
+        while (c < C) { p(c) /= z; c += 1 }
+        var a = 0
+        while (a < C - 1) {
+          val ra = rw * (p(a) - (if (y == a) 1.0 else 0.0))
+          k = 0
+          while (k < idx.length) { g(a * d + idx(k)) += ra; k += 1 }
+          g(a * d + dim) += ra
+          a += 1
+        }
+        n += rw
       }
-      SoftmaxModel(Array.tabulate(numClasses - 1)(c =>
-        w.slice(c * d, (c + 1) * d)), numClasses)
-    } finally { data.unpersist(): Unit }
+      (g, Array.emptyDoubleArray, n)
+    }(gdStep(d, lr, l2))
+    SoftmaxModel(Array.tabulate(numClasses - 1)(c =>
+      w.slice(c * d, (c + 1) * d)), numClasses)
   }
 
   /** Score sparse index features against a [[SoftmaxModel]] at scale —

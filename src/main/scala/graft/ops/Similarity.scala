@@ -182,58 +182,110 @@ object Similarity {
     * The matrix-expression path has no such ceiling. */
   private[ops] val literalArgmaxCeiling = 64
 
-  /** Nearest-centroid id by maximum dot product (deterministic: ties take
-    * the higher centroid id via lexicographic struct comparison). Two
-    * spec-pinned-identical physical forms: up to
+  /** Nearest centroid by maximum dot product, as `(cid, score)`
+    * (deterministic: ties take the higher centroid id via lexicographic
+    * struct comparison). Two spec-pinned-identical physical forms: up to
     * [[literalArgmaxCeiling]] centroids, the original per-centroid
     * literal `greatest` chain (unchanged plans for every existing
-    * caller); above it, [[VectorExprs.ArgMaxDot]] carries the whole
-    * centroid matrix as ONE reference object and loops K x dim inside
-    * codegen — corpus-scale IVF (thousands of cells over billions of
-    * vectors) without a join, a shuffle, or a K-term expression tree. */
-  def assignCentroid(v: Column, centroids: Array[Array[Double]]): Column =
-    if (centroids.length <= literalArgmaxCeiling)
-      greatest(centroids.zipWithIndex.map { case (c, i) =>
+    * caller); above it, [[VectorExprs.ArgMaxDot]] and
+    * [[VectorExprs.MaxDot]] carry the whole centroid matrix as ONE
+    * reference object and loop K x dim inside codegen — corpus-scale IVF
+    * (thousands of cells over billions of vectors) without a join, a
+    * shuffle, or a K-term expression tree. */
+  private def argmaxCentroid(v: Column,
+                             centroids: Array[Array[Double]]): (Column, Column) =
+    if (centroids.length <= literalArgmaxCeiling) {
+      val best = greatest(centroids.zipWithIndex.map { case (c, i) =>
         struct(centroidDot(v, c).as("score"), lit(i).as("cid"))
-      }: _*).getField("cid")
-    else VectorExprs.argMaxDot(v, centroids)
+      }: _*)
+      (best.getField("cid"), best.getField("score"))
+    } else
+      (VectorExprs.argMaxDot(v, centroids), VectorExprs.maxDot(v, centroids))
+
+  /** Nearest-centroid id by maximum dot product: [[argmaxCentroid]]'s
+    * cid. */
+  def assignCentroid(v: Column, centroids: Array[Array[Double]]): Column =
+    argmaxCentroid(v, centroids)._1
 
   /** Deterministic mini k-means (Lloyd) for the IVF coarse quantizer:
-    * centroids seed from the `k` lowest-id vectors, each iteration assigns
-    * by dot product and recomputes per-dimension means (rounded to 1e-6 so
-    * distributed summation order cannot leak into the result). One Spark
-    * job per iteration; the corpus is scanned, never collected. */
+    * [[lloyd]] over the whole vector (m = 1), assigning by dot product
+    * ([[assignCentroid]]) and normalizing every centroid, each element
+    * 1e-6 floor-rounded ([[sphere6]]). The corpus is scanned, never
+    * collected. */
   def kmeansCentroids(corpus: DataFrame, k: Int, iters: Int = 5,
                       idCol: String = "vec_id",
-                      vecCol: String = "embedding"): Array[Array[Double]] = {
-    def normalize(c: Array[Double]): Array[Double] = {
-      val n = math.sqrt(c.map(x => x * x).sum)
-      if (n == 0) c else c.map(x => math.floor(x / n * 1e6) / 1e6)
-    }
-    var centroids = corpus.orderBy(col(idCol)).limit(k)
+                      vecCol: String = "embedding"): Array[Array[Double]] =
+    lloyd(corpus, k, iters, idCol, vecCol, m = 1, sub = 0)(
+      assignCentroid, sphere6).head
+
+  /** Every element floor-rounded to 1e-6, so distributed summation
+    * order cannot leak into a centroid. */
+  private[ops] def floor6(c: Array[Double]): Array[Double] =
+    c.map(x => math.floor(x * 1e6) / 1e6)
+
+  /** [[floor6]] of the unit vector (a zero vector stays as it is). */
+  private def sphere6(c: Array[Double]): Array[Double] = {
+    val n = math.sqrt(c.map(x => x * x).sum)
+    if (n == 0) c else c.map(x => math.floor(x / n * 1e6) / 1e6)
+  }
+
+  /** The one deterministic Lloyd loop, over `m` subspaces of width `sub`
+    * (`sub = 0`: the whole vector, m = 1) trained side by side: centroids
+    * seed from the `k` lowest-id rows (one collect, sliced client-side),
+    * each iteration assigns every subvector with `assign` and recomputes
+    * per-dimension means, and `post` fixes each centroid (the seeds
+    * too). Every subspace's assignment and means compute in one pass per
+    * iteration (`m` structs exploded per row, grouped by
+    * (sub, cid, pos)), so a fit is `1 + 2 * iters` jobs (the seed
+    * collect, then each aggregate's shuffle-map and result jobs)
+    * regardless of `m` and of the assignment form;
+    * each (sub, cid, pos) group's `avg` accumulates its values in
+    * partition-major order (the subspaces only interleave BETWEEN
+    * groups). An empty cluster keeps its centroid. */
+  private[ops] def lloyd(corpus: DataFrame, k: Int, iters: Int,
+                         idCol: String, vecCol: String, m: Int, sub: Int)(
+      assign: (Column, Array[Array[Double]]) => Column,
+      post: Array[Double] => Array[Double])
+      : IndexedSeq[Array[Array[Double]]] = {
+    def part(v: Column, s: Int) =
+      if (sub == 0) v else slice(v, s * sub + 1, sub)
+    val seedRows = corpus.orderBy(col(idCol)).limit(k)
       .select(col(vecCol)).collect()
-      .map(r => normalize(rowVec(r, 0)))
-    (0 until iters).foreach { _ =>
-      val assigned = corpus.select(col(vecCol).as("v"),
-        assignCentroid(col(vecCol), centroids).as("cid"))
-      val dims = assigned
-        .select(col("cid"), posexplode(col("v")).as(Seq("pos", "x")))
-        .groupBy(col("cid"), col("pos"))
-        .agg(avg(col("x").cast("double")).as("m"))
-        .collect()
-      val byCid = dims.groupBy(_.getInt(0))
-      centroids = centroids.indices.map { i =>
-        byCid.get(i) match {
-          case Some(rows) =>
-            val dim = rows.map(_.getInt(1)).max + 1
-            val c = new Array[Double](dim)
-            rows.foreach(r => c(r.getInt(1)) = r.getDouble(2))
-            normalize(c)
-          case None => centroids(i) // empty cluster keeps its centroid
-        }
-      }.toArray
+    var cents: IndexedSeq[Array[Array[Double]]] = (0 until m).map { s =>
+      seedRows.map { r =>
+        val v = rowVec(r, 0)
+        post(if (sub == 0) v else v.slice(s * sub, (s + 1) * sub))
+      }
     }
-    centroids
+    (0 until iters).foreach { _ =>
+      val perSub = (0 until m).map { s =>
+        val sv = part(col(vecCol), s)
+        struct(lit(s).as("sub"), assign(sv, cents(s)).as("cid"),
+          sv.as("v"))
+      }
+      val dims = corpus
+        .select(explode(array(perSub: _*)).as("e"))
+        .select(col("e.sub").as("sub"), col("e.cid").as("cid"),
+          posexplode(col("e.v")).as(Seq("pos", "x")))
+        .groupBy(col("sub"), col("cid"), col("pos"))
+        .agg(avg(col("x").cast("double")).as("mn"))
+        .collect()
+      val bySub = dims.groupBy(_.getInt(0))
+      cents = (0 until m).map { s =>
+        val byCid = bySub.getOrElse(s, Array.empty[org.apache.spark.sql.Row])
+          .groupBy(_.getInt(1))
+        cents(s).indices.map { i =>
+          byCid.get(i) match {
+            case Some(rows) =>
+              val c = new Array[Double](rows.map(_.getInt(2)).max + 1)
+              rows.foreach(r => c(r.getInt(2)) = r.getDouble(3))
+              post(c)
+            case None => cents(s)(i)
+          }
+        }.toArray
+      }
+    }
+    cents
   }
 
   /** IVF approximate top-k: the corpus is assigned once to `k` coarse
@@ -291,36 +343,49 @@ object Similarity {
     ivfRank(bucketed.join(probeDF, Seq("cid")).join(q, Seq("query_id")), k)
   }
 
-  /** Shared IVF quantizer prelude: derived-or-explicit train fraction,
-    * Lloyd iterations on the (possibly sampled) train set, full-corpus
-    * cell assignment. One definition so the driver-probe and
-    * distributed-probe variants can never diverge on training or
-    * assignment semantics. */
   /** Fit the IVF coarse quantizer once: deterministic k-means
     * centroids plus the corpus bucketed by nearest centroid
     * (`(vec_id, v, cid)`). Public because fit-once/probe-many is the
     * production shape — an nprobe sweep ([[ivfProbeTopK]]), a tuning
     * loop, or repeated query batches re-probe ONE fitted quantizer
     * instead of re-running k-means per call; [[ivfTopKBatch]] is the
-    * fit-and-probe convenience over this. */
+    * fit-and-probe convenience over this. Training runs on
+    * [[trainSample]]; assignment covers the full corpus. */
   def ivfQuantize(corpus: DataFrame, numCentroids: Int = 8,
                   iters: Int = 3, idCol: String = "vec_id",
                   vecCol: String = "embedding",
                   trainFraction: Double = 0.0,
                   targetTrain: Long = 100000L)
-      : (Array[Array[Double]], DataFrame) = {
-    require(trainFraction >= 0.0 && trainFraction <= 1.0,
-      "trainFraction in [0,1] (0 = derive from corpus size)")
-    val frac =
-      if (trainFraction > 0.0) trainFraction
-      else deriveTrainFraction(corpus.count(), targetTrain)
-    val trainSet =
-      if (frac >= 1.0) corpus
-      else Sampling.hashSample(corpus, col(idCol), frac)
+      : (Array[Array[Double]], DataFrame) =
+    quantizeOn(corpus, trainSample(corpus, idCol, trainFraction,
+      targetTrain, corpus.count()), numCentroids, iters, idCol, vecCol)
+
+  /** [[ivfQuantize]] with its training input given. */
+  private def quantizeOn(corpus: DataFrame, trainSet: DataFrame,
+                         numCentroids: Int, iters: Int, idCol: String,
+                         vecCol: String): (Array[Array[Double]], DataFrame) = {
     val centroids = kmeansCentroids(trainSet, numCentroids, iters, idCol, vecCol)
     val bucketed = corpus.select(col(idCol).as("vec_id"), col(vecCol).as("v"),
       assignCentroid(col(vecCol), centroids).as("cid"))
     (centroids, bucketed)
+  }
+
+  /** The Lloyd training input shared by every quantizer: a
+    * deterministic [[Sampling.hashSample]] at `trainFraction`, or — at
+    * `trainFraction = 0` — at the fraction [[deriveTrainFraction]]
+    * derives from the corpus size `n` to keep ~`targetTrain` rows
+    * (`n` is evaluated only then). A fraction of 1.0 trains on the
+    * whole corpus. */
+  private def trainSample(corpus: DataFrame, idCol: String,
+                          trainFraction: Double, targetTrain: Long,
+                          n: => Long): DataFrame = {
+    require(trainFraction >= 0.0 && trainFraction <= 1.0,
+      "trainFraction in [0,1] (0 = derive from corpus size)")
+    val frac =
+      if (trainFraction > 0.0) trainFraction
+      else deriveTrainFraction(n, targetTrain)
+    if (frac >= 1.0) corpus
+    else Sampling.hashSample(corpus, col(idCol), frac)
   }
 
   /** Shared IVF ranking epilogue over candidate rows
@@ -505,45 +570,26 @@ object Similarity {
                   maxCellSize: Long = 0L,
                   targetTrain: Long = 100000L): DataFrame = {
     require(targetCellSize > 0, "targetCellSize must be positive")
-    require(trainFraction >= 0.0 && trainFraction <= 1.0,
-      "trainFraction in [0,1] (0 = derive from corpus size)")
     // sizing pass: count() is metadata-only on file-backed frames, but a
     // DERIVED corpus (filters, joins upstream) pays one full evaluation
     // here — pass numCentroids + trainFraction explicitly or
     // localCheckpoint upstream when the input plan is expensive
     lazy val n = corpus.count()
+    // centroid TRAINING runs on a deterministic hash sample (each
+    // k-means iteration scans its input; at corpus scale train on ~1e5
+    // vectors, not 100 TB). Exactness is unaffected: the pruning bound
+    // uses cell radii computed over the FULL corpus below, and the
+    // triangle inequality is sound for ANY centroid set — sampling only
+    // modulates pruning strength.
+    val trainSet = trainSample(corpus, idCol, trainFraction, targetTrain, n)
     val cells =
       if (numCentroids > 0) numCentroids
       else deriveCells(n, targetCellSize)
     val cellCap =
       if (maxCellSize != 0L) maxCellSize else 16L * targetCellSize
-    // centroid TRAINING runs on a deterministic hash sample (each
-    // k-means iteration scans its input; at corpus scale train on ~1e5
-    // vectors, not 100 TB — trainFraction = 0, the default, derives the
-    // fraction keeping ~targetTrain vectors, like ivfTopK). Exactness
-    // is unaffected: the pruning bound uses cell radii computed over
-    // the FULL corpus below, and the triangle inequality is sound for
-    // ANY centroid set — sampling only modulates pruning strength.
-    val frac =
-      if (trainFraction > 0.0) trainFraction
-      else deriveTrainFraction(n, targetTrain)
-    val trainSet =
-      if (frac >= 1.0) corpus
-      else Sampling.hashSample(corpus, col(idCol), frac)
     val centroids = kmeansCentroids(trainSet, cells, iters, idCol, vecCol)
     val norm = sqrt(VectorExprs.dot(col("v"), col("v")))
-    // (cid, best score): literal greatest-chain up to the ceiling,
-    // the paired matrix expressions above it (same argmax semantics,
-    // two K x dim loops instead of K expression children)
-    val (bestCid, bestScore) =
-      if (centroids.length <= literalArgmaxCeiling) {
-        val best = greatest(centroids.zipWithIndex.map { case (c, i) =>
-          struct(centroidDot(col("v"), c).as("score"), lit(i).as("cid"))
-        }: _*)
-        (best.getField("cid"), best.getField("score"))
-      } else
-        (VectorExprs.argMaxDot(col("v"), centroids),
-          VectorExprs.maxDot(col("v"), centroids))
+    val (bestCid, bestScore) = argmaxCentroid(col("v"), centroids)
     // materialized once: the radii action, and both sides of the cell
     // self-join, would otherwise each recompute the numCentroids dot
     // products per row
@@ -620,58 +666,32 @@ object Similarity {
         .otherwise(floor(x.cast("double") / scale + lit(0.5)))
         .cast("tinyint"))
 
-  /** ALL `m` PQ sub-codebooks trained in ONE Lloyd loop: plain-L2
-    * deterministic mini k-means per subspace — seeds from the `k`
-    * lowest-id rows (one collect, sliced client-side), assignment by
-    * minimum L2 (via the monotone `dot - ||c||^2/2` form), per-dimension
-    * means; every centroid element 1e-6 floor-rounded, but NOT
-    * normalized: product quantization reconstructs subvector
-    * magnitudes, so, unlike the spherical [[kmeansCentroids]], codewords
-    * keep theirs. Every subspace's assignment and per-dimension mean
-    * computes in one pass per iteration (`m` structs exploded per row,
-    * grouped by (sub, cid, pos)), so the whole training is `1 + iters`
-    * jobs regardless of `m`; each (sub, cid, pos) group's `avg`
-    * accumulates its values in partition-major order (the subspaces
-    * only interleave BETWEEN groups). OpsSpec's PQ parity/recall pins
-    * and the q_embed_pq/ivfpq oracles hold bit-for-bit. */
-  private[ops] def kmeansCentroidsL2Multi(
-      corpus: DataFrame, m: Int, sub: Int, k: Int, iters: Int,
-      idCol: String, vecCol: String): IndexedSeq[Array[Array[Double]]] = {
-    def round(c: Array[Double]) = c.map(x => math.floor(x * 1e6) / 1e6)
-    val seedRows = corpus.orderBy(col(idCol)).limit(k)
-      .select(col(vecCol)).collect()
-    var cents: IndexedSeq[Array[Array[Double]]] = (0 until m).map { s =>
-      seedRows.map(r => round(rowVec(r, 0).slice(s * sub, (s + 1) * sub)))
-    }
-    (0 until iters).foreach { _ =>
-      val perSub = (0 until m).map { s =>
-        val sv = slice(col(vecCol), s * sub + 1, sub)
-        struct(lit(s).as("sub"), assignCentroidL2(sv, cents(s)).as("cid"),
-          sv.as("v"))
-      }
-      val dims = corpus
-        .select(explode(array(perSub: _*)).as("e"))
-        .select(col("e.sub").as("sub"), col("e.cid").as("cid"),
-          posexplode(col("e.v")).as(Seq("pos", "x")))
-        .groupBy(col("sub"), col("cid"), col("pos"))
-        .agg(avg(col("x").cast("double")).as("mn"))
-        .collect()
-      val bySub = dims.groupBy(_.getInt(0))
-      cents = (0 until m).map { s =>
-        val byCid = bySub.getOrElse(s, Array.empty[org.apache.spark.sql.Row])
-          .groupBy(_.getInt(1))
-        cents(s).indices.map { i =>
-          byCid.get(i) match {
-            case Some(rows) =>
-              val c = new Array[Double](sub)
-              rows.foreach(r => c(r.getInt(2)) = r.getDouble(3))
-              round(c)
-            case None => cents(s)(i) // empty cluster keeps its codeword
-          }
-        }.toArray
-      }
-    }
-    cents
+  /** The PQ training prelude of [[pqTopK]], [[ivfPqTopK]] and
+    * [[buildPqIndex]]: `m` sub-codebooks of `codewords` codewords over
+    * `sub = dim / m`-wide subspaces (`dim` read from the first row),
+    * trained by ONE [[lloyd]] fit on [[trainSample]] — assignment by
+    * minimum L2 ([[assignCentroidL2]]), every codeword element 1e-6
+    * floor-rounded ([[floor6]]) but NOT normalized: product quantization
+    * reconstructs subvector magnitudes, so, unlike the spherical
+    * [[kmeansCentroids]], codewords keep theirs. Returns the books,
+    * `sub`, and the training sample (IVF-PQ fits its coarse quantizer
+    * on the same one). OpsSpec's PQ parity/recall pins and the
+    * q_embed_pq/ivfpq oracles hold bit-for-bit. */
+  private def pqBooks(corpus: DataFrame, m: Int, codewords: Int,
+                      iters: Int, trainFraction: Double,
+                      targetTrain: Long, idCol: String, vecCol: String)
+      : (IndexedSeq[Array[Array[Double]]], Int, DataFrame) = {
+    require(m >= 1, "m must be positive")
+    require(codewords >= 2 && codewords <= literalArgmaxCeiling,
+      s"codewords=$codewords outside [2, $literalArgmaxCeiling]")
+    val dim = corpus.select(size(col(vecCol)).as("d")).head().getInt(0)
+    require(dim % m == 0, s"dim=$dim not divisible by m=$m subspaces")
+    val sub = dim / m
+    val trainSet = trainSample(corpus, idCol, trainFraction, targetTrain,
+      corpus.count())
+    val books = lloyd(trainSet, codewords, iters, idCol, vecCol, m, sub)(
+      assignCentroidL2, floor6)
+    (books, sub, trainSet)
   }
 
   /** Nearest codeword by minimum L2: argmax of `dot(v, c) - ||c||^2/2`
@@ -679,8 +699,8 @@ object Similarity {
     * like [[assignCentroid]]. PQ codebooks are tiny by design
     * (`codewords <= 64` enforced by the caller), so the literal
     * `greatest` chain always applies. */
-  private def assignCentroidL2(v: Column,
-                               cents: Array[Array[Double]]): Column = {
+  private[ops] def assignCentroidL2(v: Column,
+                                    cents: Array[Array[Double]]): Column = {
     require(cents.length <= literalArgmaxCeiling,
       s"${cents.length} codewords exceed the literal-chain ceiling")
     greatest(cents.zipWithIndex.map { case (c, i) =>
@@ -706,8 +726,8 @@ object Similarity {
     * bandwidth cut is the entire point at corpus scale); the LUT rides
     * the broadcast query rows so nothing concentrates on the driver —
     * no maxQueries bound, the [[ivfTopKBatch]] discipline. Codebook
-    * training is [[kmeansCentroidsL2Multi]] on the derived hash sample
-    * (never `iters` full-corpus scans).
+    * training is [[pqBooks]] on the derived hash sample (never `iters`
+    * full-corpus scans).
     *
     * Engine-portable: codewords are 1e-6 floor-rounded, assignment and
     * LUT dots are fixed-order folds, the ADC sum is `m-1` adds in
@@ -722,23 +742,8 @@ object Similarity {
              vecCol: String = "embedding"): DataFrame = {
     val cand = if (candidates > 0) candidates else 4 * k
     require(cand >= k, s"candidates=$cand must be >= k=$k")
-    require(m >= 1, "m must be positive")
-    require(codewords >= 2 && codewords <= literalArgmaxCeiling,
-      s"codewords=$codewords outside [2, $literalArgmaxCeiling]")
-    val dim = corpus.select(size(col(vecCol)).as("d")).head().getInt(0)
-    require(dim % m == 0, s"dim=$dim not divisible by m=$m subspaces")
-    val sub = dim / m
-    require(trainFraction >= 0.0 && trainFraction <= 1.0,
-      "trainFraction in [0,1] (0 = derive from corpus size)")
-    val frac =
-      if (trainFraction > 0.0) trainFraction
-      else deriveTrainFraction(corpus.count(), targetTrain)
-    val trainSet =
-      if (frac >= 1.0) corpus
-      else Sampling.hashSample(corpus, col(idCol), frac)
-    val books: IndexedSeq[Array[Array[Double]]] =
-      kmeansCentroidsL2Multi(trainSet, m, sub, codewords, iters,
-        idCol, vecCol)
+    val (books, sub, _) = pqBooks(corpus, m, codewords, iters,
+      trainFraction, targetTrain, idCol, vecCol)
     // the m-byte code table — at scale this is the persisted index and
     // the ONLY thing stage 1 scans
     val codes = pqEncode(corpus, books, sub, idCol, vecCol)
@@ -749,12 +754,15 @@ object Similarity {
     * `(vec_id, __c0 .. __c{m-1})`. */
   private def pqEncode(vectors: DataFrame,
                        books: IndexedSeq[Array[Array[Double]]], sub: Int,
-                       idCol: String, vecCol: String): DataFrame = {
-    val codeCols = books.indices.map(s =>
-      assignCentroidL2(slice(col(vecCol), s * sub + 1, sub), books(s))
-        .as(s"__c$s"))
-    vectors.select((col(idCol).as("vec_id") +: codeCols): _*)
-  }
+                       idCol: String, vecCol: String): DataFrame =
+    vectors.select((col(idCol).as("vec_id") +:
+      codeCols(col(vecCol), books, sub)): _*)
+
+  /** `__c0 .. __c{m-1}`: each subvector of `v`'s nearest codeword. */
+  private def codeCols(v: Column, books: IndexedSeq[Array[Array[Double]]],
+                       sub: Int): IndexedSeq[Column] =
+    books.indices.map(s =>
+      assignCentroidL2(slice(v, s * sub + 1, sub), books(s)).as(s"__c$s"))
 
   /** Shared ADC scoring + rerank over a code table: per-query LUT
     * columns evaluate on the broadcast BUILD side (one
@@ -767,22 +775,45 @@ object Similarity {
                         vectors: DataFrame, queries: DataFrame,
                         k: Int, cand: Int, sub: Int,
                         idCol: String, vecCol: String): DataFrame = {
+    val q = broadcast(withLuts(queries, books, sub, idCol, vecCol))
+    rerankTopK(codes.crossJoin(q.drop("qv"))
+      .filter(col("vec_id") =!= col("query_id"))
+      .withColumn("approx", adcScore(books.length)),
+      cand, vectors, queries, k, idCol, vecCol)
+  }
+
+  /** `(query_id, qv, __lut0 .. __lut{m-1})`: per query, the exact dot of
+    * each query subvector with every codeword of its subspace (the ADC
+    * lookup tables, lambda-eval'd once per query row). */
+  private def withLuts(queries: DataFrame,
+                       books: IndexedSeq[Array[Array[Double]]], sub: Int,
+                       idCol: String, vecCol: String): DataFrame = {
     val lutCols = books.indices.map { s =>
       transform(typedlit(books(s).map(_.toSeq).toSeq),
         cw => VectorExprs.dot(slice(col("qv"), s * sub + 1, sub), cw))
         .as(s"__lut$s")
     }
-    val q = broadcast(queries
+    queries
       .select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .select(col("query_id") +: col("qv") +: lutCols: _*))
-    val adc = books.indices
-      .map(s => element_at(col(s"__lut$s"), col(s"__c$s") + 1))
+      .select(col("query_id") +: col("qv") +: lutCols: _*)
+  }
+
+  /** The ADC score of a code row joined to its query's lookup tables:
+    * `m` lookups and `m-1` adds in subspace order. */
+  private def adcScore(m: Int): Column =
+    (0 until m).map(s => element_at(col(s"__lut$s"), col(s"__c$s") + 1))
       .reduce(_ + _)
+
+  /** The two-stage tail shared by the quantized searches: keep the top
+    * `cand` candidates per query by `(approx desc, vec_id)`, join their
+    * full-precision `vectors` and the broadcast `queries`, and rank by
+    * exact cosine — `(query_id, vec_id, score, rank)`, top `k`. */
+  private def rerankTopK(approx: DataFrame, cand: Int, vectors: DataFrame,
+                         queries: DataFrame, k: Int, idCol: String,
+                         vecCol: String): DataFrame = {
     val wc = Window.partitionBy(col("query_id"))
       .orderBy(col("approx").desc, col("vec_id"))
-    val candIds = codes.crossJoin(q.drop("qv"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("approx", adc)
+    val candIds = approx
       .withColumn("crank", row_number().over(wc))
       .filter(col("crank") <= cand)
       .select(col("query_id"), col("vec_id"))
@@ -820,36 +851,15 @@ object Similarity {
     val cand = if (candidates > 0) candidates else 4 * k
     require(cand >= k, s"candidates=$cand must be >= k=$k")
     require(nprobe > 0, "nprobe must be positive")
-    require(codewords >= 2 && codewords <= literalArgmaxCeiling,
-      s"codewords=$codewords outside [2, $literalArgmaxCeiling]")
-    val dim = corpus.select(size(col(vecCol)).as("d")).head().getInt(0)
-    require(m >= 1 && dim % m == 0, s"dim=$dim not divisible by m=$m")
-    val sub = dim / m
-    val frac =
-      if (trainFraction > 0.0) trainFraction
-      else deriveTrainFraction(corpus.count(), targetTrain)
-    val (centroids, bucketed) = ivfQuantize(corpus, numCentroids, iters,
-      idCol, vecCol, frac, targetTrain)
-    val trainSet =
-      if (frac >= 1.0) corpus
-      else Sampling.hashSample(corpus, col(idCol), frac)
-    val books = kmeansCentroidsL2Multi(trainSet, m, sub, codewords,
+    val (books, sub, trainSet) = pqBooks(corpus, m, codewords, iters,
+      trainFraction, targetTrain, idCol, vecCol)
+    val (centroids, bucketed) = quantizeOn(corpus, trainSet, numCentroids,
       iters, idCol, vecCol)
     // the cell-partitioned code table: (vec_id, cid, __c0..__c{m-1})
-    val codeCols = books.indices.map(s =>
-      assignCentroidL2(slice(col("v"), s * sub + 1, sub), books(s))
-        .as(s"__c$s"))
     val codes = bucketed.select(
-      (col("vec_id") +: col("cid") +: codeCols): _*)
+      (col("vec_id") +: col("cid") +: codeCols(col("v"), books, sub)): _*)
     // per-query LUTs once, then the probe-cell explode
-    val lutCols = books.indices.map { s =>
-      transform(typedlit(books(s).map(_.toSeq).toSeq),
-        cw => VectorExprs.dot(slice(col("qv"), s * sub + 1, sub), cw))
-        .as(s"__lut$s")
-    }
-    val withLuts = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .select(col("query_id") +: col("qv") +: lutCols: _*)
+    val luts = withLuts(queries, books, sub, idCol, vecCol)
     val keep = col("query_id") +: books.indices.map(s => col(s"__lut$s"))
     val probed =
       if (centroids.length <= literalArgmaxCeiling) {
@@ -857,41 +867,22 @@ object Similarity {
           case (c, i) =>
             struct((-centroidDot(col("qv"), c)).as("ns"), lit(i).as("cid"))
         }: _*)), 1, math.min(nprobe, centroids.length))
-        withLuts.select(keep :+ explode(probeArr).as("p"): _*)
+        luts.select(keep :+ explode(probeArr).as("p"): _*)
           .select(keep :+ col("p.cid").as("cid"): _*)
       } else
-        withLuts.select(keep :+
+        luts.select(keep :+
           explode(VectorExprs.topNDotCids(col("qv"), centroids, nprobe))
             .as("cid"): _*)
-    val adc = books.indices
-      .map(s => element_at(col(s"__lut$s"), col(s"__c$s") + 1))
-      .reduce(_ + _)
-    val wc = Window.partitionBy(col("query_id"))
-      .orderBy(col("approx").desc, col("vec_id"))
-    val candIds = codes.join(broadcast(probed), Seq("cid"))
+    rerankTopK(codes.join(broadcast(probed), Seq("cid"))
       .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("approx", adc)
-      .withColumn("crank", row_number().over(wc))
-      .filter(col("crank") <= cand)
-      .select(col("query_id"), col("vec_id"))
-    val rerank = candIds
-      .join(corpus.select(col(idCol).as("vec_id"), col(vecCol).as("v")),
-        Seq("vec_id"))
-      .join(broadcast(queries.select(col(idCol).as("query_id"),
-        col(vecCol).as("qv"))), Seq("query_id"))
-      .withColumn("score", cosine(col("v"), col("qv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("vec_id"))
-    rerank
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id"), col("score"), col("rank"))
+      .withColumn("approx", adcScore(books.length)),
+      cand, corpus, queries, k, idCol, vecCol)
   }
 
   /** Build a persisted PQ index at `path`: `path/books` holds the
     * frozen per-subspace codebooks (`(s, cid, vals)` rows — tiny),
     * `path/codes` the `m`-int code per vector. Train cost is
-    * [[kmeansCentroidsL2Multi]] on the derived hash sample;
+    * [[pqBooks]] on the derived hash sample;
     * encode is one corpus pass. The index is the thing ANN serving
     * scans — `m` small ints per vector against `4*dim` float bytes. */
   def buildPqIndex(corpus: DataFrame, path: String, m: Int = 4,
@@ -900,20 +891,8 @@ object Similarity {
                    targetTrain: Long = 100000L,
                    idCol: String = "vec_id",
                    vecCol: String = "embedding"): Unit = {
-    require(m >= 1, "m must be positive")
-    require(codewords >= 2 && codewords <= literalArgmaxCeiling,
-      s"codewords=$codewords outside [2, $literalArgmaxCeiling]")
-    val dim = corpus.select(size(col(vecCol)).as("d")).head().getInt(0)
-    require(dim % m == 0, s"dim=$dim not divisible by m=$m subspaces")
-    val sub = dim / m
-    val frac =
-      if (trainFraction > 0.0) trainFraction
-      else deriveTrainFraction(corpus.count(), targetTrain)
-    val trainSet =
-      if (frac >= 1.0) corpus
-      else Sampling.hashSample(corpus, col(idCol), frac)
-    val books = kmeansCentroidsL2Multi(trainSet, m, sub, codewords,
-      iters, idCol, vecCol)
+    val (books, sub, _) = pqBooks(corpus, m, codewords, iters,
+      trainFraction, targetTrain, idCol, vecCol)
     import corpus.sparkSession.implicits._
     books.zipWithIndex
       .flatMap { case (b, s) =>
@@ -1012,25 +991,8 @@ object Similarity {
         col("cq").cast("array<double>"), col("qq").cast("array<double>")))
       .withColumn("approx",
         col("idot") * col("cscale") * col("qscale"))
-    val wc = Window.partitionBy(col("query_id"))
-      .orderBy(col("approx").desc, col("vec_id"))
-    val candIds = approx
-      .withColumn("crank", row_number().over(wc))
-      .filter(col("crank") <= cand)
-      .select(col("query_id"), col("vec_id"))
     // stage 2: full-precision vectors join in for the candidates only
-    val rerank = candIds
-      .join(corpus.select(col(idCol).as("vec_id"), col(vecCol).as("v")),
-        Seq("vec_id"))
-      .join(broadcast(queries.select(col(idCol).as("query_id"),
-        col(vecCol).as("qv"))), Seq("query_id"))
-      .withColumn("score", cosine(col("v"), col("qv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("vec_id"))
-    rerank
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id"), col("score"), col("rank"))
+    rerankTopK(approx, cand, corpus, queries, k, idCol, vecCol)
   }
 
   /** Cell count for [[cosinePairs]]' metric blocking, derived from corpus
@@ -1041,7 +1003,7 @@ object Similarity {
     math.min(64L, math.max(8L,
       (n + targetCellSize - 1) / targetCellSize)).toInt
 
-  /** Quantizer-training fraction for [[ivfTopK]], derived from corpus
+  /** Quantizer-training fraction for [[trainSample]], derived from corpus
     * size: the hash-sample fraction that keeps ~`targetTrain` vectors,
     * clamped to 1.0 (small corpora train on everything). Reproducible in
     * any engine: the effective predicate is [[Sampling.hashSample]]'s

@@ -42,18 +42,17 @@ object Tokenize {
   }
 
   /** A counter that can also emit token IDS — the seam's sequence-
-    * building face ([[withTokenIds]]); [[Gpt2Counter]] and
-    * [[TrainedBpeTokenizer]]'s counter implement it. */
+    * building face ([[withTokenIds]]); [[TrainedBpeTokenizer]]'s counter
+    * implements it. */
   trait TokenEncoder extends TokenCounter {
     def encode(text: String): Seq[Int]
 
     /** Inverse of [[encode]] up to the tokenizer's pre-tokenization:
-      * a byte-level tokenizer ([[Gpt2Counter]]) reconstructs the text
-      * EXACTLY (whitespace rides the byte mapping as Ġ/Ċ symbols); a
-      * native pre-token tokenizer ([[TrainedBpeTokenizer]])
-      * reconstructs the pre-token concatenation, matching
-      * [[bpeDecodeExpr]]'s expr path. An id the vocab never assigned
-      * fails loudly — silent nulls would corrupt reconstructed text. */
+      * a byte-level tokenizer reconstructs the text EXACTLY; a native
+      * pre-token tokenizer ([[TrainedBpeTokenizer]]) reconstructs the
+      * pre-token concatenation, matching [[bpeDecodeExpr]]'s expr path.
+      * An id the vocab never assigned fails loudly — silent nulls would
+      * corrupt reconstructed text. */
     def decode(ids: Seq[Int]): String
   }
 
@@ -106,7 +105,7 @@ object Tokenize {
           s"withTokenIds needs a TokenEncoder (ids require a vocab); " +
             s"${other.getClass.getName} only counts — use " +
             "withTokenCount, or a tokenizer with an id table " +
-            "(TrainedBpeTokenizer, Gpt2BpeTokenizer)")
+            "(TrainedBpeTokenizer)")
       }
       it.map { r =>
         val ids =
@@ -141,8 +140,7 @@ object Tokenize {
         case other => throw new IllegalArgumentException(
           s"withDecodedText needs a TokenEncoder (decode requires a " +
             s"vocab); ${other.getClass.getName} only counts — use a " +
-            "tokenizer with an id table (TrainedBpeTokenizer, " +
-            "Gpt2BpeTokenizer)")
+            "tokenizer with an id table (TrainedBpeTokenizer)")
       }
       it.map { r =>
         val text =
@@ -287,195 +285,6 @@ object Tokenize {
       }
     }
     merges.toSeq
-  }
-
-  // ---------------------------------------------------------------- //
-  // GPT-2-format loader (the published vocab.json + merges.txt pair)
-  // ---------------------------------------------------------------- //
-
-  /** Load a tokenizer from the PUBLISHED GPT-2 BPE file format (Radford
-    * et al. 2019; the `vocab.json` token→id map plus `merges.txt` rank-
-    * ordered pair list every byte-level-BPE release ships): the
-    * production half of the [[BatchTokenizer]] seam — token BUDGETS
-    * contracted in a real model's tokens run on the model's own merge
-    * table, not a heuristic. Files are read driver-side (they are
-    * vocabulary-sized, a few MB); the parsed tables ride the task
-    * closure and the rank index is built once per partition in
-    * `init()`.
-    *
-    * Byte-level semantics, implemented from the published algorithm:
-    * text splits on the GPT-2 pre-tokenizer regex (contractions /
-    * letter runs / digit runs / punctuation runs, each optionally
-    * space-prefixed), each pre-token's UTF-8 bytes map through the
-    * bytes→unicode table (printable bytes to themselves, the rest to
-    * U+0100.., so merges operate on visible characters), then adjacent
-    * pairs merge best-rank-first. Every merge output must be in the
-    * vocab — validated at load, so a mismatched file pair fails fast
-    * here instead of as wrong counts downstream. */
-  def loadGpt2(mergesPath: String, vocabPath: String): Gpt2BpeTokenizer = {
-    val mergeLines = graft.core.Fs.readString(mergesPath)
-      .split("\n").iterator.map(_.trim)
-      .filter(l => l.nonEmpty && !l.startsWith("#version"))
-      .toSeq
-    val merges = mergeLines.map { l =>
-      val parts = l.split(" ")
-      require(parts.length == 2,
-        s"malformed merges.txt line (expected 'left right'): '$l'")
-      (parts(0), parts(1))
-    }
-    val vocabJson = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(graft.core.Fs.readString(vocabPath))
-    require(vocabJson.isObject,
-      s"$vocabPath is not a JSON object (token -> id)")
-    val vocab = {
-      val b = Map.newBuilder[String, Int]
-      vocabJson.properties().forEach(e => b += e.getKey -> e.getValue.asInt())
-      b.result()
-    }
-    merges.foreach { case (l, r) =>
-      require(vocab.contains(l + r),
-        s"merge output '${l + r}' missing from $vocabPath — the files " +
-          "are not a matching vocab/merges pair")
-    }
-    // ids must be injective or DECODE is ambiguous: the inverse map
-    // (Gpt2Counter.decode) would keep an arbitrary winner and
-    // mis-reconstruct text silently — the one failure mode the decode
-    // contract forbids. (JSON keys are unique,
-    // so token-side duplicates cannot occur; id-side ones can.)
-    val ids = vocab.values.toSeq
-    require(ids.distinct.length == ids.length, {
-      val dup = ids.groupBy(identity).filter(_._2.length > 1).keys
-      s"duplicate ids in $vocabPath (${dup.take(5).mkString(", ")}) — " +
-        "an id mapped to two tokens cannot decode"
-    })
-    Gpt2BpeTokenizer(merges, vocab)
-  }
-
-  /** The GPT-2 byte-to-unicode table (public algorithm): printable
-    * latin-1 bytes map to themselves; the remaining 68 bytes map to
-    * U+0100.. in order, so every byte has a VISIBLE stand-in and merge
-    * files stay plain text (space becomes U+0120 'Ġ', the famous
-    * leading-space marker). */
-  private[ops] lazy val byteToUnicode: Array[Char] = {
-    val printable = (('!' to '~') ++ ('¡' to '¬') ++ ('®' to 'ÿ'))
-      .map(_.toInt).toSet
-    val out = new Array[Char](256)
-    var next = 0
-    for (b <- 0 until 256) {
-      if (printable(b)) out(b) = b.toChar
-      else { out(b) = (256 + next).toChar; next += 1 }
-    }
-    out
-  }
-
-  /** Inverse of [[byteToUnicode]] — total on exactly the 256 mapped
-    * characters, so any character outside the table in a byte-level
-    * file is a corruption and fails loudly. */
-  private[ops] lazy val unicodeToByte: Map[Char, Int] =
-    (0 until 256).map(b => byteToUnicode(b) -> b).toMap
-
-  /** A byte-level symbol string (each UTF-8 byte through
-    * [[byteToUnicode]], the representation GPT-2-format files store)
-    * back to raw text; a character outside the byte table means the
-    * file was not written byte-level — loud, not mangled. */
-  private[ops] def fromByteLevel(s: String): String = {
-    val bytes = new Array[Byte](s.length)
-    var i = 0
-    while (i < s.length) {
-      bytes(i) = unicodeToByte.getOrElse(s.charAt(i),
-        throw new IllegalArgumentException(
-          s"character U+${s.charAt(i).toInt.toHexString} is not in the " +
-            "GPT-2 byte table — the file is not byte-level encoded")).toByte
-      i += 1
-    }
-    new String(bytes, "UTF-8")
-  }
-
-  /** The published GPT-2 pre-tokenizer pattern (contractions, space-
-    * prefixed letter/digit/punct runs, trailing/other whitespace). */
-  private[ops] val gpt2Pattern: String =
-    "'s|'t|'re|'ve|'m|'ll|'d| ?\\p{L}+| ?\\p{N}+| ?[^\\s\\p{L}\\p{N}]+" +
-      "|\\s+(?!\\S)|\\s+"
-
-  /** Byte-level BPE tokenizer over a loaded GPT-2 merge table + vocab
-    * ([[loadGpt2]]). `init()` builds the rank index once per partition
-    * (the seam's model-load slot); `count` is the seam's contract and
-    * [[Gpt2Counter.encode]] exposes the ids for tests and ad-hoc use. */
-  final case class Gpt2BpeTokenizer(merges: Seq[(String, String)],
-                                    vocab: Map[String, Int])
-      extends BatchTokenizer {
-    def init(): Gpt2Counter = new Gpt2Counter(merges, vocab)
-  }
-
-  final class Gpt2Counter(merges: Seq[(String, String)],
-                          vocab: Map[String, Int]) extends TokenEncoder {
-    private val rank: Map[(String, String), Int] = merges.zipWithIndex.toMap
-    private val pre = java.util.regex.Pattern.compile(gpt2Pattern)
-
-    def count(text: String): Long = tokens(text).length.toLong
-
-    /** Token ids in order; an unmergeable symbol absent from the vocab
-      * fails fast (a malformed pair of files, not valid input). */
-    def encode(text: String): Seq[Int] = tokens(text).map { t =>
-      vocab.getOrElse(t,
-        throw new IllegalArgumentException(
-          s"token '$t' not in vocab — vocab.json and merges.txt do not " +
-            "form a matching pair for this input"))
-    }
-
-    // loadGpt2 validates injectivity, so the inverse is total on ids
-    private lazy val inv: Map[Int, String] = vocab.map(_.swap)
-
-    /** Exact inverse of [[encode]]: token strings back through the
-      * byte table — whitespace and multi-byte characters reconstruct
-      * bit-for-bit because byte-level pre-tokenization never drops a
-      * byte. */
-    def decode(ids: Seq[Int]): String = {
-      val sb = new java.lang.StringBuilder()
-      ids.foreach { i =>
-        sb.append(inv.getOrElse(i, throw new IllegalArgumentException(
-          s"id $i not in vocab — the id stream and vocab.json are " +
-            "from different tokenizers")))
-      }
-      fromByteLevel(sb.toString)
-    }
-
-    private def tokens(text: String): Seq[String] = {
-      val m = pre.matcher(text)
-      val out = scala.collection.mutable.ArrayBuffer.empty[String]
-      while (m.find()) out ++= bpe(mapBytes(m.group()))
-      out.toSeq
-    }
-
-    private def mapBytes(s: String): String = {
-      val bytes = s.getBytes("UTF-8")
-      val sb = new java.lang.StringBuilder(bytes.length)
-      bytes.foreach(b => sb.append(byteToUnicode(b & 0xFF)))
-      sb.toString
-    }
-
-    private def bpe(word: String): Seq[String] = {
-      val syms = scala.collection.mutable.ArrayBuffer.from(
-        word.map(_.toString))
-      var done = syms.length < 2
-      while (!done) {
-        var best = -1
-        var bestRank = Int.MaxValue
-        var i = 0
-        while (i < syms.length - 1) {
-          val r = rank.getOrElse((syms(i), syms(i + 1)), Int.MaxValue)
-          if (r < bestRank) { bestRank = r; best = i }
-          i += 1
-        }
-        if (best < 0) done = true
-        else {
-          syms(best) = syms(best) + syms(best + 1)
-          syms.remove(best + 1)
-          if (syms.length < 2) done = true
-        }
-      }
-      syms.toSeq
-    }
   }
 
   // ---------------------------------------------------------------- //
@@ -939,8 +748,8 @@ object Tokenize {
   }
 
   /** Token → id assignment for a NATIVELY trained merge table — the id
-    * surface the GPT-2 loader path already has ([[Gpt2Counter.encode]]),
-    * derived instead of loaded: ids `0 .. A-1` for the base alphabet
+    * surface a published vocab.json gives, derived instead of loaded:
+    * ids `0 .. A-1` for the base alphabet
     * (the histogram pre-tokens' distinct single symbols, sorted by
     * UTF-8 bytes — the binary collation DuckDB and Spark string sorts
     * share, so the assignment is oracle-replayable rank arithmetic),

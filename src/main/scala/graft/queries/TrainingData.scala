@@ -56,13 +56,6 @@ object TrainingData {
   private val softmaxModels = scala.collection.concurrent.TrieMap
     .empty[String, graft.ops.Classifier.SoftmaxModel]
 
-  /** The distilled-and-polished hashed-bin sparse domain router shared
-    * by the batch and streaming sparse-router queries, memoized per sf
-    * dir: dense Newton router (itself memoized with the dense query)
-    * distilled into the hashed bins — each vocab word's class weight
-    * lands at its xxhash bin, exact since the hashed logit is the same
-    * linear form — then polished by warm-started sparse GD. `feats`
-    * must carry `f` (vocab counts), `idx` (hashed indices), `label`. */
   /** The distillation half alone: dense Newton router transported into
     * the hashed bins (exact — the hashed logit is the same linear
     * form), NOT yet polished. The online-router query seeds its
@@ -98,6 +91,13 @@ object TrainingData {
     Classifier.SoftmaxModel(wInit, 3)
   }
 
+  /** The distilled-and-polished hashed-bin sparse domain router shared
+    * by the batch and streaming sparse-router queries, memoized per sf
+    * dir: dense Newton router (itself memoized with the dense query)
+    * distilled into the hashed bins — each vocab word's class weight
+    * lands at its xxhash bin, exact since the hashed logit is the same
+    * linear form — then polished by warm-started sparse GD. `feats`
+    * must carry `f` (vocab counts), `idx` (hashed indices), `label`. */
   private def sparseDomainModel(s: SparkSession, dir: String,
                                 feats: DataFrame, words: Seq[String],
                                 dim: Int)
@@ -3112,8 +3112,8 @@ object TrainingData {
     * `dot - ||c||^2/2`, ties to HIGHER cid; per-dimension means 1e-6
     * floored, no normalization — codewords keep magnitudes), then the
     * full-corpus encode `p{s}b(vec_id, c{s})` and the per-query LUT
-    * `l{s}(query_id, cid, d)` — mirroring
-    * Similarity.kmeansCentroidsL2Multi / pqTopK exactly. */
+    * `l{s}(query_id, cid, d)` — mirroring Similarity's PQ training
+    * (`pqBooks`, the L2 form of `lloyd`) and `pqTopK` exactly. */
   private def pqSubspaceCtes(s: Int, cw: Int): String = {
     val lo = s * 16
     def scoreExpr(tbl: String): String =
