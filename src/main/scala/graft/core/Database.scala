@@ -13,12 +13,20 @@ import org.apache.spark.sql.types._
   *   - appends write only the new run's partition; old data is never
   *     touched except on pset-schema growth, where the hash column must be
   *     recomputed (ref psweep.py:690-710) — a single distributed rewrite;
+  *   - a [[Study]] run writes
+  *     `max(1, min(nParts, ceil(cachedBytes / maxPartitionBytes)))`
+  *     files: its cached result size over
+  *     `spark.sql.files.maxPartitionBytes`, within one and its `nParts`
+  *     execution partitions, so a small run is one file and a large one
+  *     still writes in parallel;
   *   - [[read]] merges the schema through [[Fs.parquet]]'s footer cache:
   *     a read of an unchanged db starts no Spark job, and the first read
   *     after an append reads only the new files' footers, on the driver;
   *   - a [[Study]] round learns its counters, its skip-dups hits and its
-  *     `_pset_id` collisions from ONE column-pruned aggregate over the
-  *     base, with or without a skip manifest;
+  *     `_pset_id` collisions from ONE column-pruned `mapPartitions` job
+  *     over the base, with or without a skip manifest: the probe sets
+  *     ride its closure, and the driver merges the per-partition
+  *     partials;
   *   - the opt-in skip manifest prunes reads only: [[lookupAll]],
   *     [[asOf]] and [[changes]] read the files its per-file ranges keep
   *     ([[pruned]]), and [[asOfTime]] resolves commit times from it.

@@ -53,9 +53,10 @@ private[core] final case class TaskCtx(
   *     (ref psweep.py:1380-1392 — types must equal what the database holds
   *     or hashes diverge);
   *   - dedup/incremental-resume, the counters and the `_pset_id`
-  *     collision check share one column-pruned aggregate over the
-  *     database (the incoming hashes and candidate ids ride it as `isin`
-  *     probes);
+  *     collision check share one column-pruned `mapPartitions` job over
+  *     the database (the incoming hashes and candidate ids ride its
+  *     closure as probe sets; the driver merges the per-partition
+  *     partials);
   *   - execution is one `mapPartitions` pass over the rows — Spark's
   *     executor pool replaces both `multiprocessing.Pool` and the dask
   *     cluster (ref psweep.py:1465-1476);
@@ -65,7 +66,12 @@ private[core] final case class TaskCtx(
   *     (possibly expensive) function;
   *   - `_pset_seq` is assigned *before* execution, so input order survives
   *     any partition-level reordering (ref psweep.py:1448,
-  *     tests/test_all.py:185-188).
+  *     tests/test_all.py:185-188);
+  *   - a run of `nParts` execution partitions writes
+  *     `max(1, min(nParts, ceil(cachedBytes / maxPartitionBytes)))`
+  *     files, its cached result size over
+  *     `spark.sql.files.maxPartitionBytes`: one file while it is small,
+  *     so every later scan opens one file per small run.
   */
 final class Study(val spark: SparkSession, val cfg: StudyConfig) {
 
@@ -239,8 +245,9 @@ final class Study(val spark: SparkSession, val cfg: StudyConfig) {
           m.map { case (k, v) => k -> ValueSchema.inferType(v) }),
         Study.mergeKeyTypes)
       val schema = Study.orderedSchema(paramSchema, keyTypes)
-      val rowRdd = rdd.map(m => Row.fromSeq(schema.fields.toSeq.map(f =>
-        m.get(f.name).map(ValueSchema.normalize(_, f.dataType)).orNull)))
+      val rowRdd = rdd.coalesce(Study.runFiles(spark, rdd.id, nParts)).map(m =>
+        Row.fromSeq(schema.fields.toSeq.map(f =>
+          m.get(f.name).map(ValueSchema.normalize(_, f.dataType)).orNull)))
       val newDF = spark.createDataFrame(rowRdd, schema)
 
       // 3.1-11/12: persist. Disk-backed: append only the new run's
@@ -291,24 +298,54 @@ object Study {
                                           dupHashes: Set[String],
                                           idHits: Set[String])
 
-  /** [[PreWrite]] of `base` in ONE column-pruned aggregate: the two
-    * counter maxima plus the set of `hashes` and of `ids` found in the
-    * base's `_pset_hash`/`_pset_id` columns (empty probe lists, or a
-    * base lacking the column, find nothing). */
+  /** [[PreWrite]] of `base` in ONE `mapPartitions` job over its
+    * column-pruned `_pset_seq`, `_run_seq`, `_pset_hash` and `_pset_id`:
+    * each partition folds the two counter maxima and the `hashes` and
+    * `ids` it holds (the probe sets ride the closure, never the plan),
+    * and the driver merges the partials. Empty probe lists, or a base
+    * lacking the column, find nothing. */
   private[core] def preWriteScan(base: DataFrame, hashes: Seq[String],
                                  ids: Seq[String]): PreWrite = {
-    import org.apache.spark.sql.functions.{col, collect_set, lit, max, when}
-    def found(c: String, probes: Seq[String]) =
+    import org.apache.spark.sql.functions.{col, lit}
+    def probed(c: String, probes: Seq[String]) =
       if (probes.isEmpty || !base.columns.contains(c))
-        lit(null).cast(ArrayType(StringType))
-      else collect_set(when(col(c).isin(probes: _*), col(c)))
-    val r = base.agg(max(col("_pset_seq")).cast(LongType),
-      max(col("_run_seq")).cast(LongType),
-      found("_pset_hash", hashes), found("_pset_id", ids)).head()
-    def set(i: Int): Set[String] =
-      if (r.isNullAt(i)) Set.empty else r.getSeq[String](i).toSet
-    PreWrite(if (r.isNullAt(0)) -1L else r.getLong(0),
-      if (r.isNullAt(1)) -1L else r.getLong(1), set(2), set(3))
+        lit(null).cast(StringType)
+      else col(c)
+    val (hashSet, idSet) = (hashes.toSet, ids.toSet)
+    val parts = base.select(col("_pset_seq").cast(LongType),
+        col("_run_seq").cast(LongType), probed("_pset_hash", hashes),
+        probed("_pset_id", ids))
+      .rdd.mapPartitions { rows =>
+        def top(m: Option[Long], r: Row, i: Int) =
+          if (r.isNullAt(i)) m
+          else Some(m.fold(r.getLong(i))(math.max(_, r.getLong(i))))
+        def hit(probes: Set[String], r: Row, i: Int) =
+          !r.isNullAt(i) && probes.contains(r.getString(i))
+        var psetSeq, runSeq = Option.empty[Long]
+        val hs, is = Set.newBuilder[String]
+        rows.foreach { r =>
+          psetSeq = top(psetSeq, r, 0)
+          runSeq = top(runSeq, r, 1)
+          if (hit(hashSet, r, 2)) hs += r.getString(2)
+          if (hit(idSet, r, 3)) is += r.getString(3)
+        }
+        Iterator((psetSeq, runSeq, hs.result(), is.result()))
+      }.collect()
+    def counter(ms: Iterable[Option[Long]]) =
+      ms.flatten.maxOption.getOrElse(-1L)
+    PreWrite(counter(parts.map(_._1)), counter(parts.map(_._2)),
+      parts.iterator.flatMap(_._3).toSet, parts.iterator.flatMap(_._4).toSet)
+  }
+
+  /** Data files a run of `nParts` execution partitions writes: the
+    * bytes the block manager holds for its cached result RDD `rddId`
+    * over `spark.sql.files.maxPartitionBytes`, rounded up, within
+    * `[1, nParts]`. */
+  private def runFiles(spark: SparkSession, rddId: Int, nParts: Int): Int = {
+    val bytes = org.apache.spark.sql.graftshim.shim
+      .cachedBytes(spark.sparkContext, rddId)
+    val split = math.max(1L, spark.sessionState.conf.filesMaxPartitionBytes)
+    math.max(1, math.min(nParts.toLong, (bytes + split - 1) / split).toInt)
   }
 
   /** The fixed bookkeeping column set (SURVEY §1.4,

@@ -325,11 +325,18 @@ class DatabaseSpec extends AnyFunSuite {
 
   test("compact: fewer files, identical content, hashes intact") {
     val calc = tmpDir("graft-compact-")
-    val study = Study(spark, StudyConfig(calcDir = calc, poolsize = Some(4)))
-    (1 to 4).foreach(i =>
-      study.run(p => Map("r_" -> 1.0),
-        Grid.plist("a", (i * 10) until (i * 10 + 8))))
     val db = Database(spark, calc)
+    // four runs of 8 rows, each appended as several files (a run of
+    // Study writes one file while it is small)
+    (1 to 4).foreach { i =>
+      val run = spark.range(8).select((col("id") + i * 10).as("a"),
+        lit(s"run$i").as("_run_id"),
+        concat(lit(s"p$i-"), col("id")).as("_pset_id"),
+        lit(i.toLong).as("_run_seq"), (col("id") + i * 8).as("_pset_seq"),
+        lit(1.0).as("r_"))
+      db.append(run.withColumn("_pset_hash", PsetHash.expr(run.columns.toSeq))
+        .repartition(4))
+    }
     def parquetFiles(): Int = {
       def walk(f: java.io.File): Seq[java.io.File] =
         if (f.isDirectory) f.listFiles.toSeq.flatMap(walk) else Seq(f)
@@ -338,6 +345,7 @@ class DatabaseSpec extends AnyFunSuite {
     }
     val before = db.read().orderBy("_pset_seq").collect()
     val filesBefore = parquetFiles()
+    assert(filesBefore > 4, s"$filesBefore files")
     db.compact()
     val after = db.read().orderBy("_pset_seq").collect()
     assert(parquetFiles() < filesBefore)

@@ -234,8 +234,20 @@ class StudySpec extends AnyFunSuite {
     seen.toArray(Array.empty[String]).toSeq
   }
 
+  /** Whether any of `plans` renders a probe of the round that made `out`:
+    * the incoming hashes of `as` or the round's drawn `_pset_id`s. */
+  private def carriesProbes(plans: Seq[String], out: RunOutput,
+                            as: Seq[Long]): Boolean = {
+    val probes = out.db.filter(col("a").isin(as: _*))
+      .select("_pset_hash").collect().map(_.getString(0)) ++
+      out.db.filter(col("_run_id") === out.runId)
+        .select("_pset_id").collect().map(_.getString(0))
+    assert(probes.length == as.size + out.executed)
+    plans.exists(q => probes.exists(q.contains))
+  }
+
   test("pre-write scan: one skipDups run on a db without a manifest " +
-    "starts 4 Spark jobs; counters, dedup and executed hold") {
+    "starts 3 Spark jobs; counters, dedup and executed hold") {
     val calc = tmpDir("graft-prewrite-")
     val study = Study(spark, StudyConfig(calcDir = calc, skipDups = true))
     study.run(f1, Grid.plist("a", Seq(1, 2, 3, 4)))
@@ -245,12 +257,13 @@ class StudySpec extends AnyFunSuite {
     val (queries, jobs) = Jobs.count(spark.sparkContext)(plans {
       out = study.run(f1, Grid.plist("a", Seq(3, 4, 5, 6)))
     })
-    // the pre-write aggregate (its map stage and its result: two jobs
-    // under AQE), the result-schema aggregate and the append; the
-    // returned read merges footers on the driver, from the cache plus
-    // the new files. Three base scans and a footer-merge job made it 11
-    assert(jobs == 4, s"$jobs jobs")
-    assert(queries.count(_.contains("collect_set")) == 1)
+    // the pre-write scan's one mapPartitions job, the result-schema
+    // aggregate and the append; the returned read merges footers on the
+    // driver, from the cache plus the new files. Three base scans and a
+    // footer-merge job made it 11, the pre-write scan as an `isin`
+    // aggregate (a map stage and its result under AQE) 4
+    assert(jobs == 3, s"$jobs jobs")
+    assert(!carriesProbes(queries, out, Seq(3L, 4L, 5L, 6L)))
     assert(out.executed == 2)
     assert(out.db.count() == 6)
     assert(seqs(out.db, Seq(5L, 6L)) == Seq((4L, 1L), (5L, 1L)))
@@ -320,12 +333,12 @@ class StudySpec extends AnyFunSuite {
     val (queries, jobs) = Jobs.count(spark.sparkContext)(plans {
       m = manifested.run(f1, next)
     })
-    // the plain round's 4, plus the manifest upkeep on append: its
+    // the plain round's 3, plus the manifest upkeep on append: its
     // known-file collect and the stats write (map stage and result).
     // The manifest read and the new files' schema take footers on the
     // driver; as jobs they made it 10
-    assert(jobs == 7, s"$jobs jobs")
-    assert(queries.count(_.contains("collect_set")) == 1)
+    assert(jobs == 6, s"$jobs jobs")
+    assert(!carriesProbes(queries, m, Seq(3L, 4L, 5L, 6L)))
     assert(!queries.exists(_.contains("pset_seq_max")))
     assert(m.executed == 2 && p.executed == 2)
     assert(seqs(m.db, Seq(3L, 4L, 5L, 6L)) == seqs(p.db, Seq(3L, 4L, 5L, 6L)))
@@ -359,6 +372,93 @@ class StudySpec extends AnyFunSuite {
     // the append's manifest upkeep folded the foreign file in
     assert(db.manifestFresh)
     assert(db.lookup("foreign-9").inputFiles.length == 1)
+  }
+
+  /** The pre-write scan as the one SQL aggregate it used to be, the
+    * probes riding the plan as `isin` literals: the reference the
+    * `mapPartitions` job must agree with. */
+  private def aggregatePreWrite(base: org.apache.spark.sql.DataFrame,
+                                hashes: Seq[String],
+                                ids: Seq[String]): Study.PreWrite = {
+    import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
+    def found(c: String, probes: Seq[String]) =
+      if (probes.isEmpty || !base.columns.contains(c))
+        lit(null).cast(ArrayType(StringType))
+      else collect_set(when(col(c).isin(probes: _*), col(c)))
+    val r = base.agg(max(col("_pset_seq")).cast(LongType),
+      max(col("_run_seq")).cast(LongType),
+      found("_pset_hash", hashes), found("_pset_id", ids)).head()
+    def set(i: Int): Set[String] =
+      if (r.isNullAt(i)) Set.empty else r.getSeq[String](i).toSet
+    Study.PreWrite(if (r.isNullAt(0)) -1L else r.getLong(0),
+      if (r.isNullAt(1)) -1L else r.getLong(1), set(2), set(3))
+  }
+
+  test("pre-write scan: the mapPartitions job equals the isin aggregate " +
+    "on empty, all-null, hash-less and int-typed bases") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    def frame(types: Seq[DataType], rows: Seq[Seq[Any]]) = {
+      val names = Seq("_pset_seq", "_run_seq", "_pset_hash", "_pset_id")
+      spark.createDataFrame(
+        spark.sparkContext.parallelize(rows.map(Row.fromSeq), 3),
+        StructType(names.zip(types).map { case (n, t) => StructField(n, t) }))
+    }
+    val longs = Seq(LongType, LongType, StringType, StringType)
+    val rows = Seq(Seq(0L, 0L, "h0", "i0"), Seq(1L, 0L, "h1", "i1"),
+      Seq(5L, 2L, "h5", null), Seq(null, null, null, "i9"))
+    val bases = Seq(
+      "populated" -> frame(longs, rows),
+      "empty" -> frame(longs, Seq.empty),
+      "all-null seqs" -> frame(longs,
+        Seq(Seq(null, null, "h0", "i0"), Seq(null, null, "h1", null))),
+      "no hash or id column" -> frame(longs.take(2), rows.map(_.take(2))),
+      "int seqs" -> frame(Seq(IntegerType, IntegerType, StringType,
+        StringType), rows.map(r => r.take(2).map {
+          case v: Long => v.toInt
+          case v => v
+        } ++ r.drop(2))))
+    val probes = Seq(
+      (Seq("h0", "h5", "hx"), Seq("i0", "i9", "ix")),
+      (Seq.empty[String], Seq("i1")),
+      (Seq("h1"), Seq.empty[String]),
+      (Seq.empty[String], Seq.empty[String]))
+    for ((name, base) <- bases; (hs, ids) <- probes)
+      assert(Study.preWriteScan(base, hs, ids) ==
+        aggregatePreWrite(base, hs, ids), s"$name base, probes $hs $ids")
+    assert(Study.preWriteScan(bases.head._2, probes.head._1,
+      probes.head._2) ==
+      Study.PreWrite(5L, 2L, Set("h0", "h5"), Set("i0", "i9")))
+  }
+
+  /** Data files the run `runId` wrote into the database of `study`. */
+  private def runFiles(study: Study, runId: String): Int =
+    new java.io.File(s"${study.database.dbPath}/_run_id=$runId").listFiles
+      .count(_.getName.endsWith(".parquet"))
+
+  test("run files: a small run writes one data file") {
+    val study = Study(spark,
+      StudyConfig(calcDir = tmpDir("graft-runfiles-"), poolsize = Some(4)))
+    val out = study.run(f1, Grid.plist("a", 1 to 8))
+    assert(runFiles(study, out.runId) == 1)
+    assert(out.db.count() == 8)
+  }
+
+  test("run files: a run larger than the scan split size fans out to its " +
+    "execution partitions") {
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prev = spark.conf.getAll.get(key)
+    val study = Study(spark,
+      StudyConfig(calcDir = tmpDir("graft-runfiles-split-"), poolsize = Some(4)))
+    val out =
+      try {
+        spark.conf.set(key, "1k")
+        study.run(f1, Grid.plist("a", 1 to 8))
+      } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(spark.conf.getAll.get(key) == prev)
+    val n = runFiles(study, out.runId)
+    assert(2 <= n && n <= 4, s"$n files")
+    assert(out.db.count() == 8)
   }
 
   test("type conflict on shared column is rejected") {

@@ -15,10 +15,14 @@ each copy, parent first on even i and change first on odd i, so neither
 side always gets the warmer or the quieter slot. The host steal share that
 `run.py` logs on stderr is kept per run.
 
-It prints every pair, then per metric the medians with [Q1, Q3] of both
-sides, the number of pairs the change wins (by the metric's `better` in
-`BENCHMARK.json`) and whether the median gap exceeds the parent's
-inter-quartile range. It never writes into `perfbench/` or
+It prints every pair and each side's failed-op share (`failed` over
+`attempted`, summed over its runs). Then, per metric, it prints the
+medians with [Q1, Q3] of both sides, the number of pairs the change wins
+(by the metric's `better` in `BENCHMARK.json`) and whether the median
+gap exceeds the parent's inter-quartile range. For a metric with a
+`bound`, it also prints the change/parent median ratio and flags a
+BREACH when the change is worse by more than the bound (the
+no-regression rule). It never writes into `perfbench/` or
 `BENCHMARK.json` of this checkout.
 """
 
@@ -94,6 +98,15 @@ def report(workload, pairs, spec):
         fails = "/".join(str(r.get("failed")) for r in (a, b))
         print(f"pair {i + 1} seed {seed}: " + ", ".join(cells) +
               f"; steal {st}; failed {fails}")
+    for side, k in (("parent", 1), ("change", 2)):
+        runs = [p[k] for p in pairs]
+        done = [r for r in runs if r.get("attempted") is not None]
+        att = sum(r["attempted"] for r in done)
+        bad = sum(r["failed"] for r in done)
+        print(f"{side} failed ops: {bad}/{att} "
+              f"({bad / att if att else float('nan'):.1%})"
+              + (f"; {len(runs) - len(done)} run(s) gave no result"
+                 if len(done) < len(runs) else ""))
     ok = [(a, b) for _, a, b in pairs
           if a.get("failed") == 0 and b.get("failed") == 0]
     for m in spec:
@@ -106,12 +119,20 @@ def report(workload, pairs, spec):
         wins = sum((vb < va) if lower else (vb > va) for va, vb in zip(xa, xb))
         qa, qb = quartiles(xa), quartiles(xb)
         gap = qb[1] - qa[1]
+        bound = ""
+        if "bound" in m and qa[1]:
+            ratio = qb[1] / qa[1]
+            worse = ratio - 1 if lower else 1 - ratio
+            bound = (f"; change/parent median {ratio:.3f}, "
+                     f"{'BREACH' if worse > m['bound'] else 'within'} "
+                     f"bound {m['bound']:.0%}")
         print(f"{n}: parent {qa[1]:.4g} [{qa[0]:.4g}, {qa[2]:.4g}] -> "
               f"change {qb[1]:.4g} [{qb[0]:.4g}, {qb[2]:.4g}] "
-              f"({gap / qa[1]:+.1%} of the parent median); change better in "
+              f"({gap / qa[1] if qa[1] else float('nan'):+.1%} of the parent "
+              f"median); change better in "
               f"{wins}/{len(xa)}; |median gap| {abs(gap):.4g} "
               f"{'>' if abs(gap) > qa[2] - qa[0] else '<='} parent IQR "
-              f"{qa[2] - qa[0]:.4g}")
+              f"{qa[2] - qa[0]:.4g}{bound}")
 
 
 def main():
@@ -153,12 +174,12 @@ def main():
             print(f"[ab_bench] {w} pair {i + 1}/{args.pairs} seed {seed} done",
                   file=sys.stderr, flush=True)
         results[w] = pairs
+        if args.out:  # before the report, so a report fault loses no run
+            with open(args.out, "w") as f:
+                json.dump({w: [{"seed": s, "parent": a, "change": b}
+                               for s, a, b in ps]
+                           for w, ps in results.items()}, f, indent=1)
         report(w, pairs, spec)
-    if args.out:
-        with open(args.out, "w") as f:
-            json.dump({w: [{"seed": s, "parent": a, "change": b}
-                           for s, a, b in ps] for w, ps in results.items()},
-                      f, indent=1)
 
 
 if __name__ == "__main__":
